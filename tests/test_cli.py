@@ -6,8 +6,10 @@ This is the surface BASELINE.json's "submitted via spark-submit
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -47,3 +49,44 @@ def test_cli_synth_extract_resume_report(tmp_path):
     rep = _run("report", "--sink", sink, "--k", "5")
     assert 0 < len(rep) <= 5
     assert all("fail_rate" in row for row in rep)
+
+
+@pytest.mark.slow
+def test_spark_submit_py_files_zip_outside_repo(tmp_path):
+    """The documented deployment: the package shipped only as a
+    ``--py-files`` zip, submitted from outside the checkout with no
+    PYTHONPATH. Python workers (and the daemon they fork from) must
+    still import the engine."""
+    submit = shutil.which("spark-submit")
+    if submit is None:
+        pytest.skip("spark-submit not on PATH")
+    pkg_zip = str(tmp_path / "weakscraper_spark.zip")
+    with zipfile.ZipFile(pkg_zip, "w") as zf:
+        for root, dirs, files in os.walk(os.path.join(REPO,
+                                                      "weakscraper_spark")):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in files:
+                path = os.path.join(root, f)
+                zf.write(path, os.path.relpath(path, REPO))
+    script = str(tmp_path / "submit_main.py")
+    shutil.copy(os.path.join(REPO, "weakscraper_spark", "__main__.py"),
+                script)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_MASTER="local[2]", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+
+    def submit_run(*args: str) -> dict:
+        proc = subprocess.run(
+            [submit, "--py-files", pkg_zip, script, *args],
+            capture_output=True, text=True, cwd=str(tmp_path), env=env,
+            timeout=300)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return [json.loads(ln) for ln in proc.stdout.splitlines()
+                if ln.startswith("{")][-1]
+
+    pages = str(tmp_path / "pages")
+    assert submit_run("synth", "--out", pages, "--pages", "50")["pages"] == 50
+    stats = submit_run("extract", "--pages", pages,
+                       "--out", str(tmp_path / "sink"))
+    assert stats["ok_written"] > 0

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from weakscraper_spark.plans.pipeline import (
     build_extract_plan,
     dedup_latest,
+    host_report,
     host_stats_salted,
     partition_metrics,
     run_pipeline,
@@ -288,20 +289,45 @@ def test_partition_metrics_reconcile(spark, extracted):
     assert m.count() > 1
 
 
-def test_run_pipeline_with_heuristic_fallback(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def fallback_run(spark, corpus, tmp_path_factory):
+    pages, templates, specs = corpus
+    out = str(tmp_path_factory.mktemp("sink_fb"))
+    r = run_pipeline(spark, pages, templates, specs, out,
+                     run_id="fb0", fallback="heuristic")
+    return r, spark.read.parquet(r["pages_out"])
+
+
+def test_run_pipeline_with_heuristic_fallback(fallback_run):
     """End-to-end: the fallback rescues mismatch pages into the SINK
     (status ok_heuristic with recovered text), resume still works."""
-    pages, templates, specs = corpus
-    out = str(tmp_path / "sink_fb")
-    run_pipeline(spark, pages, templates, specs, out,
-                 run_id="fb0", fallback="heuristic")
-    sink = spark.read.parquet(f"{out}/pages_out")
+    _, sink = fallback_run
     rescued = sink.filter("status = 'ok_heuristic'")
     assert rescued.count() > 0
     assert rescued.filter("text IS NULL OR text = ''").count() == 0
     # template successes unaffected by the fallback path
     base_ok = sink.filter("status = 'ok'").count()
     assert base_ok > 0
+
+
+def test_heuristic_rescues_count_as_ok_in_every_metric(spark,
+                                                       fallback_run):
+    """One status taxonomy: a heuristic rescue is a success in the
+    run's ``ok_written``, in the per-partition ``n_ok``/``n_fail``
+    lineage and in the worst-host report, not only in the sink."""
+    r, sink = fallback_run
+    n = sink.count()
+    n_ok = sink.filter("status IN ('ok', 'ok_heuristic')").count()
+    assert sink.filter("status = 'ok_heuristic'").count() > 0
+    assert r["rows_written"] == n
+    assert r["ok_written"] == n_ok
+    m = (spark.read.parquet(r["metrics_out"])
+         .agg(F.sum("n_ok").alias("ok"), F.sum("n_fail").alias("f"))
+         .first())
+    assert (m["ok"], m["f"]) == (n_ok, n - n_ok)
+    hosts = host_report(sink, k=10_000).collect()
+    assert sum(h["n_pages"] for h in hosts) == n
+    assert sum(h["n_fail"] for h in hosts) == n - n_ok
 
 
 def test_corpus_pipeline_end_to_end(spark, tmp_path):

@@ -12,6 +12,9 @@ Subcommands:
     synth    — write a deterministic CC-style pages table
     extract  — run the full pipeline (resume-aware) into a sink dir
     report   — worst-host top-k + per-partition metrics from a sink
+
+Imports are absolute so the file also runs as a plain script (the
+spark-submit form above), not only as ``python -m weakscraper_spark``.
 """
 
 from __future__ import annotations
@@ -47,18 +50,19 @@ def main() -> None:
 
     args = ap.parse_args()
 
-    from .plans.session import get_spark
+    from weakscraper_spark.plans.session import get_spark
     spark = get_spark(f"ws_{args.cmd}")
 
     if args.cmd == "synth":
-        from .sources.synth import synth_pages
+        from weakscraper_spark.sources.synth import synth_pages
         synth_pages(spark, args.pages, junk_words=args.junk_words) \
             .write.mode("overwrite").parquet(args.out)
         print(json.dumps({"written": args.out, "pages": args.pages}))
 
     elif args.cmd == "extract":
-        from .plans.pipeline import run_pipeline
-        from .sources.synth import compiled_specs, synth_templates
+        from weakscraper_spark.plans.pipeline import run_pipeline
+        from weakscraper_spark.sources.synth import (compiled_specs,
+                                                     synth_templates)
         pages = spark.read.parquet(args.pages)
         langs = [s for s in args.langs.split(",") if s] or None
         stats = run_pipeline(
@@ -68,7 +72,7 @@ def main() -> None:
         print(json.dumps(stats))
 
     elif args.cmd == "report":
-        from .plans.pipeline import host_report
+        from weakscraper_spark.plans.pipeline import host_report
         out = spark.read.parquet(f"{args.sink}/pages_out")
         for row in host_report(out, args.k).collect():
             print(json.dumps(row.asDict()))

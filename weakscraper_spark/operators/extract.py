@@ -7,11 +7,11 @@ Execution model (SURVEY §4.2 flagship trace):
   in, Arrow record batches out. No per-row ``F.udf`` anywhere
   (BASELINE.json:15 mandate).
 - Specs travel as JSON strings inside a ``sc.broadcast`` and are
-  deserialized ONCE PER PYTHON WORKER via a module-level cache keyed
-  by content hash. The cache amortizes when workers are reused
-  (cluster mode, and the bench job, set
-  ``spark.python.worker.reuse=true``); under session.py's local-mode
-  default (reuse off) it still dedups within a worker's task.
+  deserialized via a module-level cache keyed by content hash. The
+  session runs one fresh worker per task (``spark.python.worker.reuse``
+  off), so the cache dedups within a task's batches; the imports this
+  module needs are paid once, in the preloading worker daemon
+  (``weakscraper_spark._worker_daemon``) the workers fork from.
 - One bad document can never fail a batch: ``enginelib.match.extract``
   maps every CompareError/RecursionError to a status row (A13).
 - C13 lineage: each output row carries its ``partition_id`` (from
@@ -32,17 +32,25 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..enginelib.boiler import main_text as _main_text
 from ..enginelib.match import extract as _extract_doc
 from ..enginelib.spec import Spec, spec_from_json
 
 #: statuses that count as an extraction SUCCESS — the one place the
-#: taxonomy's ok-side is defined (refresh loop, streaming monitor,
-#: and any future consumer import this rather than restating the
-#: literals; a new success status added here propagates everywhere)
+#: taxonomy's ok-side is defined (Spark consumers use ``status_ok()``
+#: rather than restating the literals; a new success status added
+#: here propagates everywhere)
 OK_STATUSES = ("ok", "ok_heuristic")
+
+
+def status_ok() -> Column:
+    """Boolean column: the row's ``status`` is in the ok class. Every
+    success/failure count uses this expression, so a heuristic rescue
+    counts as a success wherever a template match does."""
+    return F.col("status").isin(*OK_STATUSES)
+
 
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, template_id string, status string, "
@@ -54,7 +62,7 @@ EXTRACT_SCHEMA = (
 # (north rule: "extracted text/spans per url")
 EXTRACT_SPANS_SCHEMA = EXTRACT_SCHEMA + ", spans_json string"
 
-# Per-worker compiled-spec cache (worker reuse makes this amortize).
+# Per-worker compiled-spec cache (dedups specs across a task's batches).
 _SPEC_CACHE: dict[str, Spec] = {}
 
 

@@ -23,11 +23,10 @@ Measurement design (each choice measured on this sandbox, r02):
   here), identical at both parallelism levels, so leaving them in the
   timed wall understates the *scaling* of the actual work — on a real
   cluster a 10^12-row job pays them once against hours of runtime.
-- **worker_reuse=True** for this job: at local[2]/local[8] each task
-  otherwise forks + re-imports pandas in a fresh worker (~0.5 s
-  × n_tasks); with reuse the N workers persist across the ~16 tasks
-  per core. (The local[16]+ handoff serialization that made reuse
-  default-off in session.py does not bite at ≤8 — measured.)
+- Fresh worker per task, as in every session: the session's
+  preloading daemon (``weakscraper_spark._worker_daemon``) forks each
+  one with pandas, pyarrow and the engine already imported, so a
+  task no longer re-imports them (~0.5 s × n_tasks).
 - **arrow_batch_rows=2048** (vs session default 512): the bench pages
   are ~6 KB, so 2048-row batches are ~12 MB — bigger batches quarter
   the per-batch pandas/Arrow overhead in the worker loop (measured:
@@ -73,7 +72,7 @@ def main(master: str, pages_path: str) -> None:
     from ..sources.synth import compiled_specs, synth_templates
 
     spark = get_spark(f"bench_{master}", master=master,
-                      worker_reuse=True, arrow_batch_rows=2048)
+                      arrow_batch_rows=2048)
     templates = synth_templates(spark)
     specs = compiled_specs()
 

@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.corpus import clean_corpus
+from ..operators.extract import status_ok
 from .pipeline import build_extract_plan
-
-OK_STATUSES = ("ok", "ok_heuristic")
 
 
 def build_corpus_plan(pages: DataFrame, templates: DataFrame,
@@ -44,7 +43,7 @@ def build_corpus_plan(pages: DataFrame, templates: DataFrame,
     extracted = build_extract_plan(pages, templates, specs,
                                    langs=langs, fallback=fallback)
     docs = (extracted
-            .filter(F.col("status").isin(*OK_STATUSES))
+            .filter(status_ok())
             .select("url", "text", "status"))
     verdict = clean_corpus(docs, id_col="url", col="text",
                            min_quality=min_quality,

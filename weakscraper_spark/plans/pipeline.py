@@ -42,7 +42,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
+from ..operators.extract import extract_pages, status_ok
 from ..sources.synth import compiled_specs, synth_pages, synth_templates
 
 
@@ -161,7 +161,7 @@ def host_report(out: DataFrame, k: int = 10) -> DataFrame:
         out.withColumn("host", F.try_parse_url("url", F.lit("HOST")))
         .groupBy("host")
         .agg(F.count("*").alias("n_pages"),
-             F.sum(F.when(F.col("status") == "ok", 0).otherwise(1))
+             F.sum(F.when(status_ok(), 0).otherwise(1))
              .alias("n_fail"))
         .withColumn("fail_rate", F.col("n_fail") / F.col("n_pages"))
     )
@@ -178,9 +178,9 @@ def partition_metrics(out: DataFrame, run_id: str) -> DataFrame:
     return (
         out.groupBy("partition_id")
         .agg(F.count("*").alias("n_pages"),
-             F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
+             F.sum(F.when(status_ok(), 1).otherwise(0))
              .alias("n_ok"),
-             F.sum(F.when(F.col("status") != "ok", 1).otherwise(0))
+             F.sum(F.when(status_ok(), 0).otherwise(1))
              .alias("n_fail"),
              F.sum("n_nodes").alias("n_nodes"),
              F.sum("n_bytes").alias("bytes_in"),
@@ -275,7 +275,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     obs = Observation()
     plan = plan.observe(
         obs, F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"))
+        F.sum(F.when(status_ok(), 1).otherwise(0)).alias("ok"))
 
     t0 = time.perf_counter()
     plan.write.mode("overwrite").parquet(inc_path)
@@ -338,7 +338,7 @@ def run_pipeline_snap(spark: SparkSession, pages: DataFrame,
     obs = Observation()
     plan = plan.observe(
         obs, F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"))
+        F.sum(F.when(status_ok(), 1).otherwise(0)).alias("ok"))
 
     t0 = time.perf_counter()
     version = t.commit_append(plan)

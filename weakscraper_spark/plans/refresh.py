@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.drift import drift_points
-from ..operators.extract import OK_STATUSES, extract_pages
+from ..operators.extract import extract_pages, status_ok
 from ..operators.induction import induce_templates
 from .pipeline import build_extract_plan, dedup_latest, prepare_pages
 
@@ -57,7 +57,7 @@ def _narrow_status(out: DataFrame) -> DataFrame:
     return out.select(
         "url", "warc_ts", "status",
         F.try_parse_url("url", F.lit("HOST")).alias("host"),
-        F.col("status").isin(*OK_STATUSES).alias("ok"))
+        status_ok().alias("ok"))
 
 
 def refresh_templates(pages: DataFrame, templates: DataFrame,

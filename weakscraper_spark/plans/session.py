@@ -8,13 +8,23 @@ local[N]):
 - Arrow batches into mapInPandas; ``maxRecordsPerBatch`` lowered
   because rows carry whole HTML blobs (~2–50 KB) — a 10k-row default
   batch would be hundreds of MB in a Python worker.
-- ``spark.python.worker.reuse=false`` in local mode: measured on this
-  sandbox, the reuse daemon's worker handoff serializes under many
-  concurrent local tasks — the same 200k-page extract ran 31.0 s with
-  reuse vs 11.6 s without at local[16] (2.7×). Fork-from-daemon makes
-  fresh workers cheap. On a real multi-executor cluster (few cores
-  per executor, long-lived workers) reuse=true is the usual choice —
-  pass ``worker_reuse=True``.
+- ``spark.python.worker.reuse=false``: one fresh Python worker per
+  task. Measured on a 32-core box, the reuse daemon's worker handoff
+  serializes under many concurrent local tasks — the same 200k-page
+  extract ran 31.0 s with reuse vs 11.6 s without at local[16] (2.7×);
+  a fresh worker also drops the heap earlier tasks grew.
+- ``spark.python.daemon.module`` is, on local masters, the preloading
+  daemon ``weakscraper_spark._worker_daemon``: it imports pandas,
+  pyarrow and the engine once, then forks each fresh worker from that
+  state, so a task pays a fork instead of ~0.5 s of imports, and the
+  preloaded pages stay shared copy-on-write. The JVM starts the
+  daemon by module name before any ``--py-files``/``addPyFile`` path
+  reaches ``sys.path`` (those are added inside each forked worker),
+  so the session also passes the package root — this checkout, or
+  the zip the driver imported it from — as the workers'
+  ``PYTHONPATH``. That path only exists on the driver's machine, so
+  other masters keep the stock daemon. The daemon must write nothing
+  to stdout: the JVM reads its port from there.
 - shuffle partitions default to 4× cores locally; on a real cluster
   AQE coalesces from a high initial count instead.
 - ``files.maxPartitionBytes`` lowered to 16 MB in local mode: the
@@ -30,13 +40,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: directory (or zip) holding the ``weakscraper_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
 
 def get_spark(app_name: str = "weakscraper_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               arrow_batch_rows: int = 512,
               max_partition_bytes: str = "16m",
-              worker_reuse: bool = False,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.cpu_count() or 8
@@ -83,13 +96,18 @@ def get_spark(app_name: str = "weakscraper_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(arrow_batch_rows))
-        .config("spark.python.worker.reuse",
-                "true" if worker_reuse else "false")
+        .config("spark.python.worker.reuse", "false")
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    if master.startswith("local"):
+        builder = (
+            builder
+            .config("spark.python.daemon.module",
+                    "weakscraper_spark._worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

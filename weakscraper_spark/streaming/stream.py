@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import OK_STATUSES, extract_pages
+from ..operators.extract import extract_pages, status_ok
 from ..plans.pipeline import attach_template, prepare_pages
 
 
@@ -199,7 +199,7 @@ def stream_host_error_rates(spark: SparkSession, source_dir: str,
             host_col, F.try_parse_url("url", F.lit("HOST")))
     if ok_col not in stream.columns and "status" in stream.columns:
         stream = stream.withColumn(
-            ok_col, F.col("status").isin(*OK_STATUSES))
+            ok_col, status_ok())
     stream = stream.withWatermark(ts_col, watermark)
     err = (~F.col(ok_col).cast("boolean")).cast("int")
     agg = (stream
