@@ -52,9 +52,9 @@ def _dec(col, scale: int):
 # cleaning composition, its stage input) to a fixed path here and the
 # static oracle SQL reads it back with read_parquet() — turning
 # value-pinned rows-only checks into driver-visible hash-green ones.
-# Safe because every harness (driver, tests/test_oracle.py,
-# tools/record_correctness.py) executes the Spark side of a query
-# BEFORE its oracle, in the SAME process that serves oracle_sql() —
+# Safe because every harness (driver, tests/test_oracle.py) executes
+# the Spark side of a query BEFORE its oracle, in the SAME process
+# that serves oracle_sql() —
 # so a per-process temp dir is visible to both sides. Per-process
 # namespacing (r05 advice) means concurrent harnesses at different
 # sfs, or two users on one host, can no longer silently overwrite

@@ -410,7 +410,7 @@ def _dir_has_parquet(path: str) -> bool:
 
 
 # --------------------------------------------------------------------------
-# Convenience: synthesized end-to-end run (used by entry() and bench)
+# Convenience: synthesized end-to-end run (used by entry() and queries())
 # --------------------------------------------------------------------------
 
 def synth_and_extract(spark: SparkSession, n_pages: int,
@@ -418,9 +418,9 @@ def synth_and_extract(spark: SparkSession, n_pages: int,
                       num_partitions: int | None = None,
                       fallback: str | None = None) -> DataFrame:
     """``n_salts=0`` (map-only heavy path) is the default here exactly
-    as in ``build_extract_plan`` — this is the plan ``entry()`` and the
-    bench headline run, and it must BE the plan the module docstring
-    promises (no corpus-width exchange before the Python stage;
+    as in ``build_extract_plan`` — this is the plan ``entry()`` runs,
+    and it must BE the plan the module docstring promises (no
+    corpus-width exchange before the Python stage;
     asserted on entry()'s DataFrame in tests/test_plan_quality.py).
     Salting stays opt-in for host-clustered input layouts."""
     pages = synth_pages(spark, n_pages)

@@ -48,8 +48,6 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
 def get_spark(app_name: str = "weakscraper_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
-              arrow_batch_rows: int = 512,
-              max_partition_bytes: str = "16m",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.cpu_count() or 8
@@ -94,10 +92,9 @@ def get_spark(app_name: str = "weakscraper_spark",
         .config("spark.shuffle.sort.bypassMergeThreshold", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.python.worker.reuse", "false")
-        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
