@@ -20,11 +20,14 @@ Two extraction modes:
                 pages it returns the main text byte-identically,
                 which is what the value-pinned query checks.
 
-Implementation is ONE streaming pass of the same stdlib HTMLParser
-configuration as dom.py (convert_charrefs=True, same void-element
-set) — no DOM tree is materialized; per-block state is O(words in
-the current block). Entity decoding and whitespace-only-node
-behavior therefore match the template path byte-for-byte.
+Implementation is ONE streaming pass over the same tokens as dom.py
+— the ``htmltok`` regex fast path, or, for documents it refuses and
+for span tracking, an HTMLParser subclass with dom.py's configuration
+(convert_charrefs=True, same void-element set); the stdlib semantics
+are the contract and tests/test_tokenize.py checks the two paths
+against each other. No DOM tree is materialized; per-block state is
+O(words in the current block). Entity decoding and whitespace-only-
+node behavior therefore match the template path byte-for-byte.
 
 Scale shape: pure per-document function → runs inside the same
 Arrow-batched ``mapInPandas`` stage as the template extractor
@@ -38,9 +41,11 @@ and this repo's own tests, not by reference fixtures.
 
 from __future__ import annotations
 
+from html import unescape
 from html.parser import HTMLParser
 
 from .dom import VOID_ELEMENTS
+from .htmltok import tokenize
 
 #: tags whose entire subtree carries no rendered text. Deliberately
 #: NOT ``head``: real-world malformed pages often omit ``</head>``,
@@ -95,8 +100,7 @@ class _BlockSegmenter(HTMLParser):
         """``line_starts`` (absolute offset of each source line) turns
         on span tracking — HTMLParser positions are (lineno, col), and
         the precomputed index converts them to absolute offsets. None
-        (the default path) skips all span bookkeeping so the plain
-        parse stays byte-identical in cost."""
+        skips all span bookkeeping."""
         super().__init__(convert_charrefs=True)
         self.blocks: list[Block] = []
         self._frags: list[str] = []
@@ -110,14 +114,6 @@ class _BlockSegmenter(HTMLParser):
     def _abs(self) -> int:
         lineno, col = self.getpos()
         return self._line_starts[lineno - 1] + col
-
-    def updatepos(self, i: int, j: int) -> int:
-        # line/column tracking only matters in span mode; the plain
-        # path skips the per-token newline counting (the dom.py
-        # _DomBuilder rationale — ~8-10% of parse time)
-        if self._line_starts is None:
-            return j
-        return HTMLParser.updatepos(self, i, j)
 
     def _flush(self, end: int | None = None) -> None:
         if self._frags:
@@ -183,7 +179,66 @@ def _line_starts(html: str) -> list[int]:
     return starts
 
 
+def _segment(toks: list) -> list[Block]:
+    """:class:`_BlockSegmenter`'s blocks from :func:`htmltok.tokenize`
+    tokens. A self-closing tag runs the start and then the end rule,
+    as ``HTMLParser.handle_startendtag`` does; a script/style token
+    opens and closes an ignored subtree around ignored text, so it
+    changes nothing and is skipped."""
+    blocks: list[Block] = []
+    frags: list[str] = []
+    words = link_words = anchor = ignore = 0
+    for text, name, _, slash, end, _, _, _, _ in toks:
+        if text:
+            if ignore:
+                continue
+            if "&" in text:
+                text = unescape(text)
+            if text.isspace():
+                continue
+            frags.append(text)
+            n = len(text.split())
+            words += n
+            if anchor:
+                link_words += n
+            continue
+        if not (name or end):
+            continue
+        tag = (name or end).lower()
+        flush = False
+        if name:
+            if ignore:
+                if tag in IGNORED_SUBTREES and tag not in VOID_ELEMENTS:
+                    ignore += 1
+            elif tag in IGNORED_SUBTREES:
+                if tag not in VOID_ELEMENTS:
+                    ignore = 1
+            elif tag in BLOCK_TAGS:
+                flush = True
+            elif tag == "a":
+                anchor += 1
+        if end or slash:
+            if ignore:
+                if tag in IGNORED_SUBTREES:
+                    ignore -= 1
+            elif tag in BLOCK_TAGS:
+                flush = True
+            elif tag == "a" and anchor:
+                anchor -= 1
+        if flush and frags:
+            blocks.append(Block(" ".join(frags), words, link_words))
+            frags = []
+            words = link_words = 0
+    if frags:
+        blocks.append(Block(" ".join(frags), words, link_words))
+    return blocks
+
+
 def segment_blocks(html: str, spans: bool = False) -> list[Block]:
+    if not spans:
+        toks = tokenize(html)
+        if toks is not None:
+            return _segment(toks)
     seg = _BlockSegmenter(_line_starts(html) if spans else None)
     seg.feed(html)
     seg.close_with_end(len(html))

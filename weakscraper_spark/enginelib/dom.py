@@ -1,6 +1,10 @@
-"""HTML → plain-dict DOM trees via the stdlib ``html.parser.HTMLParser``
-(SURVEY.md §3A A1/A2; reference: weakscraper/htmlparser.py ≈15-110 and
-weakscraper/templateparser.py ≈10-70 — approximate cites, SURVEY §0).
+"""HTML → plain-dict DOM trees. The stdlib ``html.parser.HTMLParser``
+semantics are the contract; a regex tokenizer fast path
+(``htmltok.py``, differential-tested against the stdlib builders in
+tests/test_tokenize.py) implements them, and the stdlib builders below
+parse whatever it refuses (SURVEY.md §3A A1/A2; reference:
+weakscraper/htmlparser.py ≈15-110 and weakscraper/templateparser.py
+≈10-70 — approximate cites, SURVEY §0).
 
 Node shape (exactly the reference's):
     tag  node: {'nodetype': 'tag',  'name': str, 'attrs': {str: str},
@@ -8,10 +12,11 @@ Node shape (exactly the reference's):
     text node: {'nodetype': 'text', 'content': str}
 
 Behavioral pins (these define the byte-identical-text contract):
-- ``convert_charrefs=True`` — entities (&amp;, &#65;) are decoded into
-  the text stream by the stdlib parser before we see them.
-- Whitespace-only text nodes are dropped at parse time.
-- Tag names and attribute names are lowercased by HTMLParser.
+- ``convert_charrefs=True`` — entities (&amp;, &#65;) in text and
+  attribute values are decoded by ``html.unescape``, which leaves a
+  string without ``&`` as it is (the fast path skips the call then).
+- Whitespace-only text nodes (after decoding) are dropped at parse time.
+- Tag names and attribute names are lowercased.
 - Attributes with no value (e.g. ``<input disabled>``) get ``''``.
 - HTML5 void elements (br, img, meta, ...) never take children even
   without an explicit '/>'.
@@ -24,6 +29,9 @@ additionally preserves ``wp-*`` attributes and accepts the pseudo-tags
 ``<wp-ignore/>`` and ``<wp-nugget ...>...</wp-nugget>`` as ordinary
 nodes (they are interpreted at compile time, spec.py).
 
+Span-annotated parses (``parse_html_spans_counted``) always take the
+stdlib path: they need its line/column positions.
+
 lxml/bs4 are deliberately NOT used: the stdlib parser's exact
 tokenization/entity behavior is part of the parity contract and the
 sandbox does not ship lxml (SURVEY §7 environment pins).
@@ -31,8 +39,11 @@ sandbox does not ship lxml (SURVEY §7 environment pins).
 
 from __future__ import annotations
 
+from html import unescape
 from html.parser import HTMLParser
 from typing import Any
+
+from .htmltok import parse_attrs, tokenize
 
 Node = dict[str, Any]
 
@@ -40,6 +51,8 @@ Node = dict[str, Any]
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
+#: templates also write the ``<wp-ignore>`` pseudo-tag without children
+TEMPLATE_VOID_ELEMENTS = VOID_ELEMENTS | {"wp-ignore"}
 
 
 def tag_node(name: str, attrs: dict[str, str]) -> Node:
@@ -59,12 +72,15 @@ def is_text(node: Node) -> bool:
 
 
 class _DomBuilder(HTMLParser):
-    """Stack-based tree builder. The synthetic root node collects all
-    top-level children; callers receive the root's children list wrapped
-    in a 'root' tag node so single- and multi-rooted documents look alike.
+    """Stack-based tree builder on the stdlib tokenizer — the path for
+    documents :func:`htmltok.tokenize` refuses, and the base of the
+    span builder. The synthetic root node collects all top-level
+    children; callers receive the root's children list wrapped in a
+    'root' tag node so single- and multi-rooted documents look alike.
     """
 
-    #: tags whose start implies no children (overridden per subclass)
+    #: tags whose start implies no children (overridden per subclass;
+    #: the fast path reads the same set)
     void_elements: frozenset[str] = VOID_ELEMENTS
 
     def __init__(self) -> None:
@@ -116,15 +132,6 @@ class _DomBuilder(HTMLParser):
             self._stack[-1]["children"].append(text_node(data))
             self.n_nodes += 1
 
-    def updatepos(self, i: int, j: int) -> int:
-        # line/column bookkeeping is dead weight here: goahead() calls
-        # this for every token but the non-span builder never reads
-        # getpos() (only _SpanDomBuilder does, and it restores the
-        # real implementation). Returning j mimics the base exactly
-        # minus the newline counting — ~8-10% of per-page parse time
-        # (measured r08, 169k calls per 100 tag-dense pages).
-        return j
-
     # comments, PIs, declarations are dropped (reference behavior: no
     # handle_comment override → HTMLParser discards them).
 
@@ -135,24 +142,80 @@ class _TemplateDomBuilder(_DomBuilder):
     with no children) while ``<wp-nugget>`` wraps text normally.
     """
 
-    void_elements = VOID_ELEMENTS | {"wp-ignore"}
+    void_elements = TEMPLATE_VOID_ELEMENTS
+
+
+def _build(toks: list, void: frozenset[str]) -> tuple[Node, int]:
+    """The :class:`_DomBuilder` tree from :func:`htmltok.tokenize`
+    tokens: a name stack beside the stack of open children lists, and
+    node dicts built in place (this loop is the extract hot path)."""
+    root = tag_node("root", {})
+    cur = root["children"]
+    kids = [cur]
+    names = [""]  # names[i] opened kids[i]; "" never matches an end tag
+    n = 0
+    for text, name, attrs, slash, end, rname, rattrs, raw, _ in toks:
+        if text:
+            if "&" in text:
+                text = unescape(text)
+            if not text.isspace():
+                cur.append({"nodetype": "text", "content": text})
+                n += 1
+        elif name:
+            name = name.lower()
+            children: list[Node] = []
+            cur.append({"nodetype": "tag", "name": name,
+                        "attrs": parse_attrs(attrs) if attrs else {},
+                        "children": children})
+            n += 1
+            if not slash and name not in void:
+                names.append(name)
+                kids.append(children)
+                cur = children
+        elif end:
+            end = end.lower()
+            if names[-1] == end:
+                names.pop()
+                kids.pop()
+                cur = kids[-1]
+            elif end in names:
+                # unwind to the nearest matching open tag; strays are
+                # ignored
+                i = len(names) - 1 - names[::-1].index(end)
+                del names[i:]
+                del kids[i:]
+                cur = kids[-1]
+        elif rname:
+            # script/style: start tag, raw text child and close in one
+            children = ([{"nodetype": "text", "content": raw}]
+                        if raw and not raw.isspace() else [])
+            cur.append({"nodetype": "tag", "name": rname.lower(),
+                        "attrs": parse_attrs(rattrs) if rattrs else {},
+                        "children": children})
+            n += 1 + len(children)
+    return root, n
+
+
+def _parse(html: str, builder: type[_DomBuilder]) -> tuple[Node, int]:
+    """Fast path first; ``builder`` parses documents it refuses."""
+    toks = tokenize(html)
+    if toks is not None:
+        return _build(toks, builder.void_elements)
+    b = builder()
+    b.feed(html)
+    b.close()
+    return b.root, b.n_nodes
 
 
 def parse_html(html: str) -> Node:
     """Parse a page into a DOM tree rooted at a synthetic 'root' node."""
-    builder = _DomBuilder()
-    builder.feed(html)
-    builder.close()
-    return builder.root
+    return _parse(html, _DomBuilder)[0]
 
 
 def parse_html_counted(html: str) -> tuple[Node, int]:
     """Like :func:`parse_html`, also returning the node count gathered
     during the parse (no second tree walk — extract hot path)."""
-    builder = _DomBuilder()
-    builder.feed(html)
-    builder.close()
-    return builder.root, builder.n_nodes
+    return _parse(html, _DomBuilder)
 
 
 class _SpanDomBuilder(_DomBuilder):
@@ -174,10 +237,6 @@ class _SpanDomBuilder(_DomBuilder):
 
     _src: str = ""
     _line_starts: list[int] = [0]
-
-    #: spans need real line/column tracking — restore the stdlib
-    #: implementation the base builder no-ops out
-    updatepos = HTMLParser.updatepos
 
     def _abs(self) -> int:
         lineno, col = self.getpos()
@@ -247,10 +306,7 @@ def parse_html_spans_counted(html: str) -> tuple[Node, int]:
 
 def parse_template_html(html: str) -> Node:
     """Parse a template (wp-* markers preserved as ordinary attrs/tags)."""
-    builder = _TemplateDomBuilder()
-    builder.feed(html)
-    builder.close()
-    return builder.root
+    return _parse(html, _TemplateDomBuilder)[0]
 
 
 def serialize_node(node: Node) -> str:
