@@ -41,6 +41,39 @@ def test_span_end_ignores_quoted_gt_in_attrs():
     assert html[a:b] == '<img title="a>b" src="s">'
 
 
+def test_span_of_end_tag_with_inner_whitespace_ends_at_its_gt():
+    """An end tag ends at its first '>', where the stdlib parser ends
+    it, whitespace before the '>' included."""
+    tpl = compile_template('<div><h1 wp-name="t">x</h1></div>')
+    for close in ("</h1 >", "</h1\n\t>"):
+        html = f"<div><h1>T{close}</div>"
+        r = extract(tpl, html, spans=True)
+        assert r["status"] == "ok"
+        assert html[slice(*r["spans"]["t"][0])] == f"<h1>T{close}"
+
+
+def test_implicitly_closed_and_void_elements_keep_start_tag_span():
+    """Only an explicit end tag widens a span: the element it closes
+    (here across an unclosed <p>) ends at its '>'; the unclosed and the
+    void element end with their start tags."""
+    from weakscraper_spark.enginelib.dom import parse_html_spans_counted
+
+    html = "<div><p>x<br>y</div>"
+    (div,) = parse_html_spans_counted(html)[0]["children"]
+    p = div["children"][0]
+    assert div["span"] == [0, len(html)]
+    assert html[slice(*p["span"])] == "<p>"
+    assert html[slice(*p["children"][1]["span"])] == "<br>"
+
+
+def test_block_span_ends_at_the_flushing_tag():
+    from weakscraper_spark.enginelib.boiler import segment_blocks
+
+    html = "<p>one two</p><div>three <b>x</b></div>tail"
+    assert [b.span for b in segment_blocks(html, spans=True)] == \
+        [(3, 10), (19, 33), (39, 43)]
+
+
 def test_spans_off_by_default_and_none_on_mismatch():
     s = TemplateScraper('<h1 wp-name="t">x</h1>')
     assert "spans" not in s.extract("<h1>A</h1>")

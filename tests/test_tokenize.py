@@ -1,22 +1,28 @@
-"""The regex tokenizer fast path (enginelib/htmltok.py) against the
-stdlib ``HTMLParser`` builders it stands in for:
+"""The package's two token sources (enginelib/htmltok.py) through
+its one tree builder and one block segmenter, against an oracle built
+straight on ``HTMLParser`` callbacks:
 
 - differential: on generated documents, real fixture pages/templates
   and synth pages, ``parse_html_counted`` / ``parse_template_html``
-  give the stdlib builders' (tree, n_nodes), and ``segment_blocks``
-  gives ``_BlockSegmenter``'s blocks — whether the fast path accepts
-  the document or falls back;
+  give the oracle's (tree, n_nodes), markdown's tree is the oracle's
+  with whitespace-only text kept, and ``segment_blocks`` gives the
+  oracle's blocks — whether the fast path accepts the document or
+  falls back; the stdlib source with spans on gives the same trees
+  and blocks on every document;
 - coverage: every synth page kind takes the fast path, and each hard
   construct is refused (a regex regression that sent every page to
   the stdlib path would otherwise only slow the benchmark down).
 """
 
+from html.parser import HTMLParser
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from weakscraper_spark.enginelib import dom
-from weakscraper_spark.enginelib.boiler import _BlockSegmenter, segment_blocks
-from weakscraper_spark.enginelib.htmltok import tokenize
+from weakscraper_spark.enginelib import dom, markdown
+from weakscraper_spark.enginelib.boiler import (
+    BLOCK_TAGS, IGNORED_SUBTREES, _segment, segment_blocks)
+from weakscraper_spark.enginelib.htmltok import tokenize, tokens
 from weakscraper_spark.sources.synth import (
     SITE_TEMPLATES, TEMPLATE_IDS, make_slots, render_page, render_page_v2,
     rows_for_index)
@@ -24,10 +30,97 @@ from weakscraper_spark.sources.synth import (
 from fixtures.corpus import FIXTURES
 
 
-def _stdlib_tree(builder, html):
-    b = builder()
-    b.feed(html)
-    b.close()
+class _OracleTree(HTMLParser):
+    """Stack-based tree build on the stdlib callbacks: stray end tags
+    are ignored, unclosed tags close at EOF."""
+
+    def __init__(self, void, keep_ws):
+        super().__init__(convert_charrefs=True)
+        self.void = void
+        self.keep_ws = keep_ws
+        self.root = dom.tag_node("root", {})
+        self.stack = [self.root]
+        self.n_nodes = 0
+
+    def handle_starttag(self, tag, attrs):
+        self.handle_startendtag(tag, attrs)
+        if tag not in self.void:
+            self.stack.append(self.stack[-1]["children"][-1])
+
+    def handle_startendtag(self, tag, attrs):
+        self.stack[-1]["children"].append(dom.tag_node(
+            tag, {k: "" if v is None else v for k, v in attrs}))
+        self.n_nodes += 1
+
+    def handle_endtag(self, tag):
+        for i in range(len(self.stack) - 1, 0, -1):
+            if self.stack[i]["name"] == tag:
+                del self.stack[i:]
+                return
+
+    def handle_data(self, data):
+        if data and (self.keep_ws or not data.isspace()):
+            self.stack[-1]["children"].append(
+                {"nodetype": "text", "content": data})
+            self.n_nodes += 1
+
+
+class _OracleBlocks(HTMLParser):
+    """Streaming block segmentation on the stdlib callbacks; the
+    default ``handle_startendtag`` runs the start, then the end rule."""
+
+    def __init__(self):
+        super().__init__(convert_charrefs=True)
+        self.blocks = []
+        self.frags = []
+        self.words = self.link_words = self.anchor = self.ignore = 0
+
+    def flush(self):
+        if self.frags:
+            self.blocks.append(
+                (" ".join(self.frags), self.words, self.link_words))
+            self.frags = []
+            self.words = self.link_words = 0
+
+    def handle_starttag(self, tag, attrs):
+        if self.ignore:
+            if tag in IGNORED_SUBTREES and tag not in dom.VOID_ELEMENTS:
+                self.ignore += 1
+        elif tag in IGNORED_SUBTREES:
+            if tag not in dom.VOID_ELEMENTS:
+                self.ignore = 1
+        elif tag in BLOCK_TAGS:
+            self.flush()
+        elif tag == "a":
+            self.anchor += 1
+
+    def handle_endtag(self, tag):
+        if self.ignore:
+            if tag in IGNORED_SUBTREES:
+                self.ignore -= 1
+        elif tag in BLOCK_TAGS:
+            self.flush()
+        elif tag == "a" and self.anchor:
+            self.anchor -= 1
+
+    def handle_data(self, data):
+        if self.ignore or not data or data.isspace():
+            return
+        self.frags.append(data)
+        n = len(data.split())
+        self.words += n
+        if self.anchor:
+            self.link_words += n
+
+
+def _oracle(parser, html):
+    parser.feed(html)
+    parser.close()
+    return parser
+
+
+def _stdlib_tree(void, html, keep_ws=False):
+    b = _oracle(_OracleTree(void, keep_ws), html)
     return b.root, b.n_nodes
 
 
@@ -36,22 +129,36 @@ def _blocks(blocks):
 
 
 def _stdlib_blocks(html):
-    seg = _BlockSegmenter()
-    seg.feed(html)
-    seg.close_with_end(len(html))
-    return _blocks(seg.blocks)
+    seg = _oracle(_OracleBlocks(), html)
+    seg.flush()
+    return seg.blocks
+
+
+def _unspanned(node):
+    if dom.is_text(node):
+        return node
+    return {"nodetype": "tag", "name": node["name"], "attrs": node["attrs"],
+            "children": [_unspanned(c) for c in node["children"]]}
 
 
 def assert_matches_stdlib(html):
-    assert dom.parse_html_counted(html) == \
-        _stdlib_tree(dom._DomBuilder, html)
-    tpl_root, tpl_n = _stdlib_tree(dom._TemplateDomBuilder, html)
+    page = _stdlib_tree(dom.VOID_ELEMENTS, html)
+    assert dom.parse_html_counted(html) == page
+    tpl_root, tpl_n = _stdlib_tree(dom.TEMPLATE_VOID_ELEMENTS, html)
     assert dom.parse_template_html(html) == tpl_root
     toks = tokenize(html)
     if toks is not None:
         assert dom._build(toks, dom.TEMPLATE_VOID_ELEMENTS) == \
             (tpl_root, tpl_n)
-    assert _blocks(segment_blocks(html)) == _stdlib_blocks(html)
+    blocks = _stdlib_blocks(html)
+    assert _blocks(segment_blocks(html)) == blocks
+    assert markdown._parse(html) == \
+        _stdlib_tree(dom.VOID_ELEMENTS, html, keep_ws=True)[0]
+    # the stdlib source (spans on) on every document, accepted or not
+    stdlib = tokens(html, spans=True)
+    tree, n = dom._build(stdlib, dom.VOID_ELEMENTS)
+    assert (_unspanned(tree), n) == page
+    assert _blocks(_segment(stdlib, len(html))) == blocks
 
 
 # ---------------------------------------------------------------------------
@@ -125,7 +232,9 @@ HARD = ["<", "a < b", "x <", "<3", "<?php echo 1; ?>", "<![CDATA[x]]>",
         '<a href="x', '<h1 class="trunc', "</>", "</ div>", "<a/b>",
         "<a x==y>", "<a x=\"1\"y=2>", "<a x = >", "<a\xa0class=x>",
         "<a\vx=1>", "<div\v>", "<p\x00>", "<script>\u017f</script>",
-        "<script>x</scr\u0130pt></script>"]
+        "<script>x</scr\u0130pt></script>",
+        # refused text is decoded once: 'a &lt; b <', never 'a < b <'
+        "a &amp;lt; b <"]
 
 _accepted = st.one_of(_text, _text, _start_tag(), _start_tag(), _end_tag,
                       _end_tag, st.sampled_from(ACCEPTED))

@@ -20,14 +20,15 @@ Two extraction modes:
                 pages it returns the main text byte-identically,
                 which is what the value-pinned query checks.
 
-Implementation is ONE streaming pass over the same tokens as dom.py
-— the ``htmltok`` regex fast path, or, for documents it refuses and
-for span tracking, an HTMLParser subclass with dom.py's configuration
-(convert_charrefs=True, same void-element set); the stdlib semantics
-are the contract and tests/test_tokenize.py checks the two paths
-against each other. No DOM tree is materialized; per-block state is
-O(words in the current block). Entity decoding and whitespace-only-
-node behavior therefore match the template path byte-for-byte.
+Implementation is ONE streaming pass, :func:`_segment`, over the
+same ``htmltok`` tokens as dom.py's tree builder — from the regex
+fast path, or from the stdlib parser for documents it refuses and for
+span tracking (the stdlib semantics are the contract;
+tests/test_tokenize.py checks both sources against a segmenter
+written on ``HTMLParser`` callbacks). No DOM tree is materialized;
+per-block state is O(words in the current block). Entity decoding
+and whitespace-only-node behavior therefore match the template path
+byte-for-byte.
 
 Scale shape: pure per-document function → runs inside the same
 Arrow-batched ``mapInPandas`` stage as the template extractor
@@ -42,10 +43,9 @@ and this repo's own tests, not by reference fixtures.
 from __future__ import annotations
 
 from html import unescape
-from html.parser import HTMLParser
 
 from .dom import VOID_ELEMENTS
-from .htmltok import tokenize
+from .htmltok import tokens
 
 #: tags whose entire subtree carries no rendered text. Deliberately
 #: NOT ``head``: real-world malformed pages often omit ``</head>``,
@@ -91,104 +91,21 @@ class Block:
         return self.n_link_words / self.n_words if self.n_words else 0.0
 
 
-class _BlockSegmenter(HTMLParser):
-    """Streaming block segmentation (no tree build): accumulate text
-    fragments; flush a block whenever a block-level tag opens or
-    closes; count words inside <a> subtrees toward link words."""
-
-    def __init__(self, line_starts: list[int] | None = None) -> None:
-        """``line_starts`` (absolute offset of each source line) turns
-        on span tracking — HTMLParser positions are (lineno, col), and
-        the precomputed index converts them to absolute offsets. None
-        skips all span bookkeeping."""
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._frags: list[str] = []
-        self._words = 0
-        self._link_words = 0
-        self._anchor_depth = 0
-        self._ignore_depth = 0
-        self._line_starts = line_starts
-        self._block_start: int | None = None
-
-    def _abs(self) -> int:
-        lineno, col = self.getpos()
-        return self._line_starts[lineno - 1] + col
-
-    def _flush(self, end: int | None = None) -> None:
-        if self._frags:
-            span = (None if self._line_starts is None
-                    else (self._block_start,
-                          self._abs() if end is None else end))
-            self.blocks.append(Block(" ".join(self._frags), self._words,
-                                     self._link_words, span))
-            self._frags = []
-            self._words = 0
-            self._link_words = 0
-            self._block_start = None
-
-    def handle_starttag(self, tag, attrs) -> None:
-        if self._ignore_depth:
-            if tag in IGNORED_SUBTREES and tag not in VOID_ELEMENTS:
-                self._ignore_depth += 1
-            return
-        if tag in IGNORED_SUBTREES:
-            if tag not in VOID_ELEMENTS:
-                self._ignore_depth = 1
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-        elif tag == "a":
-            self._anchor_depth += 1
-
-    def handle_endtag(self, tag) -> None:
-        if self._ignore_depth:
-            if tag in IGNORED_SUBTREES:
-                self._ignore_depth -= 1
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-        elif tag == "a" and self._anchor_depth:
-            self._anchor_depth -= 1
-
-    def handle_data(self, data) -> None:
-        if self._ignore_depth or not data or data.isspace():
-            return
-        if self._line_starts is not None and not self._frags:
-            # getpos() during handle_data = source position of this
-            # data run's start (charref decoding happens per run, so
-            # the position refers to the raw source)
-            self._block_start = self._abs()
-        self._frags.append(data)
-        n = len(data.split())
-        self._words += n
-        if self._anchor_depth:
-            self._link_words += n
-
-    def close_with_end(self, end: int) -> None:
-        super().close()
-        self._flush(end)
-
-
-def _line_starts(html: str) -> list[int]:
-    starts = [0]
-    i = html.find("\n")
-    while i != -1:
-        starts.append(i + 1)
-        i = html.find("\n", i + 1)
-    return starts
-
-
-def _segment(toks: list) -> list[Block]:
-    """:class:`_BlockSegmenter`'s blocks from :func:`htmltok.tokenize`
-    tokens. A self-closing tag runs the start and then the end rule,
-    as ``HTMLParser.handle_startendtag`` does; a script/style token
-    opens and closes an ignored subtree around ignored text, so it
-    changes nothing and is skipped."""
+def _segment(toks: list, length: int) -> list[Block]:
+    """The blocks of ``htmltok`` tokens: accumulate text fragments;
+    flush a block whenever a block-level tag opens or closes; count
+    words inside <a> subtrees toward link words. A self-closing tag
+    runs the start and then the end rule, as
+    ``HTMLParser.handle_startendtag`` does; a fast-path script/style
+    token opens and closes an ignored subtree around ignored text, so
+    it changes nothing and is skipped. When the tokens carry spans,
+    each block gets its covering span, ending at the start of the
+    flushing tag or at ``length``, the end of the source."""
     blocks: list[Block] = []
     frags: list[str] = []
     words = link_words = anchor = ignore = 0
-    for text, name, _, slash, end, _, _, _, _ in toks:
+    start = None
+    for text, name, _, slash, end, _, _, _, span in toks:
         if text:
             if ignore:
                 continue
@@ -196,6 +113,8 @@ def _segment(toks: list) -> list[Block]:
                 text = unescape(text)
             if text.isspace():
                 continue
+            if span and not frags:
+                start = span[0]
             frags.append(text)
             n = len(text.split())
             words += n
@@ -226,23 +145,18 @@ def _segment(toks: list) -> list[Block]:
             elif tag == "a" and anchor:
                 anchor -= 1
         if flush and frags:
-            blocks.append(Block(" ".join(frags), words, link_words))
+            blocks.append(Block(" ".join(frags), words, link_words,
+                                (start, span[0]) if span else None))
             frags = []
             words = link_words = 0
     if frags:
-        blocks.append(Block(" ".join(frags), words, link_words))
+        blocks.append(Block(" ".join(frags), words, link_words,
+                            None if start is None else (start, length)))
     return blocks
 
 
 def segment_blocks(html: str, spans: bool = False) -> list[Block]:
-    if not spans:
-        toks = tokenize(html)
-        if toks is not None:
-            return _segment(toks)
-    seg = _BlockSegmenter(_line_starts(html) if spans else None)
-    seg.feed(html)
-    seg.close_with_end(len(html))
-    return seg.blocks
+    return _segment(tokens(html, spans), len(html))
 
 
 # Decision-rule constants from the WSDM'10 paper's NumWords/LinkDensity
@@ -288,9 +202,9 @@ def main_text(html: str, mode: str = "largest",
     covering span of each SELECTED content block (one for 'largest',
     one per block for 'all') — the heuristic leg of the north rule's
     "text/spans per url" (template captures get theirs from
-    match.extract(spans=True)). Off by default: span bookkeeping adds
-    a line-index pass and per-block position reads the plain path
-    shouldn't pay.
+    match.extract(spans=True)). Off by default: spans come only from
+    the stdlib token source, which the plain path skips whenever the
+    fast path accepts the page.
     """
     blocks = segment_blocks(html, spans=spans)
     labels = classify_blocks(blocks)

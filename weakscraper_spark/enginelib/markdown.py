@@ -30,10 +30,11 @@ special characters in text are NOT escaped — the output is corpus
 text, not guaranteed-round-trippable markdown source; callers that
 need lossless round-trips keep the html column.
 
-Built on the SAME stdlib parser configuration as dom.py (tolerant
-stack unwinding, WHATWG void set, convert_charrefs) via a subclass
-that keeps whitespace-only text nodes — dom.py's hot path drops
-them, which is correct for template matching but would glue adjacent
+Built on dom.py's one tree builder over the same ``htmltok`` tokens
+(tolerant stack unwinding, WHATWG void set, stdlib entity decoding;
+the regex fast path, or the stdlib parser for pages it refuses), but
+with whitespace-only text nodes kept — the template path drops them,
+which is correct for template matching but would glue adjacent
 inline elements (``**x***y*``) here. Pathological nesting raises
 ``RecursionError`` from the renderer; the Spark operator
 (operators/markdown.py) maps it to a status row, never a task
@@ -49,8 +50,8 @@ from __future__ import annotations
 
 import re
 
-from .dom import (Node, _DomBuilder, is_tag, is_text, tag_node,
-                  text_node)
+from .dom import VOID_ELEMENTS, Node, _build, is_tag, is_text, tag_node
+from .htmltok import tokens
 
 IGNORED_SUBTREES = frozenset(
     "script style noscript svg template title iframe object".split())
@@ -68,22 +69,8 @@ _WS_RUN = re.compile(r"[ \t\r\n\f\v]+")
 _BR = "\x00"  # inline placeholder surviving whitespace collapse
 
 
-class _MdDomBuilder(_DomBuilder):
-    """dom.py's tolerant tree build, but whitespace-only text nodes
-    are KEPT — inline rendering needs the gap between ``<b>x</b>``
-    and ``<i>y</i>`` to exist."""
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            self._stack[-1]["children"].append(text_node(data))
-            self.n_nodes += 1
-
-
 def _parse(html: str) -> Node:
-    b = _MdDomBuilder()
-    b.feed(html)
-    b.close()
-    return b.root
+    return _build(tokens(html), VOID_ELEMENTS, keep_ws=True)[0]
 
 
 def _collapse(s: str) -> str:

@@ -294,12 +294,6 @@ def match_document(spec: Spec, html: str,
     return results
 
 
-def count_nodes(node: Node) -> int:
-    if is_text(node):
-        return 1
-    return 1 + sum(count_nodes(c) for c in node["children"])
-
-
 def extract(spec: Spec, html: str, functions: Functions | None = None,
             text_key: str = "text", spans: bool = False) -> dict[str, Any]:
     """Status-row extraction used by the Spark batch operator: never
@@ -313,9 +307,12 @@ def extract(spec: Spec, html: str, functions: Functions | None = None,
     ``spans=True`` (the north rule's "extracted text/spans per url"
     leg) additionally returns ``spans``: field name → list of
     [start, end) character offsets of the captured ELEMENT(S) in the
-    source html (lists repeat per item; nugget captures sit on text
-    nodes and carry no element span). Off by default — the span
-    parse annotates every tag node, so the plain path stays lean.
+    source html: from its start tag's ``<`` to just past the ``>`` of
+    the end tag that closes it, or of its start tag when it has none
+    (void, self-closing, implicitly closed). Lists repeat per item;
+    nugget captures sit on text nodes and carry no element span. Off
+    by default — spans come from the stdlib token source, so the
+    plain path keeps the fast one.
     """
     functions = functions or {}
     n_nodes = 0
