@@ -1446,45 +1446,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "og_title", "lang_attr", "h1", "status")
     q["page_meta"] = page_meta
 
-    # ---- snapshot-log table semantics (Iceberg stand-in,
-    # sources/snaptable.py), ORACLE-VALUE-CHECKED: two appends + an
-    # overwrite over partitions of `documents`, then time travel to
-    # every version plus an incremental read — row counts and id sums
-    # must equal DuckDB's closed-form per-partition aggregates ------------
-    def snap_versions(spark, sf):
-        import shutil
-        import tempfile
-        from weakscraper_spark.sources.snaptable import SnapTable
-        docs = _t(spark, sf, "documents").select("doc_id")
-        root = tempfile.mkdtemp(prefix="snapq_")
-        try:
-            t = SnapTable(spark, root)
-            t.commit_append(docs.filter(F.col("doc_id") % 3 == 0))
-            t.commit_append(docs.filter(F.col("doc_id") % 3 == 1))
-            t.commit_overwrite(docs.filter(F.col("doc_id") % 3 == 2))
-
-            def summarize(df, tag):
-                return (df.agg(F.count("*").alias("n_rows"),
-                               F.sum("doc_id").alias("sum_ids"))
-                        .select(F.lit(tag).cast("long").alias("version"),
-                                "n_rows", "sum_ids"))
-
-            out = summarize(t.read(version=1), 1)
-            out = out.unionByName(summarize(t.read(version=2), 2))
-            out = out.unionByName(summarize(t.read(version=3), 3))
-            out = out.unionByName(summarize(t.incremental(1, 2), 99))
-            # 4 summary rows, collected EAGERLY so the staged table
-            # can be deleted — repeated driver/ledger sampling was
-            # accumulating an orphan temp table per call (ADVICE r04);
-            # the returned DF is rebuilt from the local rows and is
-            # safe to re-collect after the rmtree
-            rows = out.collect()
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-        return spark.createDataFrame(
-            rows, "version long, n_rows long, sum_ids long")
-    q["snap_versions"] = snap_versions
-
     # ---- raw-crawl extraction: synth pages packed into gzip'd WARC
     # archives IN-STAGE → record parse → charset decode → template
     # extract → dedup-latest, hash-compared against staged truth -----------
@@ -2191,8 +2152,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- bucketed co-located join (plans/bucketing.py): both sides
     # written bucketBy(8, doc_id) then joined with ZERO Exchange
-    # (plan contract in tests/test_bucketing.py); eager collect +
-    # table/file cleanup per the snap_versions discipline. The join
+    # (plan contract in tests/test_bucketing.py); the summary rows are
+    # collected eagerly so the staged tables can be deleted. The join
     # output is AGGREGATED per key range before the collect (r05
     # advice: collecting the raw join rows scaled linearly with sf —
     # a driver-memory hotspot; the checksum rollup is ≤5 rows at any
@@ -2832,7 +2793,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_graph", "host_rank", "anchor_topk", "mix_corpus",
         "srp_overcap", "lsh_near_dup", "lsh_ann_topk",
         "extract_pages", "boiler_extract", "raw_extract",
-        "web_corpus", "frontier", "corpus_clean", "snap_versions",
+        "web_corpus", "frontier", "corpus_clean",
         "extract_rescued", "source_acd", "bpe_merges",
     ]
     return {**{k: q[k] for k in _sample_first},
@@ -4199,20 +4160,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CAST(round(s.avg_logprob, 4) AS DECIMAL(18,4))
                         AS VARCHAR) AS avg_logprob
             FROM tk LEFT JOIN s USING (doc_id)
-        """,
-        "snap_versions": """
-            SELECT 1::BIGINT AS version, count(*) AS n_rows,
-                   sum(doc_id)::BIGINT AS sum_ids
-            FROM documents WHERE doc_id % 3 = 0
-            UNION ALL
-            SELECT 2, count(*), sum(doc_id)::BIGINT
-            FROM documents WHERE doc_id % 3 IN (0, 1)
-            UNION ALL
-            SELECT 3, count(*), sum(doc_id)::BIGINT
-            FROM documents WHERE doc_id % 3 = 2
-            UNION ALL
-            SELECT 99, count(*), sum(doc_id)::BIGINT
-            FROM documents WHERE doc_id % 3 = 1
         """,
         "warc_ingest": """
             SELECT 'https://w' || (doc_id % 20)::VARCHAR

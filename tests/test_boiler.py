@@ -275,3 +275,56 @@ def test_null_html_becomes_status_row_not_batch_failure(spark):
     st2 = {r.url: r.status for r in heuristic_extract(
         df.select("url", "warc_ts", "html")).collect()}
     assert st2["u1"] == "error:NullInput"
+
+
+def test_unreadable_marked_section_is_one_status_row(spark, synth_df):
+    """A page holding a marked section the stdlib tokenizer cannot name
+    (``<![1]>``) becomes one status row in each extractor — template
+    path, template path with heuristic rescue, and heuristic alone — and
+    every other row of its Arrow batch comes out as it does without
+    it."""
+    import datetime as dt
+
+    from weakscraper_spark.operators.extract import extract_pages
+    from weakscraper_spark.plans.pipeline import (
+        attach_template, prepare_pages)
+    from weakscraper_spark.sources.synth import (
+        compiled_specs, synth_templates)
+
+    good = [tuple(r) for r in attach_template(
+        prepare_pages(synth_df), synth_templates(spark))
+        .select("url", "warc_ts", "template_id", "html").limit(40)
+        .collect()]
+    bad = f"<html><body><h1>a</h1><![1]><p>{PROSE}</p></body></html>"
+    ts = dt.datetime(2026, 1, 1)
+    bad_rows = [("bad_tpl", ts, "t_article", bad.encode()),
+                ("bad_none", ts, None, bad.encode())]
+    specs = compiled_specs()
+
+    def run(op, rows):
+        # one partition: all rows travel in one Arrow batch
+        df = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, template_id string, "
+                  "html binary").coalesce(1)
+        return {r.url: {k: v for k, v in r.asDict().items()
+                        if k != "parse_ms"}
+                for r in op(df).collect()}
+
+    ops = {
+        "template": lambda df: extract_pages(df, specs),
+        "rescue": lambda df: extract_pages(df, specs,
+                                           fallback="heuristic"),
+        "heuristic": lambda df: heuristic_extract(
+            df.select("url", "warc_ts", "html")),
+    }
+    want_bad = {
+        "template": ("mismatch:MarkupError", "error:NoTemplate"),
+        "rescue": ("mismatch:MarkupError", "error:NoTemplate"),
+        "heuristic": ("mismatch:MarkupError", "mismatch:MarkupError"),
+    }
+    for name, op in ops.items():
+        alone = run(op, good)
+        mixed = run(op, good[:20] + bad_rows + good[20:])
+        assert (mixed.pop("bad_tpl")["status"],
+                mixed.pop("bad_none")["status"]) == want_bad[name], name
+        assert mixed == alone, name

@@ -5,7 +5,8 @@ local Spark → full C1→C10 pipeline. Asserts:
 - mismatch/malformed rows surface as status rows, never failures;
 - exactly-once resume (partial write → rerun → no duplicates, C9);
 - salting invariance (same aggregates with S=1 vs S=16, C8);
-- per-partition lineage metrics reconcile with output counts (C13).
+- per-partition lineage metrics reconcile with output counts (C13);
+- the run report, observed on the write job, equals the sink.
 """
 
 import pytest
@@ -138,10 +139,13 @@ def test_resume_exactly_once(spark, corpus, tmp_path):
     assert out.groupBy("url").count().filter("count > 1").count() == 0
     assert r1["rows_written"] + r2["rows_written"] == n_urls
 
-    # metrics are per-increment: summing the metrics table equals the
-    # sink count exactly (no double counting across resume runs)
-    m = spark.read.parquet(r2["metrics_out"])
-    assert m.agg(F.sum("n_pages")).first()[0] == n_urls
+    # reports are per-increment: summing them equals the sink count
+    # exactly (no double counting across resume runs), and so does
+    # summing the per-partition rows read over each run's partition
+    assert sum(r["ok_written"] + r["n_fail"] for r in (r1, r2)) == n_urls
+    assert sum(partition_metrics(out.filter(F.col("run_id") == rid), rid)
+               .agg(F.sum("n_pages")).first()[0]
+               for rid in ("r1", "r2")) == n_urls
     # same-run_id retry overwrites its own partition with the same
     # rows (resume excludes the current run from the done-set, so a
     # retry of a partial write re-processes its own share) — the sink
@@ -164,6 +168,8 @@ def test_resume_noop_run_writes_nothing(spark, corpus, tmp_path):
     r2 = run_pipeline(spark, pages, templates, specs, out_dir,
                       run_id="b")
     assert r2["rows_written"] == 0 and r2["ok_written"] == 0
+    assert r2["n_fail"] == r2["rescued"] == r2["n_nodes"] == 0
+    assert r2["cpu_ms"] == 0
     assert spark.read.parquet(r2["pages_out"]).count() == r1["rows_written"]
 
 
@@ -313,21 +319,52 @@ def test_run_pipeline_with_heuristic_fallback(fallback_run):
 def test_heuristic_rescues_count_as_ok_in_every_metric(spark,
                                                        fallback_run):
     """One status taxonomy: a heuristic rescue is a success in the
-    run's ``ok_written``, in the per-partition ``n_ok``/``n_fail``
-    lineage and in the worst-host report, not only in the sink."""
+    run report's ``ok_written``/``n_fail``, in the per-partition
+    ``n_ok``/``n_fail`` lineage over the sink and in the worst-host
+    report, not only in the sink."""
     r, sink = fallback_run
     n = sink.count()
     n_ok = sink.filter("status IN ('ok', 'ok_heuristic')").count()
     assert sink.filter("status = 'ok_heuristic'").count() > 0
     assert r["rows_written"] == n
-    assert r["ok_written"] == n_ok
-    m = (spark.read.parquet(r["metrics_out"])
+    assert (r["ok_written"], r["n_fail"]) == (n_ok, n - n_ok)
+    m = (partition_metrics(sink, "fb0")
          .agg(F.sum("n_ok").alias("ok"), F.sum("n_fail").alias("f"))
          .first())
     assert (m["ok"], m["f"]) == (n_ok, n - n_ok)
     hosts = host_report(sink, k=10_000).collect()
     assert sum(h["n_pages"] for h in hosts) == n
     assert sum(h["n_fail"] for h in hosts) == n - n_ok
+
+
+def test_run_report_equals_sink(fallback_run):
+    """The report observed on the write job holds the counts and sums a
+    read of the sink gives, and the run writes nothing but its sink
+    partition."""
+    import os
+
+    r, sink = fallback_run
+    want = sink.agg(
+        F.count(F.lit(1)).alias("rows_written"),
+        F.count_if(F.col("status").isin("ok", "ok_heuristic"))
+        .alias("ok_written"),
+        F.count_if(F.col("status") == "ok_heuristic").alias("rescued"),
+        F.sum("n_nodes").alias("n_nodes"),
+        F.sum("n_bytes").alias("bytes_in"),
+        F.sum("parse_ms").alias("cpu_ms"),
+        F.min("parse_ms").alias("lo"), F.max("parse_ms").alias("hi"),
+    ).first()
+    for k in ("rows_written", "ok_written", "rescued", "n_nodes",
+              "bytes_in"):
+        assert r[k] == want[k], k
+    assert r["rescued"] > 0
+    assert r["n_fail"] == want["rows_written"] - want["ok_written"] > 0
+    assert r["cpu_ms"] == pytest.approx(want["cpu_ms"])
+    assert want["lo"] <= r["parse_ms_p50"] <= r["parse_ms_p99"] \
+        <= want["hi"]
+    out_dir = os.path.dirname(r["pages_out"])
+    assert os.listdir(out_dir) == ["pages_out"]
+    assert os.listdir(r["pages_out"]) == ["run_id=fb0"]
 
 
 def test_corpus_pipeline_end_to_end(spark, tmp_path):
@@ -379,17 +416,3 @@ def test_frontier_pipeline_end_to_end(spark):
                         "https://b.com/z"}
     assert out["https://a.com/x"].n_variants == 2
     assert all(0 <= r.slot < 2 and r.wave == 0 for r in out.values())
-
-
-def test_catalog_parquet_seam(spark, tmp_path):
-    """The Catalog read/append/overwrite seam on its executable
-    (parquet) branch — the exact call sites prod swaps to Iceberg."""
-    from weakscraper_spark.sources.tables import Catalog
-    cat = Catalog(spark, fmt="parquet")
-    ref = str(tmp_path / "t")
-    df = spark.range(5).withColumnRenamed("id", "v")
-    cat.append(df, ref)
-    cat.append(df, ref)
-    assert cat.read(ref).count() == 10
-    cat.overwrite_partitions(df, ref)
-    assert cat.read(ref).count() == 5

@@ -10,8 +10,11 @@ spark-submit --py-files"):
 
 Subcommands:
     synth    — write a deterministic CC-style pages table
-    extract  — run the full pipeline (resume-aware) into a sink dir
-    report   — worst-host top-k + per-partition metrics from a sink
+    extract  — run the full pipeline (resume-aware) into a sink dir;
+               prints the run report (counts, sums, parse-time
+               percentiles) as one JSON object
+    report   — the k worst hosts of a sink by fail rate, one JSON
+               object (host, n_pages, n_fail, fail_rate) per line
 
 Imports are absolute so the file also runs as a plain script (the
 spark-submit form above), not only as ``python -m weakscraper_spark``.

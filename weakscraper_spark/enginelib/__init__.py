@@ -9,6 +9,7 @@ from .errors import (  # noqa: F401
     AttrsError,
     CompareError,
     ExcessNodeError,
+    MarkupError,
     MissingNodeError,
     NodetypeError,
     NonAtomicChildError,

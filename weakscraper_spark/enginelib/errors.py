@@ -59,5 +59,10 @@ class NonAtomicChildError(CompareError):
     """wp-name capture requires exactly one text child (SURVEY A7)."""
 
 
+class MarkupError(CompareError):
+    """The page holds markup the stdlib tokenizer cannot read (a
+    marked section it cannot name, such as ``<![1]>``)."""
+
+
 class TemplateError(Exception):
     """Invalid template (compile-time, driver-side only — may raise)."""

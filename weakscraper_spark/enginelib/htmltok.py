@@ -59,6 +59,8 @@ import re
 from html import unescape
 from html.parser import HTMLParser
 
+from .errors import MarkupError
+
 # ASCII whitespace: every character that ends a stdlib tag name (tab,
 # LF, CR, FF, space); other \s characters would extend it there.
 _W = r"[ \t\n\r\f]"
@@ -158,12 +160,18 @@ class _StdlibTokens(HTMLParser):
 
 def tokens(html: str, spans: bool = False) -> list[Token]:
     """The tokens of ``html``: the fast source's when it accepts the
-    document and no spans are asked for, else the stdlib source's."""
+    document and no spans are asked for, else the stdlib source's.
+    Raises :class:`MarkupError` on a page the stdlib cannot read, so
+    callers that map ``CompareError`` to a status row cover it."""
     if not spans:
         toks = tokenize(html)
         if toks is not None:
             return toks
     src = _StdlibTokens(html, spans)
-    src.feed(html)
-    src.close()
+    try:
+        src.feed(html)
+        src.close()
+    except AssertionError as e:
+        # _markupbase's answer to a marked section it cannot name
+        raise MarkupError(str(e)) from None
     return src.toks

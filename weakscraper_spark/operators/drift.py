@@ -128,8 +128,8 @@ def snapshot_change_rate(old: DataFrame, new: DataFrame,
     when the snapshots share no key.
 
     Precondition: ``key_col`` is unique within each snapshot (crawl
-    tables are latest-per-url by construction — dedup_latest /
-    SnapTable upstream). For a key present in both, the NEW side's
+    tables are latest-per-url by construction — dedup_latest
+    upstream). For a key present in both, the NEW side's
     group labels the row (a url that moved hosts counts under its
     current home). Presence is tracked by SIDE, not hash nullness
     (r05 review): a fetch-failed row with a NULL hash still counts in

@@ -29,6 +29,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..enginelib.boiler import main_text
+from ..enginelib.errors import MarkupError
 
 HEURISTIC_SCHEMA = (
     "url string, warc_ts timestamp, status string, text string, "
@@ -42,12 +43,12 @@ def heuristic_extract(df: DataFrame, mode: str = "largest",
                       spans: bool = False) -> DataFrame:
     """(url, warc_ts, html) → main-content rows via boilerplate
     stripping. ``status`` is 'ok' when at least one block classified
-    as content, else 'empty' (never raises — parser is tolerant and
-    the classifier is total). ``spans=True`` appends ``spans_json``
-    ({"_main_text": [[start, end), ...]}, covering source spans of the
-    selected content blocks) — same shape as extract_pages' heuristic
-    fallback, so the north rule's text/spans leg holds template-less
-    too."""
+    as content, else 'empty', or ``mismatch:MarkupError`` for a page
+    the tokenizer cannot read (never raises: the classifier is total).
+    ``spans=True`` appends ``spans_json`` ({"_main_text": [[start,
+    end), ...]}, covering source spans of the selected content
+    blocks) — same shape as extract_pages' heuristic fallback, so the
+    north rule's text/spans leg holds template-less too."""
     import json
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -80,7 +81,12 @@ def heuristic_extract(df: DataFrame, mode: str = "largest",
                     html = bytes(raw).decode("utf-8", errors="replace")
                     out["n_bytes"][j] = len(raw)
                 t0 = perf_counter()
-                r = main_text(html, mode=mode, spans=spans)
+                try:
+                    r = main_text(html, mode=mode, spans=spans)
+                except MarkupError as e:
+                    out["status"][j] = e.status
+                    out["text"][j] = ""
+                    continue
                 out["parse_ms"][j] = (perf_counter() - t0) * 1e3
                 out["status"][j] = "ok" if r["n_content_blocks"] else "empty"
                 out["text"][j] = r["text"]

@@ -3,7 +3,8 @@ SHUFFLE-MINIMAL order:
 
     scan → filter/project → resume-anti-join → attach-template
     (broadcast, map-side) → [optional salt/repartition] → mapInPandas
-    extract → dedup-latest on the NARROW output → sink + metrics.
+    extract → dedup-latest on the NARROW output → sink, whose write
+    job also reports the run (one ``Observation``).
 
 Why extract-first / dedup-after (the load-bearing scale decision):
 the heavy column is ``html`` (~50 KB/row at CC scale). A pre-extract
@@ -39,7 +40,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages, status_ok
@@ -175,6 +176,9 @@ def host_report(out: DataFrame, k: int = 10) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def partition_metrics(out: DataFrame, run_id: str) -> DataFrame:
+    """Per-partition rows of ``out``, labelled ``run_id``: a lazy view
+    read over the sink (one run's partition) or any extract output.
+    ``run_pipeline`` never runs it; its own report is run-level."""
     return (
         out.groupBy("partition_id")
         .agg(F.count("*").alias("n_pages"),
@@ -238,7 +242,9 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     double-appending, so the sink append is idempotent (the parquet
     stand-in for an Iceberg transactional commit). Consumers read
     ``pages_out`` whole; latest-per-url serving view =
-    ``dedup_latest(sink)``.
+    ``dedup_latest(sink)``; per-partition lineage =
+    ``partition_metrics`` over the sink (every row keeps its
+    ``partition_id``).
 
     Resume: the done-set (url, max extracted warc_ts) is computed
     from the sink and MATERIALIZED via ``localCheckpoint(eager=True)``
@@ -246,11 +252,16 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     directory it is appending to (self-referential read/write; Iceberg
     snapshot isolation solves this in prod).
 
-    Metrics are computed from the just-written increment partition
-    only — never a re-scan of the cumulative sink (at production
-    scale the sink is the whole corpus)."""
+    The run report rides the write job as one ``Observation``: no job
+    runs after the write. Counts follow ``status_ok()``; a NULL or
+    unknown status counts in ``n_fail``, so ``ok_written + n_fail ==
+    rows_written``. ``rescued`` counts heuristic rescues (already in
+    ``ok_written``); ``cpu_ms`` is Σ``parse_ms``; the parse-time
+    percentiles are NULL on a 0-row run. Every observed aggregate is
+    one that cannot throw (``try_sum``, not ``sum``): an observed
+    aggregate that throws leaves ``Observation.get`` blocked instead
+    of failing the run."""
     pages_out = os.path.join(out_dir, "pages_out")
-    metrics_out = os.path.join(out_dir, "metrics")
     inc_path = os.path.join(pages_out, f"run_id={run_id}")
 
     done = None
@@ -269,88 +280,28 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
                               done_urls=done, n_salts=n_salts,
                               num_partitions=num_partitions,
                               fallback=fallback)
-    # C13 observe: row/ok counts ride along with the write job itself
-    # (accumulator-style) — no extra scan of the increment for them
-    from pyspark.sql import Observation
+    ok = F.coalesce(status_ok(), F.lit(False))
     obs = Observation()
     plan = plan.observe(
-        obs, F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(status_ok(), 1).otherwise(0)).alias("ok"))
+        obs,
+        F.count(F.lit(1)).alias("rows_written"),
+        F.count_if(ok).alias("ok_written"),
+        F.count_if(~ok).alias("n_fail"),
+        F.count_if(F.col("status") == "ok_heuristic").alias("rescued"),
+        F.try_sum("n_nodes").alias("n_nodes"),
+        F.try_sum("n_bytes").alias("bytes_in"),
+        F.try_sum("parse_ms").alias("cpu_ms"),
+        F.percentile_approx("parse_ms", 0.5).alias("parse_ms_p50"),
+        F.percentile_approx("parse_ms", 0.99).alias("parse_ms_p99"))
 
     t0 = time.perf_counter()
     plan.write.mode("overwrite").parquet(inc_path)
     wall_s = time.perf_counter() - t0
-    counts = obs.get
-
-    # per-partition lineage reads the increment partition only
-    # (explicit schema: a fully-resumed run writes a 0-row increment,
-    # which has no parquet footer to infer from)
-    inc = spark.read.schema(plan.schema).parquet(inc_path)
-    metrics = partition_metrics(inc, run_id)
-    # same per-run overwrite idempotence as the sink (run_id comes
-    # back as the hive partition key on read)
-    metrics.drop("run_id").write.mode("overwrite").parquet(
-        os.path.join(metrics_out, f"run_id={run_id}"))
-
-    return {"rows_written": counts["n"], "ok_written": counts["ok"] or 0,
-            "wall_s": wall_s,
-            "pages_out": pages_out, "metrics_out": metrics_out}
-
-
-def run_pipeline_snap(spark: SparkSession, pages: DataFrame,
-                      templates: DataFrame, specs: dict[str, str],
-                      table_root: str,
-                      langs: list[str] | None = None,
-                      n_salts: int = 0,
-                      num_partitions: int | None = None,
-                      fallback: str | None = None) -> dict:
-    """The snapshot-table sink variant (sources/snaptable.py — the
-    Iceberg-semantics flow the prod catalog provides): the MANIFEST
-    COMMIT is the checkpoint barrier, which makes exactly-once
-    SIMPLER than the hive-partition sink:
-
-    - a run that crashes anywhere before its commit leaves ZERO
-      visible rows (only unreferenced orphan files) — the retry's
-      done-set is computed from the last committed snapshot, so it
-      simply re-extracts the uncommitted work; no per-run overwrite
-      keying, no partial-partition window;
-    - a duplicate invocation after success finds every url already
-      at its max warc_ts in the table → the anti-join empties the
-      plan → an empty (harmless, history-visible) append;
-    - consumers time-travel (`read(version=…)`) or consume ONLY an
-      increment (`incremental(v-1, v)`) — which is also how this
-      function computes per-partition metrics without re-scanning
-      the cumulative table.
-    """
-    from ..sources.snaptable import SnapTable
-    from pyspark.sql import Observation
-
-    t = SnapTable(spark, table_root)
-    done = None
-    if t.current_version():
-        done = (t.read()
-                .groupBy("url").agg(F.max("warc_ts").alias("done_ts"))
-                .localCheckpoint(eager=True))
-    plan = build_extract_plan(pages, templates, specs, langs=langs,
-                              done_urls=done, n_salts=n_salts,
-                              num_partitions=num_partitions,
-                              fallback=fallback)
-    obs = Observation()
-    plan = plan.observe(
-        obs, F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(status_ok(), 1).otherwise(0)).alias("ok"))
-
-    t0 = time.perf_counter()
-    version = t.commit_append(plan)
-    wall_s = time.perf_counter() - t0
-    counts = obs.get
-
-    inc = t.incremental(version - 1, version)
-    metrics = partition_metrics(inc, f"v{version}")
-    return {"rows_written": counts["n"],
-            "ok_written": counts["ok"] or 0, "version": version,
-            "wall_s": wall_s, "table_root": table_root,
-            "n_metric_partitions": metrics.count()}
+    report = obs.get
+    if not report["rows_written"]:
+        # try_sum over no rows is NULL; the empty run sums to 0
+        report.update(n_nodes=0, bytes_in=0, cpu_ms=0.0)
+    return {**report, "wall_s": wall_s, "pages_out": pages_out}
 
 
 def compact_sink(spark: SparkSession, pages_out: str,
@@ -373,8 +324,6 @@ def compact_sink(spark: SparkSession, pages_out: str,
     both) on disk — never neither. The row count rides the write as an
     ``Observation`` (no second full read of the compacted output)."""
     import shutil
-
-    from pyspark.sql import Observation
 
     sink = spark.read.parquet(pages_out)
     old_parts = [d for d in os.listdir(pages_out)
