@@ -1828,25 +1828,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                              seed=5, num_partitions=8)
     q["epoch_shuffle"] = epoch_shuffle
 
-    # ---- HTML → Markdown conversion (structure-preserving text):
-    # ORACLE-VALUE-CHECKED via staged generator truth — synthmd
-    # constructs the markdown INDEPENDENTLY of the converter, so a
-    # hash match here certifies the converter's rules end-to-end, not
-    # a tautology. Narrow map only (plan-asserted in
-    # tests/test_markdown.py) ------------------------------------------------
-    def md_convert(spark, sf):
-        from weakscraper_spark.operators.markdown import html_to_markdown
-        from weakscraper_spark.sources.synthmd import synth_md_pages
-        n = 1500 if "0.01" in sf else (15000 if "0.1" in sf else 400)
-        pages = synth_md_pages(spark, n)
-        _stage_truth(pages.select("url", "md", "n_blocks"),
-                     "md_convert")
-        return (html_to_markdown(pages)
-                .select("url", "status",
-                        F.col("markdown").alias("md"),
-                        F.col("n_blocks").cast("int").alias("n_blocks")))
-    q["md_convert"] = md_convert
-
     # ---- RSS/Atom feed ingestion (operators/feeds.py): synthesize
     # 10 RSS + 10 Atom feeds deterministically from doc_id arithmetic
     # (CDATA titles, entity-escaped hrefs, guid attributes, Atom
@@ -2767,9 +2748,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (1) brand-new queries (template_refresh, semantic_dedup),
     # (2) queries whose oracle or semantics changed this round
     # (r06 staged-truth promotions pdf_pages/compression_ratios/
-    # induce_hosts; md_convert n_blocks staging; bucketed_join
-    # pre-collect aggregate; feed_discovery base-href fix;
-    # dup/trim_substrings localCheckpoint; ivf_ann_topk init change),
+    # induce_hosts; bucketed_join pre-collect aggregate;
+    # feed_discovery base-href fix; dup/trim_substrings
+    # localCheckpoint; ivf_ann_topk init change),
     # (3) rotation of the rest.
     _sample_first = [
         "warc_cdx", "redirect_map", "warc_write", "minhash_incr",
@@ -2778,7 +2759,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_noindex", "canonical_groups", "recrawl_plan",
         "unicode_scrub", "script_mix",
         "surt_keys", "cdx_records", "cdx_dedup", "pdf_pages",
-        "compression_ratios", "induce_hosts", "md_convert",
+        "compression_ratios", "induce_hosts",
         "bucketed_join", "feed_discovery", "dup_substrings",
         "trim_substrings", "ivf_ann_topk",
         "feed_entries", "feed_headers", "html_tables", "table_stats",
@@ -4741,10 +4722,6 @@ def oracle_sql() -> dict[str, str]:
         "extract_spans": f"""
             SELECT url, warc_ts, span_start, span_end
             FROM read_parquet('{_TRUTH_ROOT}/extract_spans/*.parquet')
-        """,
-        "md_convert": f"""
-            SELECT url, 'ok' AS status, md, n_blocks
-            FROM read_parquet('{_TRUTH_ROOT}/md_convert/*.parquet')
         """,
         "pdf_pages": f"""
             SELECT doc_id, page_no, n_lines, n_bytes

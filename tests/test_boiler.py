@@ -282,7 +282,7 @@ def test_unreadable_marked_section_is_one_status_row(spark, synth_df):
     (``<![1]>``) becomes one status row in each extractor — template
     path, template path with heuristic rescue, and heuristic alone — and
     every other row of its Arrow batch comes out as it does without
-    it."""
+    it. The heuristic alone reports the time it spent parsing it."""
     import datetime as dt
 
     from weakscraper_spark.operators.extract import extract_pages
@@ -306,9 +306,11 @@ def test_unreadable_marked_section_is_one_status_row(spark, synth_df):
         df = spark.createDataFrame(
             rows, "url string, warc_ts timestamp, template_id string, "
                   "html binary").coalesce(1)
-        return {r.url: {k: v for k, v in r.asDict().items()
-                        if k != "parse_ms"}
-                for r in op(df).collect()}
+        return {r.url: r.asDict() for r in op(df).collect()}
+
+    def timeless(rows):
+        return {url: {k: v for k, v in r.items() if k != "parse_ms"}
+                for url, r in rows.items()}
 
     ops = {
         "template": lambda df: extract_pages(df, specs),
@@ -325,6 +327,8 @@ def test_unreadable_marked_section_is_one_status_row(spark, synth_df):
     for name, op in ops.items():
         alone = run(op, good)
         mixed = run(op, good[:20] + bad_rows + good[20:])
-        assert (mixed.pop("bad_tpl")["status"],
-                mixed.pop("bad_none")["status"]) == want_bad[name], name
-        assert mixed == alone, name
+        bad_out = [mixed.pop("bad_tpl"), mixed.pop("bad_none")]
+        assert tuple(r["status"] for r in bad_out) == want_bad[name], name
+        if name == "heuristic":
+            assert all(r["parse_ms"] > 0 for r in bad_out)
+        assert timeless(mixed) == timeless(alone), name

@@ -4,8 +4,7 @@ straight on ``HTMLParser`` callbacks:
 
 - differential: on generated documents, real fixture pages/templates
   and synth pages, ``parse_html_counted`` / ``parse_template_html``
-  give the oracle's (tree, n_nodes), markdown's tree is the oracle's
-  with whitespace-only text kept, and ``segment_blocks`` gives the
+  give the oracle's (tree, n_nodes) and ``segment_blocks`` gives the
   oracle's blocks — whether the fast path accepts the document or
   falls back; the stdlib source with spans on gives the same trees
   and blocks on every document;
@@ -19,7 +18,7 @@ from html.parser import HTMLParser
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from weakscraper_spark.enginelib import dom, markdown
+from weakscraper_spark.enginelib import dom
 from weakscraper_spark.enginelib.boiler import (
     BLOCK_TAGS, IGNORED_SUBTREES, _segment, segment_blocks)
 from weakscraper_spark.enginelib.htmltok import tokenize, tokens
@@ -34,10 +33,9 @@ class _OracleTree(HTMLParser):
     """Stack-based tree build on the stdlib callbacks: stray end tags
     are ignored, unclosed tags close at EOF."""
 
-    def __init__(self, void, keep_ws):
+    def __init__(self, void):
         super().__init__(convert_charrefs=True)
         self.void = void
-        self.keep_ws = keep_ws
         self.root = dom.tag_node("root", {})
         self.stack = [self.root]
         self.n_nodes = 0
@@ -59,7 +57,7 @@ class _OracleTree(HTMLParser):
                 return
 
     def handle_data(self, data):
-        if data and (self.keep_ws or not data.isspace()):
+        if data and not data.isspace():
             self.stack[-1]["children"].append(
                 {"nodetype": "text", "content": data})
             self.n_nodes += 1
@@ -119,8 +117,8 @@ def _oracle(parser, html):
     return parser
 
 
-def _stdlib_tree(void, html, keep_ws=False):
-    b = _oracle(_OracleTree(void, keep_ws), html)
+def _stdlib_tree(void, html):
+    b = _oracle(_OracleTree(void), html)
     return b.root, b.n_nodes
 
 
@@ -152,8 +150,6 @@ def assert_matches_stdlib(html):
             (tpl_root, tpl_n)
     blocks = _stdlib_blocks(html)
     assert _blocks(segment_blocks(html)) == blocks
-    assert markdown._parse(html) == \
-        _stdlib_tree(dom.VOID_ELEMENTS, html, keep_ws=True)[0]
     # the stdlib source (spans on) on every document, accepted or not
     stdlib = tokens(html, spans=True)
     tree, n = dom._build(stdlib, dom.VOID_ELEMENTS)

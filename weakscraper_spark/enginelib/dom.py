@@ -67,8 +67,7 @@ def is_text(node: Node) -> bool:
     return node["nodetype"] == "text"
 
 
-def _build(toks: list, void: frozenset[str],
-           keep_ws: bool = False) -> tuple[Node, int]:
+def _build(toks: list, void: frozenset[str]) -> tuple[Node, int]:
     """The tree and node count of ``htmltok`` tokens: a name stack
     beside the stack of open children lists, and node dicts built in
     place (this loop is the extract hot path). The synthetic root
@@ -77,8 +76,7 @@ def _build(toks: list, void: frozenset[str],
     node ``"span": [start, end]``: the start tag's extent, widened to
     the end of the end tag that closes it explicitly (void,
     self-closing and implicitly closed elements have no such token).
-    ``keep_ws`` keeps whitespace-only text, which markdown's inline
-    rendering needs and template matching must not see."""
+    Whitespace-only text, script/style raw text included, is dropped."""
     root = tag_node("root", {})
     cur = root["children"]
     kids = [cur]
@@ -88,7 +86,7 @@ def _build(toks: list, void: frozenset[str],
         if text:
             if "&" in text:
                 text = unescape(text)
-            if keep_ws or not text.isspace():
+            if not text.isspace():
                 cur.append({"nodetype": "text", "content": text})
                 n += 1
         elif name:
@@ -126,7 +124,7 @@ def _build(toks: list, void: frozenset[str],
         elif rname:
             # script/style: start tag, raw text child and close in one
             children = ([{"nodetype": "text", "content": raw}]
-                        if raw and (keep_ws or not raw.isspace()) else [])
+                        if raw and not raw.isspace() else [])
             cur.append({"nodetype": "tag", "name": rname.lower(),
                         "attrs": parse_attrs(rattrs) if rattrs else {},
                         "children": children})

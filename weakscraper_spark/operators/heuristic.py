@@ -38,13 +38,14 @@ HEURISTIC_SCHEMA = (
 )
 
 
-def heuristic_extract(df: DataFrame, mode: str = "largest",
-                      html_col: str = "html",
-                      spans: bool = False) -> DataFrame:
+def heuristic_extract(df: DataFrame, spans: bool = False) -> DataFrame:
     """(url, warc_ts, html) → main-content rows via boilerplate
-    stripping. ``status`` is 'ok' when at least one block classified
+    stripping. The text is the content block with the most words
+    (``main_text``'s 'largest' mode, as in extract_pages' in-stage
+    rescue). ``status`` is 'ok' when at least one block classified
     as content, else 'empty', or ``mismatch:MarkupError`` for a page
     the tokenizer cannot read (never raises: the classifier is total).
+    ``parse_ms`` is the parse time, an unreadable page's included.
     ``spans=True`` appends ``spans_json`` ({"_main_text": [[start,
     end), ...]}, covering source spans of the selected content
     blocks) — same shape as extract_pages' heuristic fallback, so the
@@ -66,7 +67,7 @@ def heuristic_extract(df: DataFrame, mode: str = "largest",
             }
             if spans:
                 out["spans_json"] = [None] * n
-            htmls = pdf[html_col].tolist()
+            htmls = pdf["html"].tolist()
             for j in range(n):
                 raw = htmls[j]
                 if raw is None:
@@ -82,8 +83,9 @@ def heuristic_extract(df: DataFrame, mode: str = "largest",
                     out["n_bytes"][j] = len(raw)
                 t0 = perf_counter()
                 try:
-                    r = main_text(html, mode=mode, spans=spans)
+                    r = main_text(html, mode="largest", spans=spans)
                 except MarkupError as e:
+                    out["parse_ms"][j] = (perf_counter() - t0) * 1e3
                     out["status"][j] = e.status
                     out["text"][j] = ""
                     continue
@@ -98,5 +100,5 @@ def heuristic_extract(df: DataFrame, mode: str = "largest",
                 out["n_words"][j] = r["n_words"]
             yield pd.DataFrame(out)
 
-    return df.select("url", "warc_ts", html_col).mapInPandas(
+    return df.select("url", "warc_ts", "html").mapInPandas(
         run, HEURISTIC_SCHEMA + (", spans_json string" if spans else ""))

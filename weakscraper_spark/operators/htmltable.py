@@ -2,8 +2,7 @@
 every table on a page unrolled into long-format cell rows
 ``(url, table_idx, row_idx, col_idx, is_header, cell)``, the shape
 downstream corpus work wants (table-to-text serialization, numeric
-fact harvesting, markdown table reconstruction — `html_to_markdown`
-renders tables as text; this keeps them as DATA).
+fact harvesting): tables kept as DATA, not flattened to text.
 
 Reference parity note: the weakscraper reference extracts fields by
 template position (SURVEY §1); table mining is the template-free
