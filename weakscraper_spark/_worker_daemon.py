@@ -9,16 +9,30 @@ touching those objects in the children, so their pages stay shared
 copy-on-write. The imports are ones every worker does anyway:
 ``pyspark.daemon`` pulls in ``pyspark.worker`` and the Arrow
 serializers, the engine modules pull in pandas, and
-``pyarrow.pandas_compat`` (which imports pyarrow) is what a worker
-imports on its first Arrow→pandas conversion.
+``pyarrow.pandas_compat`` (which imports pyarrow) and
+``pyarrow.vendored.version`` are what a worker imports on its first
+Arrow→pandas conversion.
+
+Before forking, the daemon drops every ``zipimporter`` from
+``sys.path_importer_cache`` (``pyspark.zip`` and its subpackage paths,
+the py4j zip, a spark-core jar). Each task's
+``importlib.invalidate_caches()`` (``worker_util.setup_spark_files``)
+makes every cached ``zipimporter`` re-read its archive's whole central
+directory, which was most of a small task's time. Modules already
+imported do not need their importer; a later import (a pyspark
+submodule not preloaded here, a module from a ``--py-files`` zip)
+creates a new one on demand.
 
 The JVM reads the daemon's port from its stdout, so nothing here may
 print there.
 """
 
 import gc
+import sys
+import zipimport
 
 import pyarrow.pandas_compat  # noqa: F401
+import pyarrow.vendored.version  # noqa: F401
 from pyspark import daemon
 
 import weakscraper_spark.enginelib.induce  # noqa: F401
@@ -26,5 +40,8 @@ import weakscraper_spark.operators.extract  # noqa: F401
 import weakscraper_spark.operators.induction  # noqa: F401
 
 if __name__ == "__main__":
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
     gc.freeze()
     daemon.manager()

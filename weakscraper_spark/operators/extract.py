@@ -10,8 +10,10 @@ Execution model (SURVEY §4.2 flagship trace):
   deserialized via a module-level cache keyed by content hash. The
   session runs one fresh worker per task (``spark.python.worker.reuse``
   off), so the cache dedups within a task's batches; the imports this
-  module needs are paid once, in the preloading worker daemon
-  (``weakscraper_spark._worker_daemon``) the workers fork from.
+  module and the Arrow→pandas conversion need are paid once, in the
+  preloading worker daemon (``weakscraper_spark._worker_daemon``) the
+  workers fork from, which also drops its zip importers so a task
+  re-reads no archive.
 - One bad document can never fail a batch: ``enginelib.match.extract``
   maps every CompareError/RecursionError to a status row (A13).
 - C13 lineage: each output row carries its ``partition_id`` (from

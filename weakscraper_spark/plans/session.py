@@ -17,7 +17,11 @@ local[N]):
   daemon ``weakscraper_spark._worker_daemon``: it imports pandas,
   pyarrow and the engine once, then forks each fresh worker from that
   state, so a task pays a fork instead of ~0.5 s of imports, and the
-  preloaded pages stay shared copy-on-write. The JVM starts the
+  preloaded pages stay shared copy-on-write. It also drops its
+  ``zipimporter`` entries from ``sys.path_importer_cache`` before
+  forking, so a task's ``importlib.invalidate_caches()`` no longer
+  re-reads ``pyspark.zip`` and the other archives; a later import
+  makes a new importer on demand. The JVM starts the
   daemon by module name before any ``--py-files``/``addPyFile`` path
   reaches ``sys.path`` (those are added inside each forked worker),
   so the session also passes the package root — this checkout, or
@@ -45,6 +49,13 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 
+def _local_threads(master: str, cores: int) -> int:
+    """Worker threads of a ``local[N]`` or ``local[*]`` master, also in
+    Spark's max-failures form ``local[N,F]``/``local[*,F]``."""
+    n = master[6:-1].split(",")[0]
+    return cores if n == "*" else int(n)
+
+
 def get_spark(app_name: str = "weakscraper_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -53,9 +64,7 @@ def get_spark(app_name: str = "weakscraper_spark",
     cores = os.cpu_count() or 8
     if shuffle_partitions is None:
         if master.startswith("local["):
-            inner = master[6:-1]
-            n = cores if inner == "*" else int(inner)
-            shuffle_partitions = max(4, 4 * n)
+            shuffle_partitions = max(4, 4 * _local_threads(master, cores))
         else:
             shuffle_partitions = 4 * cores
 
