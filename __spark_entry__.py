@@ -2029,31 +2029,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "n_days")
     q["drift_hosts"] = drift_hosts
 
-    # ---- embedding hygiene (operators/embquality.py): per-vector
-    # diagnostics + per-label norm z-scores over the embeddings
-    # table, both vs full DuckDB list-lambda mirrors --------------------
-    def emb_stats(spark, sf):
-        from weakscraper_spark.operators.embquality import embedding_stats
-        out = embedding_stats(_t(spark, sf, "embeddings"))
-        return out.select(
-            "vec_id", "dim",
-            _dec(F.col("l2_norm"), 6).alias("l2_norm"),
-            _dec(F.col("min_v"), 6).alias("min_v"),
-            _dec(F.col("max_v"), 6).alias("max_v"),
-            "n_nonfinite", "is_degenerate")
-    q["emb_stats"] = emb_stats
-
-    def emb_outliers(spark, sf):
-        from weakscraper_spark.operators.embquality import norm_outliers
-        out = norm_outliers(_t(spark, sf, "embeddings"))
-        return out.select(
-            "vec_id", "label",
-            _dec(F.col("l2_norm"), 6).alias("l2_norm"),
-            _dec(F.col("group_mean"), 6).alias("group_mean"),
-            _dec(F.col("group_std"), 6).alias("group_std"),
-            _dec(F.col("z"), 6).alias("z"))
-    q["emb_outliers"] = emb_outliers
-
     # ---- sentence segmentation (operators/textstats.py): the corpus
     # text gets deterministic terminators injected (after the marker
     # words), then the splitter's boundary-cluster/tail/trim/token
@@ -2763,8 +2738,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bucketed_join", "feed_discovery", "dup_substrings",
         "trim_substrings", "ivf_ann_topk",
         "feed_entries", "feed_headers", "html_tables", "table_stats",
-        "postings_index", "phrase_hits", "drift_hosts", "emb_stats",
-        "emb_outliers", "doc_sentences", "discovered_frontier",
+        "postings_index", "phrase_hits", "drift_hosts",
+        "doc_sentences", "discovered_frontier",
         "snap_change_rate",
         "bpe_encode", "prune_quantile", "fields_long",
         "extract_spans", "induce_roundtrip",
@@ -3321,62 +3296,6 @@ def oracle_sql() -> dict[str, str]:
                    len(string_split_regex(trim(raw), '\\s+'))::INT
                        AS n_tokens
             FROM s WHERE trim(raw) <> ''
-        """,
-        "emb_stats": """
-            WITH s AS (
-                SELECT vec_id,
-                       coalesce(len(embedding), 0)::INT AS dim,
-                       sqrt(list_sum(list_transform(
-                           embedding,
-                           x -> x::DOUBLE * x::DOUBLE))) AS l2,
-                       list_min(embedding)::DOUBLE AS min_v,
-                       list_max(embedding)::DOUBLE AS max_v,
-                       coalesce(len(list_filter(
-                           embedding,
-                           x -> isnan(x::DOUBLE) OR isinf(x::DOUBLE))),
-                           0)::INT AS n_nonfinite
-                FROM embeddings)
-            SELECT vec_id, dim,
-                   CAST(CAST(round(l2, 6) AS DECIMAL(18,6)) AS VARCHAR)
-                       AS l2_norm,
-                   CAST(CAST(round(min_v, 6) AS DECIMAL(18,6))
-                        AS VARCHAR) AS min_v,
-                   CAST(CAST(round(max_v, 6) AS DECIMAL(18,6))
-                        AS VARCHAR) AS max_v,
-                   n_nonfinite,
-                   (dim = 0 OR n_nonfinite > 0 OR isnan(l2) OR l2 = 0
-                    OR l2 IS NULL) AS is_degenerate
-            FROM s
-        """,
-        "emb_outliers": """
-            WITH base AS (
-                SELECT vec_id, label,
-                       sqrt(list_sum(list_transform(
-                           embedding,
-                           x -> x::DOUBLE * x::DOUBLE))) AS l2
-                FROM embeddings
-                WHERE embedding IS NOT NULL
-                  AND len(list_filter(
-                        embedding,
-                        x -> isnan(x::DOUBLE) OR isinf(x::DOUBLE))) = 0),
-            ok AS (
-                SELECT * FROM base
-                WHERE l2 IS NOT NULL AND NOT isnan(l2) AND l2 > 0),
-            st AS (
-                SELECT label, avg(l2) AS m, stddev_pop(l2) AS sd
-                FROM ok GROUP BY label)
-            SELECT vec_id, label,
-                   CAST(CAST(round(l2, 6) AS DECIMAL(18,6)) AS VARCHAR)
-                       AS l2_norm,
-                   CAST(CAST(round(m, 6) AS DECIMAL(18,6)) AS VARCHAR)
-                       AS group_mean,
-                   CAST(CAST(round(sd, 6) AS DECIMAL(18,6)) AS VARCHAR)
-                       AS group_std,
-                   CASE WHEN sd > 0 THEN
-                       CAST(CAST(round((l2 - m) / sd, 6)
-                            AS DECIMAL(18,6)) AS VARCHAR)
-                   END AS z
-            FROM ok JOIN st USING (label)
         """,
         "drift_hosts": """
             WITH obs AS (

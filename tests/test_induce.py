@@ -191,3 +191,39 @@ def test_robust_validation_rejects_overfit_fixed_count_list():
     blob = str(fields)
     for want in ("t42", "u420", "m421", "s42"):
         assert want in blob, (want, fields)
+
+
+def test_induce_templates_samples_only_readable_pages(spark):
+    """Rows with a NULL ``html`` or a NULL host never reach the sample
+    window: a host with some NULL-html rows induces the very template
+    it induces without them, a host whose every page is NULL gets no
+    registry row, rows without a host form no ``t_None`` group, and
+    the job does not fail."""
+    from pyspark.sql import functions as F
+
+    from weakscraper_spark.operators.induction import induce_templates
+    from weakscraper_spark.plans.pipeline import prepare_pages
+    from weakscraper_spark.sources.synth import synth_pages
+
+    pages = (prepare_pages(synth_pages(spark, 200))
+             .select("url", "host", "html").cache())
+    base = {r["host_pattern"]: r.asDict()
+            for r in induce_templates(pages, k=4).collect()}
+    host_a, host_b = sorted(h for h, r in base.items()
+                            if r["status"] == "ok")[:2]
+    null_html = F.lit(None).cast("binary")
+    mixed = (pages.filter(F.col("host") != host_b)
+             .unionByName(pages.filter(F.col("host") == host_a)
+                          .withColumn("url", F.concat("url", F.lit("?n")))
+                          .withColumn("html", null_html))
+             .unionByName(pages.filter(F.col("host") == host_b)
+                          .withColumn("html", null_html))
+             .unionByName(pages.limit(3)
+                          .withColumn("url", F.concat("url", F.lit("?h")))
+                          .withColumn("host", F.lit(None).cast("string"))))
+    got = {r["host_pattern"]: r.asDict()
+           for r in induce_templates(mixed, k=4).collect()}
+    assert host_b not in got and None not in got
+    assert got == {h: r for h, r in base.items() if h != host_b}
+    assert got[host_a]["status"] == "ok"
+    pages.unpersist()

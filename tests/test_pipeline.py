@@ -416,3 +416,208 @@ def test_frontier_pipeline_end_to_end(spark):
                         "https://b.com/z"}
     assert out["https://a.com/x"].n_variants == 2
     assert all(0 <= r.slot < 2 and r.wave == 0 for r in out.values())
+
+
+# ---------------------------------------------------------------------------
+# differential: the Arrow stages against the in-process kernels
+# ---------------------------------------------------------------------------
+
+def _decode_cell(raw):
+    if isinstance(raw, str):
+        return raw, len(raw.encode("utf-8"))
+    return raw.decode("utf-8", errors="replace"), len(raw)
+
+
+def _rescue_text(html, spans):
+    from weakscraper_spark.enginelib.boiler import main_text
+    from weakscraper_spark.enginelib.errors import MarkupError
+    try:
+        m = main_text(html, mode="largest", spans=spans)
+    except MarkupError:
+        return None
+    return m if m["n_content_blocks"] else None
+
+
+def _want_extract(raw, tid, specs, fallback, spans):
+    """One extract_pages row (minus url/warc_ts/partition_id/parse_ms)
+    computed in-process from enginelib.match.extract and
+    boiler.main_text."""
+    import json
+
+    from weakscraper_spark.enginelib.match import extract
+    from weakscraper_spark.enginelib.spec import spec_from_json
+
+    row = {"template_id": tid, "status": "", "error": "", "text": None,
+           "fields_json": None, "n_nodes": 0, "n_bytes": 0}
+    if spans:
+        row["spans_json"] = None
+    if raw is None:
+        row.update(status="error:NullInput", error="html is NULL")
+        return row
+    html, row["n_bytes"] = _decode_cell(raw)
+    spec_json = specs.get(tid) if tid is not None else None
+    if spec_json is None:
+        row.update(status="error:NoTemplate",
+                   error=f"no compiled template for {tid!r}")
+    else:
+        r = extract(spec_from_json(spec_json), html, None, "text",
+                    spans=spans)
+        row.update(status=r["status"], error=r["error"], text=r["text"],
+                   n_nodes=r["n_nodes"])
+        if r["fields"] is not None:
+            row["fields_json"] = json.dumps(
+                r["fields"], sort_keys=True, ensure_ascii=False,
+                default=str)
+        if spans and r.get("spans") is not None:
+            row["spans_json"] = json.dumps(r["spans"], sort_keys=True)
+    if fallback == "heuristic" and row["status"] != "ok":
+        m = _rescue_text(html, spans)
+        if m is not None:
+            row.update(status="ok_heuristic", text=m["text"])
+            if spans:
+                row["spans_json"] = json.dumps(
+                    {"_main_text": m["spans"]}, sort_keys=True)
+    return row
+
+
+def _want_heuristic(raw, spans):
+    """One heuristic_extract row (minus url/warc_ts/partition_id/
+    parse_ms) computed in-process from boiler.main_text."""
+    import json
+
+    from weakscraper_spark.enginelib.boiler import main_text
+    from weakscraper_spark.enginelib.errors import MarkupError
+
+    row = {"status": "", "text": "", "n_blocks": 0,
+           "n_content_blocks": 0, "n_words": 0, "n_bytes": 0}
+    if spans:
+        row["spans_json"] = None
+    if raw is None:
+        row["status"] = "error:NullInput"
+        return row
+    html, row["n_bytes"] = _decode_cell(raw)
+    try:
+        m = main_text(html, mode="largest", spans=spans)
+    except MarkupError as e:
+        row["status"] = e.status
+        return row
+    row.update(status="ok" if m["n_content_blocks"] else "empty",
+               text=m["text"], n_blocks=m["n_blocks"],
+               n_content_blocks=m["n_content_blocks"],
+               n_words=m["n_words"])
+    if spans and m["n_content_blocks"]:
+        row["spans_json"] = json.dumps({"_main_text": m["spans"]},
+                                       sort_keys=True)
+    return row
+
+
+@pytest.fixture(scope="module")
+def differential_inputs(spark):
+    """(rows, specs): the synth corpus with its templates (every fifth
+    page pointed at an unregistered template, so the rescue runs on
+    real pages), every parity-ring fixture under its own template
+    (hooks run unresolved: no ``functions`` are passed), and the edge
+    rows: NULL html, NULL template_id, undecodable bytes, and an
+    unreadable ``<![1]>`` page with and without a template. Each row
+    carries an aware UTC time; one falls in a Los Angeles DST gap and
+    one is NULL."""
+    import datetime as dt
+    import sys
+    from pathlib import Path
+
+    from weakscraper_spark.enginelib import TemplateScraper, spec_to_json
+    from weakscraper_spark.plans.pipeline import (
+        attach_template, prepare_pages)
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "fixtures"))
+    from corpus import FIXTURES
+
+    specs = dict(compiled_specs())
+    cells = [(r.url, r.template_id if i % 5 else "t_missing",
+              bytes(r.html))
+             for i, r in enumerate(attach_template(
+                 prepare_pages(synth_pages(spark, 40, min_words=48)),
+                 synth_templates(spark))
+                 .select("url", "template_id", "html").collect())]
+    for fx in FIXTURES:
+        tid = f"fx_{fx['fixture_id']}"
+        specs[tid] = spec_to_json(
+            TemplateScraper(fx["template"], fx.get("functions")).spec)
+        cells.append((f"fx/{fx['fixture_id']}", tid,
+                      fx["page"].encode("utf-8")))
+    unreadable = ("<html><body><h1>a</h1><![1]><p>"
+                  + " ".join(["word"] * 50) + "</p></body></html>")
+    cells += [("edge/null_html", "t_article", None),
+              ("edge/null_tid", None, cells[1][2]),
+              ("edge/bad_utf8", "t_article",
+               b"<html><body><p>caf\xe9 \xff\xfe</p></body></html>"),
+              ("edge/unreadable_tpl", "t_article", unreadable.encode()),
+              ("edge/unreadable_none", None, unreadable.encode())]
+    utc = dt.timezone.utc
+    base = dt.datetime(2026, 3, 8, 10, 30, tzinfo=utc)  # 02:30 in LA
+    rows = [(url, None if i == 3 else base + dt.timedelta(minutes=7 * i),
+             tid, raw) for i, (url, tid, raw) in enumerate(cells)]
+    return rows, specs
+
+
+@pytest.mark.parametrize("html_type", ["binary", "string"])
+def test_arrow_stages_match_in_process_kernels(spark, differential_inputs,
+                                               html_type):
+    """Every column but ``parse_ms`` of ``extract_pages`` (with and
+    without ``fallback='heuristic'`` and ``spans``) and of
+    ``heuristic_extract`` equals the row computed in-process from
+    ``enginelib.match.extract`` and ``boiler.main_text``. The session
+    runs in a non-UTC time zone, so an echoed ``warc_ts`` that shifted
+    would show."""
+    from weakscraper_spark.operators.extract import extract_pages
+    from weakscraper_spark.operators.heuristic import heuristic_extract
+
+    rows, specs = differential_inputs
+    if html_type == "string":
+        rows = [(u, ts, tid, raw if raw is None
+                 else raw.decode("utf-8", errors="replace"))
+                for u, ts, tid, raw in rows]
+    want_ts = {u: None if ts is None else round(ts.timestamp() * 1e6)
+               for u, ts, _, _ in rows}
+    tz_key = "spark.sql.session.timeZone"
+    tz = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, template_id string, "
+                  f"html {html_type}")
+        pids = {r.url: r.pid for r in df.select(
+            "url", F.spark_partition_id().alias("pid")).collect()}
+        assert len(set(pids.values())) > 1
+
+        def got(out):
+            return {r.url: r.asDict() for r in out.drop("parse_ms")
+                    .withColumn("warc_ts", F.unix_micros("warc_ts"))
+                    .collect()}
+
+        def keyed(u, row):
+            return {"url": u, "warc_ts": want_ts[u], **row,
+                    "partition_id": pids[u]}
+
+        for fallback in (None, "heuristic"):
+            for spans in (False, True):
+                want = {u: keyed(u, _want_extract(raw, tid, specs,
+                                                  fallback, spans))
+                        for u, _, tid, raw in rows}
+                assert got(extract_pages(df, specs, fallback=fallback,
+                                         spans=spans)) == want, \
+                    (fallback, spans)
+                if fallback:
+                    assert any(r["status"] == "ok_heuristic"
+                               for r in want.values())
+        for spans in (False, True):
+            want = {u: keyed(u, _want_heuristic(raw, spans))
+                    for u, _, _, raw in rows}
+            assert got(heuristic_extract(
+                df.select("url", "warc_ts", "html"), spans=spans)) \
+                == want, spans
+        statuses = {r["status"] for r in want.values()}
+        assert {"ok", "error:NullInput",
+                "mismatch:MarkupError"} <= statuses
+    finally:
+        spark.conf.set(tz_key, tz)

@@ -51,18 +51,22 @@ def test_template_join_is_broadcast(nodes):
     assert "SortMergeJoin" not in names
 
 
+#: every Python map node Spark plans for a DataFrame map operator
+PYTHON_MAPS = {"MapInPandas", "MapInArrow"}
+
+
 def test_single_python_stage(nodes):
-    mips = [i for i, n in nodes if n == "MapInPandas"]
-    assert len(mips) == 1, nodes  # exactly one Arrow crossing
+    maps = [n for _, n in nodes if n in PYTHON_MAPS]
+    assert maps == ["MapInArrow"], nodes  # exactly one Arrow crossing
     assert all(n != "BatchEvalPython" for _, n in nodes)  # no row UDF
 
 
 def test_heavy_path_is_map_only(nodes):
     """Dataflow order = ascending node id (leaves first). Every
-    Exchange must come AFTER the extract MapInPandas — the only
+    Exchange must come AFTER the extract MapInArrow — the only
     shuffle is the narrow post-extract dedup; the html-bearing prefix
     of the plan is map-only."""
-    extract_id = max(i for i, n in nodes if n == "MapInPandas")
+    extract_id = max(i for i, n in nodes if n == "MapInArrow")
     early_exchanges = [
         (i, n) for i, n in nodes
         if n == "Exchange" and i < extract_id]
@@ -84,12 +88,14 @@ def test_entry_plan_is_map_only_before_extract(spark):
     map-only plan the pipeline docstring promises — r01 shipped
     entry() with a default-salt full-width repartition while this
     suite asserted the unsalted variant. Guard the real thing: no
-    Exchange before the LAST MapInPandas (synth is itself a
-    MapInPandas leaf; the extract stage is the last one)."""
+    Exchange before the extract stage, the one MapInArrow (synth is a
+    MapInPandas leaf below it)."""
     import __spark_entry__ as entrymod
 
     nodes = _plan_nodes(entrymod.entry(spark))
-    extract_id = max(i for i, n in nodes if n == "MapInPandas")
+    (extract_id,) = [i for i, n in nodes if n == "MapInArrow"]
+    assert [n for i, n in nodes if n in PYTHON_MAPS and i < extract_id] \
+        == ["MapInPandas"], nodes
     early = [(i, n) for i, n in nodes
              if n == "Exchange" and i < extract_id]
     assert not early, nodes
@@ -109,6 +115,9 @@ def test_induction_sampling_prunes_mapside(spark, parquet_pages):
     wgl = [i for i, n in nodes if n == "WindowGroupLimit"]
     exch = [i for i, n in nodes if n == "Exchange"]
     assert wgl and exch and min(wgl) < max(exch), nodes
+    # the per-host kernel is the one Python node, and it is Arrow-native
+    assert [n for _, n in nodes if "Python" in n or "InPandas" in n
+            or "InArrow" in n] == ["FlatMapGroupsInArrow"], nodes
 
 
 def _docs_df(spark, n=4):

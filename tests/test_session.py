@@ -2,6 +2,8 @@
 fresh worker, forked from the preloading daemon
 ``weakscraper_spark._worker_daemon``."""
 
+import pytest
+
 DAEMON = "weakscraper_spark._worker_daemon"
 
 
@@ -68,20 +70,29 @@ def test_task_imports_pyspark_submodule_not_preloaded(spark):
     assert not _one_task(spark, import_late, "preloaded boolean")["preloaded"]
 
 
-def test_arrow_input_imports_no_module(spark):
-    """Everything the first Arrow→pandas batch needs is preloaded."""
+@pytest.mark.parametrize("arrow_map", ["mapInPandas", "mapInArrow"])
+def test_arrow_input_imports_no_module(spark, arrow_map):
+    """Everything the first Arrow batch needs is preloaded, whether the
+    stage reads it as pandas frames or as Arrow record batches."""
     def new_modules(batches):
         import sys
 
-        import pandas as pd
+        import pyarrow as pa
 
         before = set(sys.modules)
         for _ in batches:
             pass
-        yield pd.DataFrame({"new": [",".join(sorted(
-            set(sys.modules) - before))]})
+        new = ",".join(sorted(set(sys.modules) - before))
+        if arrow_map == "mapInArrow":
+            yield pa.RecordBatch.from_pydict({"new": [new]})
+        else:
+            import pandas as pd
 
-    assert _one_task(spark, new_modules, "new string")["new"] == ""
+            yield pd.DataFrame({"new": [new]})
+
+    df = spark.range(1, numPartitions=1)
+    out = getattr(df, arrow_map)(new_modules, "new string").collect()
+    assert out[0]["new"] == ""
 
 
 def test_local_master_threads_parse():

@@ -4,7 +4,7 @@ A brand-new implementation (NOT a port) of the query/data-processing
 capabilities of the reference template-extraction library
 (y2kconnect/weakscraper): template-induced, wildcard-annotated DOM
 matching compiled on the driver, broadcast to executors, and applied
-to Common-Crawl-style page tables via Arrow-vectorized ``mapInPandas``
+to Common-Crawl-style page tables via Arrow-native ``mapInArrow``
 batches — plus the relational/pipeline operators (filter/dedup/agg/
 broadcast-join/anti-join-resume/salted-agg/top-k) and training-data
 operators (dedup exact/MinHash/SimHash, similarity search, text

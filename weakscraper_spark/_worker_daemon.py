@@ -3,15 +3,16 @@ extraction stack already imported (``spark.python.daemon.module``,
 set in ``plans/session.py`` for local masters).
 
 Each task still gets a fresh worker that exits after it, but the fork
-inherits pandas, pyarrow, the Arrow serializers and the engine, so no
+inherits pyarrow, the Arrow serializers, the engine and pandas, so no
 task pays their import. ``gc.freeze()`` keeps the collector from
 touching those objects in the children, so their pages stay shared
-copy-on-write. The imports are ones every worker does anyway:
+copy-on-write. The imports are ones the workers do anyway:
 ``pyspark.daemon`` pulls in ``pyspark.worker`` and the Arrow
-serializers, the engine modules pull in pandas, and
-``pyarrow.pandas_compat`` (which imports pyarrow) and
-``pyarrow.vendored.version`` are what a worker imports on its first
-Arrow→pandas conversion.
+serializers, and the engine stages (``mapInArrow``/``applyInArrow``)
+need pyarrow alone. pandas, ``pyarrow.pandas_compat`` and
+``pyarrow.vendored.version`` stay for the remaining pandas stages
+(``sources.synth``, the streaming state stage, the side operators):
+they are what a worker imports on its first Arrow→pandas conversion.
 
 Before forking, the daemon drops every ``zipimporter`` from
 ``sys.path_importer_cache`` (``pyspark.zip`` and its subpackage paths,
@@ -31,6 +32,7 @@ import gc
 import sys
 import zipimport
 
+import pandas  # noqa: F401
 import pyarrow.pandas_compat  # noqa: F401
 import pyarrow.vendored.version  # noqa: F401
 from pyspark import daemon

@@ -31,7 +31,7 @@ and whitespace-only-node behavior therefore match the template path
 byte-for-byte.
 
 Scale shape: pure per-document function → runs inside the same
-Arrow-batched ``mapInPandas`` stage as the template extractor
+Arrow-batched ``mapInArrow`` stage as the template extractor
 (operators/heuristic.py); no shuffle, no driver involvement.
 
 Reference parity note (SURVEY §0): the reference implements only

@@ -1,19 +1,20 @@
 """C6 ``extract`` — the core operator (SURVEY.md §3C):
-``mapInPandas(extract_batch, schema)`` with the compiled template
+``mapInArrow(extract_batch, schema)`` with the compiled template
 spec(s) broadcast to executors.
 
 Execution model (SURVEY §4.2 flagship trace):
 - The ONLY JVM↔Python crossing in the pipeline: Arrow record batches
-  in, Arrow record batches out. No per-row ``F.udf`` anywhere
-  (BASELINE.json:15 mandate).
+  in and out, no pandas, no per-row ``F.udf`` (BASELINE.json:15
+  mandate). ``url``, ``warc_ts`` and ``template_id`` go back out as
+  the input Arrow arrays; only ``html`` and ``template_id`` are read
+  into Python.
 - Specs travel as JSON strings inside a ``sc.broadcast`` and are
   deserialized via a module-level cache keyed by content hash. The
   session runs one fresh worker per task (``spark.python.worker.reuse``
   off), so the cache dedups within a task's batches; the imports this
-  module and the Arrow→pandas conversion need are paid once, in the
-  preloading worker daemon (``weakscraper_spark._worker_daemon``) the
-  workers fork from, which also drops its zip importers so a task
-  re-reads no archive.
+  module needs are paid once, in the preloading worker daemon
+  (``weakscraper_spark._worker_daemon``) the workers fork from, which
+  also drops its zip importers so a task re-reads no archive.
 - One bad document can never fail a batch: ``enginelib.match.extract``
   maps every CompareError/RecursionError to a status row (A13).
 - C13 lineage: each output row carries its ``partition_id`` (from
@@ -25,6 +26,9 @@ Output schema is FIXED (dynamic captures live in ``fields_json``,
 SURVEY §2.1):
     url, template_id, status, error, text, fields_json, n_nodes,
     n_bytes, parse_ms, partition_id
+
+``decode_html`` and ``heuristic_row`` serve every engine stage (this
+one, ``operators.heuristic`` and ``operators.induction``).
 """
 
 from __future__ import annotations
@@ -33,9 +37,11 @@ import json
 from time import perf_counter
 from typing import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..enginelib.boiler import main_text as _main_text
 from ..enginelib.errors import MarkupError
@@ -66,6 +72,45 @@ EXTRACT_SCHEMA = (
 # (north rule: "extracted text/spans per url")
 EXTRACT_SPANS_SCHEMA = EXTRACT_SCHEMA + ", spans_json string"
 
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema Spark expects back for ``ddl`` (driver-side:
+    parsing the DDL needs the JVM)."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def decode_html(raw: str | bytes | None) -> tuple[str, int] | None:
+    """One ``html`` cell → ``(html, n_bytes)``, or None for a NULL
+    cell. ``n_bytes`` counts BYTES even for string input (len(str)
+    undercounts multi-byte UTF-8); binary input decodes as UTF-8 with
+    replacement, so no page fails its batch."""
+    if raw is None:
+        return None
+    if isinstance(raw, str):
+        return raw, len(raw.encode("utf-8"))
+    return bytes(raw).decode("utf-8", errors="replace"), len(raw)
+
+
+def heuristic_row(html: str, spans: bool = False) -> dict:
+    """One page's boilerplate-strip columns: ``main_text``'s 'largest'
+    block counts and ``text``, ``status`` ('ok' if a block is content,
+    else 'empty', or ``mismatch:MarkupError`` for a page the tokenizer
+    cannot read), ``parse_ms``, and with ``spans`` on an 'ok' page
+    ``spans_json`` (``{"_main_text": [[start, end), ...]}``)."""
+    t0 = perf_counter()
+    try:
+        r = _main_text(html, mode="largest", spans=spans)
+        r["status"] = "ok" if r["n_content_blocks"] else "empty"
+    except MarkupError as e:
+        r = {"status": e.status, "text": ""}
+    r["parse_ms"] = (perf_counter() - t0) * 1e3
+    block_spans = r.pop("spans", None)
+    if block_spans is not None and r["status"] == "ok":
+        r["spans_json"] = json.dumps({"_main_text": block_spans},
+                                     sort_keys=True)
+    return r
+
+
 # Per-worker compiled-spec cache (dedups specs across a task's batches).
 _SPEC_CACHE: dict[str, Spec] = {}
 
@@ -76,30 +121,6 @@ def _spec_for(spec_json: str) -> Spec:
         spec = spec_from_json(spec_json)
         _SPEC_CACHE[spec_json] = spec
     return spec
-
-
-def _heuristic_rescue(out: dict, j: int, html: str,
-                      spans: bool = False) -> None:
-    """Boilerplate-strip fallback for one failed row, in-place. Only
-    upgrades the row when the heuristic finds content (a page it
-    cannot read finds none); the template error string is preserved
-    for audit either way. With ``spans``, rescued rows carry the
-    content block's covering source span under the reserved
-    ``_main_text`` key (heuristics have no field names),
-    so the north rule's text/spans leg covers BOTH extractors
-    (VERDICT r04 #5)."""
-    t0 = perf_counter()
-    try:
-        r = _main_text(html, mode="largest", spans=spans)
-    except MarkupError:
-        r = None
-    out["parse_ms"][j] += (perf_counter() - t0) * 1e3
-    if r and r["n_content_blocks"]:
-        out["status"][j] = "ok_heuristic"
-        out["text"][j] = r["text"]
-        if spans:
-            out["spans_json"][j] = json.dumps(
-                {"_main_text": r["spans"]}, sort_keys=True)
 
 
 def extract_pages(df: DataFrame,
@@ -124,7 +145,9 @@ def extract_pages(df: DataFrame,
     width; in-stage fallback costs one extra local parse for the
     ~5-10% failing rows and nothing else. Recovered rows get status
     ``'ok_heuristic'`` with the template error preserved in ``error``
-    for audit; unrecovered rows keep their template status.
+    for audit (and, with ``spans``, the content block's covering
+    source span under the reserved ``_main_text`` key); unrecovered
+    rows keep their template status.
 
     ``spans=True`` adds a ``spans_json`` column: per captured field,
     the [start, end) character offsets of the captured element(s) in
@@ -136,29 +159,29 @@ def extract_pages(df: DataFrame,
         raise ValueError(f"unknown fallback {fallback!r}")
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(spec_json_by_tid)
+    ddl = EXTRACT_SPANS_SCHEMA if spans else EXTRACT_SCHEMA
+    schema = arrow_schema(ddl)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
         specs = bc.value
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "url": pdf["url"].tolist(),
-                "warc_ts": pdf["warc_ts"].tolist(),
-                "template_id": pdf["template_id"].tolist(),
+        for batch in batches:
+            n = batch.num_rows
+            out = {c: batch.column(c)
+                   for c in ("url", "warc_ts", "template_id")}
+            out.update({
                 "status": [""] * n, "error": [""] * n,
                 "text": [None] * n, "fields_json": [None] * n,
                 "n_nodes": [0] * n, "n_bytes": [0] * n,
-                "parse_ms": [0.0] * n,
-                "partition_id": [pid] * n,
-            }
+                "parse_ms": [0.0] * n, "partition_id": [pid] * n,
+            })
             if spans:
                 out["spans_json"] = [None] * n
-            htmls = pdf["html"].tolist()
-            for j in range(n):
-                raw = htmls[j]
-                if raw is None:
+            tids = batch.column("template_id").to_pylist()
+            for j, raw in enumerate(batch.column("html").to_pylist()):
+                page = decode_html(raw)
+                if page is None:
                     # a NULL html cell must become a status row, not a
                     # TypeError that fails the whole Arrow batch (the
                     # pipeline filters NULLs upstream; the OPERATOR
@@ -166,40 +189,35 @@ def extract_pages(df: DataFrame,
                     out["status"][j] = "error:NullInput"
                     out["error"][j] = "html is NULL"
                     continue
-                if isinstance(raw, str):
-                    # lineage bytes_in must be BYTES even for string
-                    # inputs (len(str) undercounts multi-byte UTF-8)
-                    html = raw
-                    out["n_bytes"][j] = len(raw.encode("utf-8"))
-                else:
-                    html = bytes(raw).decode("utf-8", errors="replace")
-                    out["n_bytes"][j] = len(raw)
-                tid = out["template_id"][j]
+                html, out["n_bytes"][j] = page
+                tid = tids[j]
                 spec_json = specs.get(tid) if tid is not None else None
                 if spec_json is None:
                     out["status"][j] = "error:NoTemplate"
                     out["error"][j] = f"no compiled template for {tid!r}"
-                    if fallback == "heuristic":
-                        _heuristic_rescue(out, j, html, spans)
-                    continue
-                t0 = perf_counter()
-                row = _extract_doc(_spec_for(spec_json), html,
-                                   functions, text_key, spans=spans)
-                out["parse_ms"][j] = (perf_counter() - t0) * 1e3
-                if spans and row.get("spans") is not None:
-                    out["spans_json"][j] = json.dumps(
-                        row["spans"], sort_keys=True)
-                out["status"][j] = row["status"]
-                out["error"][j] = row["error"]
-                out["text"][j] = row["text"]
-                out["n_nodes"][j] = row["n_nodes"]
-                if row["fields"] is not None:
-                    out["fields_json"][j] = json.dumps(
-                        row["fields"], sort_keys=True, ensure_ascii=False,
-                        default=str)
-                if fallback == "heuristic" and row["status"] != "ok":
-                    _heuristic_rescue(out, j, html, spans)
-            yield pd.DataFrame(out)
+                else:
+                    t0 = perf_counter()
+                    row = _extract_doc(_spec_for(spec_json), html,
+                                       functions, text_key, spans=spans)
+                    out["parse_ms"][j] = (perf_counter() - t0) * 1e3
+                    if spans and row.get("spans") is not None:
+                        out["spans_json"][j] = json.dumps(
+                            row["spans"], sort_keys=True)
+                    for c in ("status", "error", "text", "n_nodes"):
+                        out[c][j] = row[c]
+                    if row["fields"] is not None:
+                        out["fields_json"][j] = json.dumps(
+                            row["fields"], sort_keys=True,
+                            ensure_ascii=False, default=str)
+                if fallback == "heuristic" and out["status"][j] != "ok":
+                    h = heuristic_row(html, spans)
+                    out["parse_ms"][j] += h["parse_ms"]
+                    if h["status"] == "ok":
+                        out["status"][j] = "ok_heuristic"
+                        out["text"][j] = h["text"]
+                        if spans:
+                            out["spans_json"][j] = h["spans_json"]
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return df.select("url", "warc_ts", "template_id", "html").mapInPandas(
-        run, EXTRACT_SPANS_SCHEMA if spans else EXTRACT_SCHEMA)
+    return df.select("url", "warc_ts", "template_id", "html").mapInArrow(
+        run, ddl)

@@ -2,7 +2,7 @@
 SHUFFLE-MINIMAL order:
 
     scan → filter/project → resume-anti-join → attach-template
-    (broadcast, map-side) → [optional salt/repartition] → mapInPandas
+    (broadcast, map-side) → [optional salt/repartition] → mapInArrow
     extract → dedup-latest on the NARROW output → sink, whose write
     job also reports the run (one ``Observation``).
 

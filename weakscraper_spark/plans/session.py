@@ -5,7 +5,8 @@ Scale rationale (designed for 1000-executor / 100 TB, tested on
 local[N]):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting
   ("AQE-tuned shuffle partitioning", BASELINE.json:6).
-- Arrow batches into mapInPandas; ``maxRecordsPerBatch`` lowered
+- Arrow batches into the engine's mapInArrow/applyInArrow stages
+  (and the remaining mapInPandas ones); ``maxRecordsPerBatch`` lowered
   because rows carry whole HTML blobs (~2–50 KB) — a 10k-row default
   batch would be hundreds of MB in a Python worker.
 - ``spark.python.worker.reuse=false``: one fresh Python worker per
@@ -14,8 +15,8 @@ local[N]):
   extract ran 31.0 s with reuse vs 11.6 s without at local[16] (2.7×);
   a fresh worker also drops the heap earlier tasks grew.
 - ``spark.python.daemon.module`` is, on local masters, the preloading
-  daemon ``weakscraper_spark._worker_daemon``: it imports pandas,
-  pyarrow and the engine once, then forks each fresh worker from that
+  daemon ``weakscraper_spark._worker_daemon``: it imports pyarrow,
+  the engine and pandas once, then forks each fresh worker from that
   state, so a task pays a fork instead of ~0.5 s of imports, and the
   preloaded pages stay shared copy-on-write. It also drops its
   ``zipimporter`` entries from ``sys.path_importer_cache`` before
