@@ -2272,42 +2272,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return canonical_dedup(pages)
     q["canonical_groups"] = canonical_groups
 
-    # ---- Unicode hygiene + script profiling (operators/textclean.py,
-    # r06): planted zero-width/bidi/control/NBSP junk and mixed-script
-    # strings from doc_id arithmetic; oracles mirror the scrub and
-    # the range counts with RE2 classes + the 'g' flag. ---------------------
-    def unicode_scrub(spark, sf):
-        from weakscraper_spark.operators.textclean import clean_unicode
-        d = F.col("doc_id")
-        t = F.concat(
-            F.lit("plain "),
-            F.when(d % 3 == 0,
-                   F.lit("bad\u200bzero\u202eevil\u2066iso"))
-             .otherwise(F.lit("ok")),
-            F.when(d % 4 == 0, F.lit("\u00a0nb\u3000sp"))
-             .otherwise(F.lit("")),
-            F.when(d % 7 == 0, F.lit("\u0007bell\u00adhyp"))
-             .otherwise(F.lit("")),
-            F.lit(" tail"), d.cast("string"))
-        docs = _t(spark, sf, "documents").select(
-            "doc_id", t.alias("text"))
-        return clean_unicode(docs)
-    q["unicode_scrub"] = unicode_scrub
-
-    def script_mix(spark, sf):
-        from weakscraper_spark.operators.textclean import script_profile
-        d = F.col("doc_id")
-        t = (F.when(d % 6 == 0, F.lit("привет мир 42"))
-             .when(d % 6 == 1, F.lit("hello world"))
-             .when(d % 6 == 2, F.lit("漢字の文章です"))
-             .when(d % 6 == 3, F.lit("مرحبا بالعالم"))
-             .when(d % 6 == 4, F.lit("abcабв"))  # 3v3 tie → latin
-             .otherwise(F.lit("")))
-        docs = _t(spark, sf, "documents").select(
-            "doc_id", t.alias("text"))
-        return script_profile(docs)
-    q["script_mix"] = script_mix
-
     # ---- DSIR importance resampling (operators/dsir.py, r06 —
     # Xie et al. 2023): hashed unigram+bigram models on a target
     # slice vs the full corpus, per-doc log importance weights,
@@ -2732,7 +2696,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "temp_mix", "warc_fetch", "canonical_redirects",
         "template_refresh", "semantic_dedup", "dsir_select",
         "robots_noindex", "canonical_groups", "recrawl_plan",
-        "unicode_scrub", "script_mix",
         "surt_keys", "cdx_records", "cdx_dedup", "pdf_pages",
         "compression_ratios", "induce_hosts",
         "bucketed_join", "feed_discovery", "dup_substrings",
@@ -4706,126 +4669,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(CASE WHEN canonical_url = url THEN 1
                             ELSE 0 END)::BIGINT AS n_self
             FROM c GROUP BY canonical_url
-        """,
-        # unicode hygiene twins (RE2 \\x{..} classes + the 'g' flag —
-        # DuckDB regexp_replace replaces only the FIRST match without
-        # it; planted control chars built with chr() so the SQL text
-        # stays visible ASCII)
-        "unicode_scrub": """
-            WITH t AS (
-                SELECT doc_id,
-                       'plain ' ||
-                       CASE WHEN doc_id % 3 = 0 THEN
-                            'bad' || chr(8203) || 'zero' ||
-                            chr(8238) || 'evil' || chr(8294) || 'iso'
-                            ELSE 'ok' END ||
-                       CASE WHEN doc_id % 4 = 0 THEN
-                            chr(160) || 'nb' || chr(12288) || 'sp'
-                            ELSE '' END ||
-                       CASE WHEN doc_id % 7 = 0 THEN
-                            chr(7) || 'bell' || chr(173) || 'hyp'
-                            ELSE '' END ||
-                       ' tail' || doc_id AS text
-                FROM documents),
-            s AS (
-                SELECT doc_id, text,
-                       regexp_replace(text,
-                           '[\\x{0000}-\\x{0008}\\x{000b}-\\x{001f}'
-                           || '\\x{007f}-\\x{009f}'
-                           || '\\x{200b}-\\x{200f}\\x{2060}'
-                           || '\\x{feff}\\x{202a}-\\x{202e}'
-                           || '\\x{2066}-\\x{2069}\\x{00ad}]',
-                           '', 'g') AS stripped
-                FROM t)
-            SELECT doc_id,
-                   regexp_replace(stripped,
-                       '[\\x{00a0}\\x{1680}\\x{2000}-\\x{200a}'
-                       || '\\x{2028}\\x{2029}\\x{202f}\\x{205f}'
-                       || '\\x{3000}]', ' ', 'g') AS text_clean,
-                   (length(text) - length(stripped))::BIGINT
-                       AS n_stripped,
-                   (length(stripped) - length(regexp_replace(
-                        stripped,
-                        '[\\x{00a0}\\x{1680}\\x{2000}-\\x{200a}'
-                        || '\\x{2028}\\x{2029}\\x{202f}\\x{205f}'
-                        || '\\x{3000}]', '', 'g')))::BIGINT
-                       AS n_spaces_fixed
-            FROM s
-        """,
-        "script_mix": """
-            WITH t AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 6 = 0 THEN 'привет мир 42'
-                            WHEN doc_id % 6 = 1 THEN 'hello world'
-                            WHEN doc_id % 6 = 2 THEN '漢字の文章です'
-                            WHEN doc_id % 6 = 3 THEN 'مرحبا بالعالم'
-                            WHEN doc_id % 6 = 4 THEN 'abcабв'
-                            ELSE '' END AS text
-                FROM documents),
-            c AS (
-                SELECT doc_id, length(text)::BIGINT AS n_chars,
-                       (length(text) - length(regexp_replace(text,
-                        '[A-Za-z\\x{00c0}-\\x{024f}]', '', 'g')))
-                           ::BIGINT AS latin,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{0400}-\\x{04ff}]', '', 'g')))
-                           ::BIGINT AS cyrillic,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{0370}-\\x{03ff}]', '', 'g')))
-                           ::BIGINT AS greek,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{0600}-\\x{06ff}]', '', 'g')))
-                           ::BIGINT AS arabic,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{0590}-\\x{05ff}]', '', 'g')))
-                           ::BIGINT AS hebrew,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{4e00}-\\x{9fff}]', '', 'g')))
-                           ::BIGINT AS cjk,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{3040}-\\x{30ff}]', '', 'g')))
-                           ::BIGINT AS kana,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{ac00}-\\x{d7af}]', '', 'g')))
-                           ::BIGINT AS hangul,
-                       (length(text) - length(regexp_replace(text,
-                        '[\\x{0900}-\\x{097f}]', '', 'g')))
-                           ::BIGINT AS devanagari
-                FROM t)
-            SELECT doc_id, n_chars, latin, cyrillic, greek, arabic,
-                   hebrew, cjk, kana, hangul, devanagari,
-                   (n_chars - latin - cyrillic - greek - arabic
-                    - hebrew - cjk - kana - hangul - devanagari)
-                       ::BIGINT AS n_other,
-                   CASE WHEN greatest(latin, cyrillic, greek, arabic,
-                            hebrew, cjk, kana, hangul,
-                            devanagari) = 0 THEN 'none'
-                        WHEN latin = greatest(latin, cyrillic, greek,
-                            arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'latin'
-                        WHEN cyrillic = greatest(latin, cyrillic,
-                            greek, arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'cyrillic'
-                        WHEN greek = greatest(latin, cyrillic, greek,
-                            arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'greek'
-                        WHEN arabic = greatest(latin, cyrillic,
-                            greek, arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'arabic'
-                        WHEN hebrew = greatest(latin, cyrillic,
-                            greek, arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'hebrew'
-                        WHEN cjk = greatest(latin, cyrillic, greek,
-                            arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'cjk'
-                        WHEN kana = greatest(latin, cyrillic, greek,
-                            arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'kana'
-                        WHEN hangul = greatest(latin, cyrillic,
-                            greek, arabic, hebrew, cjk, kana, hangul,
-                            devanagari) THEN 'hangul'
-                        ELSE 'devanagari' END AS dominant
-            FROM c
         """,
         # DSIR twin: mirrored tokenization → unigram+bigram instances
         # → md5 buckets → add-1-smoothed ln ratios → per-doc sums

@@ -1,8 +1,16 @@
 """Session builder (plans/session.py): every Python task runs in a
 fresh worker, forked from the preloading daemon
-``weakscraper_spark._worker_daemon``."""
+``weakscraper_spark._worker_daemon``; the driver JVM starts from a
+class-data-sharing archive that only a verified temp file becomes."""
+
+import json
+import os
+import subprocess
+import sys
 
 import pytest
+
+from weakscraper_spark.plans import session
 
 DAEMON = "weakscraper_spark._worker_daemon"
 
@@ -102,3 +110,177 @@ def test_local_master_threads_parse():
     assert _local_threads("local[*]", 8) == 8
     assert _local_threads("local[4,2]", 8) == 4
     assert _local_threads("local[*,3]", 8) == 8
+
+
+# ---- the driver JVM's class-data-sharing archive --------------------------
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def cds_env(tmp_path, monkeypatch):
+    """A temp cache and a conf dir holding only a template; returns
+    (cache dir, conf dir, archive key)."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf.template").write_text("# template\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    for var in session._CLASSPATH_ENV:
+        monkeypatch.delenv(var, raising=False)
+    java = session._java()
+    if java is None:
+        pytest.skip("no java")
+    key = session._cds_key(java, session._spark_home())
+    return str(tmp_path / "xdg" / "weakscraper_spark"), str(conf), key
+
+
+@pytest.fixture(scope="module")
+def primed(tmp_path_factory):
+    """A real (small) dynamic archive, dumped by a ``java -version``;
+    returns (archive path, the classpath it was dumped for)."""
+    java = session._java()
+    if java is None:
+        pytest.skip("no java")
+    d = tmp_path_factory.mktemp("primed")
+    cp = d / "cp"
+    cp.mkdir()
+    jsa = d / "primed.jsa"
+    subprocess.run([java, f"-XX:ArchiveClassesAtExit={jsa}", "-cp", str(cp),
+                    "-version"], check=True, capture_output=True, timeout=120)
+    assert session._verify(java, str(jsa), str(cp))
+    return jsa, str(cp)
+
+
+def test_cds_plan_miss_then_hit(cds_env):
+    cache, conf, key = cds_env
+    os.makedirs(cache)
+    stale = [os.path.join(cache, "spark-0123456789abcdef" + e)
+             for e in (".jsa", ".size")]
+    for f in stale:
+        open(f, "w").close()
+
+    miss = session._cds_plan({})
+    stem = os.path.join(cache, f"{key}.{os.getpid()}")
+    assert miss.java_options.split() == [
+        f"-XX:ArchiveClassesAtExit={stem}.tmp", "-Xlog:cds=off",
+        "-Xlog:cds+dynamic=off"]
+    assert miss.sidecar == stem + ".cp"
+    assert miss.conf_dir == os.path.join(cache, "conf")
+    assert os.listdir(miss.conf_dir) == []
+    assert not any(map(os.path.exists, stale))  # another key's archive
+    assert os.environ["SPARK_CONF_DIR"] == conf
+
+    jsa = os.path.join(cache, key + ".jsa")
+    with open(jsa, "wb") as fh:
+        fh.write(b"x" * 10)
+    with open(os.path.join(cache, key + ".size"), "w") as fh:
+        fh.write("10")
+    hit = session._cds_plan({})
+    assert hit.java_options.split()[0] == f"-XX:SharedArchiveFile={jsa}"
+    assert hit.sidecar is None and hit.conf_dir == miss.conf_dir
+
+    # a published archive whose size changed is deleted, not mapped
+    with open(jsa, "ab") as fh:
+        fh.write(b"y")
+    assert session._cds_plan({}) is None
+    assert not os.path.exists(jsa)
+
+
+def test_cds_plan_leaves_a_real_conf_dir_alone(cds_env):
+    cache, conf, _ = cds_env
+    with open(os.path.join(conf, "spark-defaults.conf"), "w") as fh:
+        fh.write("spark.foo bar\n")
+    assert session._cds_plan({}) is None
+    assert sorted(os.listdir(conf)) == ["spark-defaults.conf",
+                                        "spark-defaults.conf.template"]
+    assert os.environ["SPARK_CONF_DIR"] == conf
+    assert not os.path.exists(cache)
+
+
+def test_cds_plan_yields_to_caller_java_options(cds_env):
+    cache, conf, _ = cds_env
+    assert session._cds_plan(
+        {"spark.driver.defaultJavaOptions": "-Dx=1"}) is None
+    assert os.listdir(conf) == ["spark-defaults.conf.template"]
+    assert os.environ["SPARK_CONF_DIR"] == conf
+    assert not os.path.exists(cache)
+
+
+def _leave_primed(cache, stem, data, cp, pid):
+    """What a priming start leaves: the temp archive and its sidecar."""
+    with open(os.path.join(cache, stem + ".tmp"), "wb") as fh:
+        fh.write(data)
+    with open(os.path.join(cache, stem + ".cp"), "w") as fh:
+        json.dump({"pid": pid, "cp": cp}, fh)
+
+
+def test_only_a_verified_archive_is_published(tmp_path, primed):
+    jsa, cp = primed
+    java = session._java()
+    good = jsa.read_bytes()
+    flipped = bytearray(good)
+    flipped[len(good) // 2] ^= 0x10
+    dead = subprocess.Popen(["true"])  # a writer pid that is gone
+    dead.wait()
+    cache = str(tmp_path)
+    for bad in (os.urandom(len(good)), good[:len(good) // 2],
+                bytes(flipped)):
+        _leave_primed(cache, f"k.{dead.pid}", bad, cp, dead.pid)
+        assert session._settle(cache, "k", java) is False
+        assert os.listdir(cache) == []
+
+    # a writer still running is left alone and reported busy
+    _leave_primed(cache, f"k.{dead.pid}", good, cp, os.getpid())
+    assert session._settle(cache, "k", java) is True
+    assert len(os.listdir(cache)) == 2
+
+    _leave_primed(cache, f"k.{dead.pid}", good, cp, dead.pid)
+    _leave_primed(cache, f"other.{dead.pid}", good, cp, dead.pid)
+    assert session._settle(cache, "k", java) is False
+    assert sorted(os.listdir(cache)) == ["k.jsa", "k.size"]
+    assert (tmp_path / "k.jsa").read_bytes() == good
+    assert (tmp_path / "k.size").read_text() == str(len(good))
+
+
+def test_session_starts_past_a_truncated_archive(tmp_path, cds_env,
+                                                 primed):
+    """A published archive cut short aborts any JVM that maps it: the
+    session must notice, delete it and start without it."""
+    cache, _, key = cds_env
+    good = primed[0].read_bytes()
+    os.makedirs(cache)
+    jsa = os.path.join(cache, key + ".jsa")
+    with open(jsa, "wb") as fh:
+        fh.write(good[:len(good) // 2])
+    with open(os.path.join(cache, key + ".size"), "w") as fh:
+        fh.write(str(len(good)))
+    code = (
+        "from weakscraper_spark.plans.session import get_spark\n"
+        "s = get_spark('cds', master='local[1]')\n"
+        "args = s._jvm.java.lang.management.ManagementFactory"
+        ".getRuntimeMXBean().getInputArguments()\n"
+        "print(sum('SharedArchive' in a for a in args),"
+        " s.range(10).count())\n")
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, env=env, cwd=str(tmp_path),
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.splitlines()[-1] == "0 10"
+    assert not os.path.exists(jsa)
+
+
+def test_driver_jvm_starts_from_the_archive(spark):
+    """The session fixture's JVM either maps the published archive or
+    primes it."""
+    args = list(spark._jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments())
+    named = [a.split("=", 1)[1] for a in args
+             if a.startswith(("-XX:SharedArchiveFile=",
+                              "-XX:ArchiveClassesAtExit="))]
+    assert len(named) == 1, args
+    assert os.path.dirname(named[0]) == session._cds_dir()

@@ -37,12 +37,36 @@ local[N]):
   — not shuffle partitions — set its parallelism; 128 MB default
   splits would underfeed 32 cores on sandbox-sized inputs. (At 100 TB
   the file count dwarfs core count and the 128 MB default is right.)
+- The driver JVM starts from a JDK 17 dynamic class-data-sharing
+  (AppCDS) archive of the classes a session loads: loading Spark's
+  classes was most of a cold start (perfbench ``setup_s`` medians of
+  17.6–19.9 s at local[2] on 4 vCPUs fell 30–36% with the
+  archive). ``get_spark`` primes it itself: the
+  first start that launches a JVM adds ``-XX:ArchiveClassesAtExit``,
+  the JVM writes a temp file when it exits, and a later start
+  publishes that file only after a probe JVM maps it with every
+  checksum verified (an archive cut short aborts the JVM that maps
+  it). It lives in ``${XDG_CACHE_HOME:-~/.cache}/weakscraper_spark/``
+  (about 176 MB), named by a digest of the JDK (``java``,
+  ``libjvm.so``) and of the path, size and mtime of every Spark jar;
+  priming a new key deletes the others. Deleting the directory
+  re-primes it. Any doubt — no writable cache, a conf dir holding
+  more than ``*.template`` files, a caller's own
+  ``spark.driver.defaultJavaOptions``, a JVM already running, a
+  published file whose size changed — means a plain start.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
 import os
+import shutil
+import subprocess
+from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: directory (or zip) holding the ``weakscraper_spark`` package
@@ -55,6 +79,185 @@ def _local_threads(master: str, cores: int) -> int:
     Spark's max-failures form ``local[N,F]``/``local[*,F]``."""
     n = master[6:-1].split(",")[0]
     return cores if n == "*" else int(n)
+
+
+class _Archive(NamedTuple):
+    """How to start the driver JVM from a class-data-sharing archive."""
+    java_options: str   # for ``spark.driver.defaultJavaOptions``
+    conf_dir: str       # ``SPARK_CONF_DIR`` while the JVM is launched
+    sidecar: str | None  # a priming start records its JVM here
+
+
+#: the JVM prints CDS warnings to the stdout it shares with the Python
+#: driver, whose last line callers parse; an unusable archive only
+#: costs speed
+_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+#: classpath entries other than the conf dir and the jars; JDK 17
+#: refuses to dump with a non-empty directory on the classpath
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+
+def _cds_dir() -> str:
+    return os.path.join(
+        os.environ.get("XDG_CACHE_HOME")
+        or os.path.join(os.path.expanduser("~"), ".cache"),
+        "weakscraper_spark")
+
+
+def _java() -> str | None:
+    """The ``java`` that ``spark-submit`` runs."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return java if java and os.path.isfile(java) else None
+
+
+def _spark_home() -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return os.environ.get("SPARK_HOME") or _find_spark_home()
+
+
+def _cds_key(java: str, spark_home: str) -> str | None:
+    """Archive name for this JDK and jar set: a digest of the path,
+    size and mtime of ``java``, ``libjvm.so`` and every Spark jar."""
+    real = os.path.realpath(java)
+    files = [real, os.path.join(os.path.dirname(os.path.dirname(real)),
+                                "lib", "server", "libjvm.so")]
+    files += sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar")))
+    h = hashlib.sha256()
+    try:
+        for f in files:
+            st = os.stat(f)
+            h.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    return "spark-" + h.hexdigest()[:16]
+
+
+def _alive(pid) -> bool:
+    try:
+        pid = int(pid)
+        if pid <= 0:
+            return False
+        os.kill(pid, 0)
+    except (ValueError, TypeError, OverflowError, ProcessLookupError):
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _verify(java: str, archive: str, classpath: str) -> bool:
+    """True if a probe JVM maps ``archive`` for ``classpath`` with
+    every checksum intact. A truncated archive aborts the JVM that
+    maps it (SIGBUS in the checksum), so the probe runs alone, with no
+    crash report or core file."""
+    try:
+        return subprocess.run(
+            [java, "-Xshare:on", "-XX:+VerifySharedSpaces",
+             "-XX:+SuppressFatalErrorMessage", "-XX:-CreateCoredumpOnCrash",
+             f"-XX:SharedArchiveFile={archive}", "-cp", classpath,
+             "-version"],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=60).returncode == 0
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+
+
+def _remove(*paths: str) -> None:
+    for p in paths:
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+
+
+def _settle(cache: str, key: str, java: str) -> bool:
+    """Publish or delete what finished priming starts left in
+    ``cache``: ``<key>.<pid>.tmp``, the archive a JVM wrote at exit,
+    and ``<key>.<pid>.cp``, the JVM's pid and classpath. A temp file of
+    ``key`` becomes ``<key>.jsa`` only if it verifies; every other
+    finished one is deleted. True if a JVM priming ``key`` still runs.
+    """
+    busy = False
+    names = set(os.listdir(cache))
+    for name in names:
+        stem, _, ext = name.rpartition(".")
+        if ext not in ("tmp", "cp") or (ext == "tmp" and stem + ".cp" in names):
+            continue
+        k, _, pid = stem.rpartition(".")
+        tmp, side = (os.path.join(cache, stem + e) for e in (".tmp", ".cp"))
+        rec = None
+        if ext == "cp":
+            try:
+                with open(side) as fh:
+                    rec = json.load(fh)
+                pid = rec["pid"]
+            except (OSError, ValueError, KeyError, TypeError):
+                rec = None
+        if _alive(pid):
+            busy |= k == key
+            continue
+        if (k == key and rec and os.path.exists(tmp)
+                and _verify(java, tmp, rec.get("cp", ""))):
+            with open(os.path.join(cache, key + ".size"), "w") as fh:
+                fh.write(str(os.path.getsize(tmp)))
+            os.replace(tmp, os.path.join(cache, key + ".jsa"))
+        _remove(tmp, side)
+    return busy
+
+
+def _cds_plan(extra_conf: dict[str, str]) -> _Archive | None:
+    """Choose the archive options for a start that launches the driver
+    JVM, or None to start without one. Publishes a verified temp file
+    and deletes stale or suspect ones; touches no conf dir."""
+    java = _java()
+    if (java is None or "spark.driver.defaultJavaOptions" in extra_conf
+            or "spark.driver.extraClassPath" in extra_conf
+            or any(os.environ.get(v) for v in _CLASSPATH_ENV)):
+        return None
+    spark_home = _spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        if any(not n.endswith(".template") for n in os.listdir(conf)):
+            return None
+    except FileNotFoundError:
+        pass
+    except OSError:
+        return None
+    key = _cds_key(java, spark_home)
+    cache = _cds_dir()
+    # the path goes into a whitespace-split option string
+    if key is None or any(c.isspace() or c in "\"'\\" for c in cache):
+        return None
+    empty = os.path.join(cache, "conf")
+    jsa, size = (os.path.join(cache, key + e) for e in (".jsa", ".size"))
+    try:
+        os.makedirs(empty, exist_ok=True)
+        if os.listdir(empty) or not os.access(cache, os.W_OK):
+            return None
+        busy = _settle(cache, key, java)
+        if os.path.exists(jsa):
+            try:
+                with open(size) as fh:
+                    ok = int(fh.read()) == os.path.getsize(jsa)
+            except (OSError, ValueError):
+                ok = False
+            if ok:
+                return _Archive(f"-XX:SharedArchiveFile={jsa} {_QUIET}",
+                                empty, None)
+            _remove(jsa, size)
+            return None
+        if busy:
+            return None
+        for name in os.listdir(cache):
+            if name.endswith((".jsa", ".size")):
+                _remove(os.path.join(cache, name))
+    except OSError:
+        return None
+    stem = os.path.join(cache, f"{key}.{os.getpid()}")
+    return _Archive(f"-XX:ArchiveClassesAtExit={stem}.tmp {_QUIET}",
+                    empty, stem + ".cp")
 
 
 def get_spark(app_name: str = "weakscraper_spark",
@@ -115,8 +318,33 @@ def get_spark(app_name: str = "weakscraper_spark",
             .config("spark.python.daemon.module",
                     "weakscraper_spark._worker_daemon")
             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    cds = (_cds_plan(extra_conf) if SparkContext._gateway is None
+           and "PYSPARK_GATEWAY_PORT" not in os.environ else None)
+    if cds is None:
+        spark = builder.getOrCreate()
+    else:
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 cds.java_options)
+        conf_dir = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = cds.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if conf_dir is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = conf_dir
+        if cds.sidecar is not None:
+            jvm = spark.sparkContext._jvm
+            rec = {"pid": jvm.ProcessHandle.current().pid(),
+                   "cp": jvm.System.getProperty("java.class.path")}
+            try:
+                with open(cds.sidecar, "w") as fh:
+                    json.dump(rec, fh)
+            except OSError:
+                pass  # the temp file is then an orphan, deleted later
     spark.sparkContext.setLogLevel("WARN")
     return spark
