@@ -348,40 +348,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .filter(F.col("field").isin(scalars)))
     q["fields_long"] = fields_long
 
-    # ---- as-of join (union-window form; DuckDB has native ASOF) -----------
-    def asof_purchase(spark, sf):
-        from weakscraper_spark.operators.relational import asof_join
-        ev = _t(spark, sf, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "event_id", "ts")
-        purchases = (ev.filter(F.col("event_type") == "purchase")
-                     .groupBy("user_id", "ts")
-                     .agg(F.max("value").alias("purch_value")))
-        out = asof_join(clicks, purchases, on="user_id", ts="ts",
-                        right_cols=["purch_value"])
-        return out.select(
-            "user_id", "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("ts_str"),
-            _dec(F.coalesce(F.col("purch_value_asof"), F.lit(0.0)), 2)
-            .alias("purch_value"))
-    q["asof_purchase"] = asof_purchase
-
-    # ---- bounded range join (bucketed equi-join, no theta-join) -----------
-    def range_join_events(spark, sf):
-        from weakscraper_spark.operators.relational import (
-            range_join_buckets)
-        ev = _t(spark, sf, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "event_id", "ts")
-        errors = ev.filter(F.col("event_type") == "error").select(
-            "user_id", F.col("event_id").alias("err_id"), "ts")
-        out = range_join_buckets(clicks, errors, on="user_id", ts="ts",
-                                 max_gap_s=900, right_cols=["err_id"])
-        return out.select("user_id", "event_id",
-                          F.col("err_id_near").alias("err_id"))
-    q["range_join_events"] = range_join_events
-
     # ---- sessionization (lag + gap cutoff + session agg) -------------------
     def sessionize_events(spark, sf):
         ev = _t(spark, sf, "events")
@@ -3790,29 +3756,6 @@ def oracle_sql() -> dict[str, str]:
                    coalesce(source, '(all)') AS source_g,
                    count(*) AS n
             FROM documents GROUP BY CUBE (lang, source)
-        """,
-        "asof_purchase": """
-            WITH p AS (SELECT user_id, ts, max(value) AS purch_value
-                       FROM events WHERE event_type = 'purchase'
-                       GROUP BY 1, 2),
-                 c AS (SELECT user_id, event_id, ts FROM events
-                       WHERE event_type = 'click')
-            SELECT c.user_id, c.event_id,
-                   strftime(c.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-                   CAST(CAST(round(coalesce(p.purch_value, 0.0), 2)
-                        AS DECIMAL(18,2)) AS VARCHAR) AS purch_value
-            FROM c ASOF LEFT JOIN p
-              ON c.user_id = p.user_id AND c.ts >= p.ts
-        """,
-        "range_join_events": """
-            SELECT c.user_id, c.event_id, e.event_id AS err_id
-            FROM (SELECT user_id, event_id, ts FROM events
-                  WHERE event_type = 'click') c
-            JOIN (SELECT user_id, event_id, ts FROM events
-                  WHERE event_type = 'error') e
-              ON c.user_id = e.user_id
-             AND abs(epoch_us(c.ts) - epoch_us(e.ts))
-                 <= 900 * 1000000
         """,
         "sessionize_events": """
             WITH g AS (

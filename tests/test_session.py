@@ -61,8 +61,8 @@ def test_task_starts_with_no_zip_importer(spark):
 
 
 def test_task_imports_pyspark_submodule_not_preloaded(spark):
-    """With the daemon's importers dropped, a module from
-    ``pyspark.zip`` the daemon never imported still loads."""
+    """With the daemon's importers dropped, a pyspark module the daemon
+    never imported still loads, from wherever pyspark came from."""
     def import_late(batches):
         import importlib
         import sys
@@ -76,6 +76,74 @@ def test_task_imports_pyspark_submodule_not_preloaded(spark):
         yield pd.DataFrame({"preloaded": [preloaded]})
 
     assert not _one_task(spark, import_late, "preloaded boolean")["preloaded"]
+
+
+def test_rdd_and_sql_tasks_share_one_daemon(spark):
+    """RDD and SQL Python tasks carry the same worker environment, so
+    the JVM forks both from one daemon and starts it once."""
+    import pyarrow as pa
+
+    def daemon_pid(batches):
+        import os
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getppid()]})
+
+    rdd = (spark.sparkContext.parallelize([0], 1)
+           .map(lambda _: os.getppid()).collect())
+    sql = (spark.range(1, numPartitions=1)
+           .mapInArrow(daemon_pid, "pid long").collect())
+    assert rdd == [sql[0]["pid"]]
+
+
+def test_workers_import_the_drivers_pyspark(spark):
+    """A driver whose pyspark is a compiled install on disk hands it to
+    the workers; nothing they hold comes from ``pyspark.zip``."""
+    import pyspark
+
+    if not os.path.isfile(pyspark.__file__):
+        pytest.skip("the driver imported pyspark from a zip")
+
+    def origins(batches):
+        import sys
+
+        import pyspark
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        zipped = sorted(n for n, m in list(sys.modules.items())
+                        if "pyspark.zip" in (getattr(m, "__file__", None)
+                                             or ""))
+        yield pa.RecordBatch.from_pydict({"file": [pyspark.__file__],
+                                          "zipped": [",".join(zipped)]})
+
+    row = (spark.range(1, numPartitions=1)
+           .mapInArrow(origins, "file string, zipped string").collect()[0])
+    assert row["file"] == pyspark.__file__
+    assert row["zipped"] == ""
+
+
+@pytest.mark.parametrize("packages, kept", [
+    (("pyspark", "py4j"), False),   # both in PYTHONPATH: zips dropped
+    (("pyspark",), True),           # py4j only in its zip: both kept
+    ((), True),                     # a driver that ran from the zip
+])
+def test_daemon_drops_spark_zips_only_when_pyspark_is_given(
+        tmp_path, monkeypatch, packages, kept):
+    from weakscraper_spark._worker_daemon import _import_pyspark_from_driver
+
+    for name in packages:
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "__init__.py").write_text("")
+    zips = ["/spark/python/lib/pyspark.zip",
+            "/spark/python/lib/py4j-0.10.9.9-src.zip"]
+    path = ["/cwd", *zips, str(tmp_path), "/stdlib"]
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(zips + [str(tmp_path)]))
+    monkeypatch.setattr(sys, "path", list(path))
+    _import_pyspark_from_driver()
+    assert sys.path == (path if kept else ["/cwd", str(tmp_path), "/stdlib"])
 
 
 @pytest.mark.parametrize("arrow_map", ["mapInPandas", "mapInArrow"])

@@ -5,10 +5,11 @@ capabilities of the reference template-extraction library
 (y2kconnect/weakscraper): template-induced, wildcard-annotated DOM
 matching compiled on the driver, broadcast to executors, and applied
 to Common-Crawl-style page tables via Arrow-native ``mapInArrow``
-batches — plus the relational/pipeline operators (filter/dedup/agg/
-broadcast-join/anti-join-resume/salted-agg/top-k) and training-data
-operators (dedup exact/MinHash/SimHash, similarity search, text
-analysis) a 100 TB-scale corpus pipeline needs.
+batches — plus the pipeline steps built from Spark's own operators
+(filter/dedup/agg/broadcast-join/anti-join-resume/salted-agg/top-k)
+and the training-data operators (dedup exact/MinHash/SimHash,
+similarity search, text analysis) a 100 TB-scale corpus pipeline
+needs.
 
 Layout:
 - ``enginelib``  — pure-Python extraction core (no Spark import): DOM

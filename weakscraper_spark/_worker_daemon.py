@@ -14,9 +14,21 @@ need pyarrow alone. pandas, ``pyarrow.pandas_compat`` and
 (``sources.synth``, the streaming state stage, the side operators):
 they are what a worker imports on its first Arrow→pandas conversion.
 
-Before forking, the daemon drops every ``zipimporter`` from
-``sys.path_importer_cache`` (``pyspark.zip`` and its subpackage paths,
-the py4j zip, a spark-core jar). Each task's
+pyspark comes from the driver's own install, not from the
+``pyspark.zip`` the JVM puts first on the path. The zip holds sources
+only, and ``zipimport`` never writes bytecode, so importing the
+preload from it compiled pyspark again on every session start, which
+was most of the preload's time. The session passes the directory the
+driver imported pyspark from in ``PYTHONPATH``; before its first
+import the daemon drops the JVM's ``pyspark.zip`` and
+``py4j-*-src.zip`` from ``sys.path`` when both pyspark and py4j
+resolve from a directory of that ``PYTHONPATH``. Otherwise (the
+driver ran pyspark from a zip, as under ``spark-submit``) they stay
+and the daemon imports from them as the stock one does.
+
+Before forking, the daemon also drops every ``zipimporter`` from
+``sys.path_importer_cache`` (a ``pyspark.zip`` left on the path, the
+py4j zip, a spark-core jar). Each task's
 ``importlib.invalidate_caches()`` (``worker_util.setup_spark_files``)
 makes every cached ``zipimporter`` re-read its archive's whole central
 directory, which was most of a small task's time. Modules already
@@ -28,22 +40,43 @@ The JVM reads the daemon's port from its stdout, so nothing here may
 print there.
 """
 
+import fnmatch
 import gc
+import os
 import sys
 import zipimport
+from importlib.machinery import PathFinder
 
-import pandas  # noqa: F401
-import pyarrow.pandas_compat  # noqa: F401
-import pyarrow.vendored.version  # noqa: F401
-from pyspark import daemon
+#: what the JVM prepends to every Python worker's path
+_SPARK_ZIPS = ("pyspark.zip", "py4j-*-src.zip")
 
-import weakscraper_spark.enginelib.induce  # noqa: F401
-import weakscraper_spark.operators.extract  # noqa: F401
-import weakscraper_spark.operators.induction  # noqa: F401
 
-if __name__ == "__main__":
+def _import_pyspark_from_driver():
+    given = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if os.path.isdir(p)]
+    if all(PathFinder.find_spec(m, given) for m in ("pyspark", "py4j")):
+        sys.path[:] = [p for p in sys.path if not any(
+            fnmatch.fnmatch(os.path.basename(p), z) for z in _SPARK_ZIPS)]
+
+
+def main():
+    _import_pyspark_from_driver()
+
+    import pandas  # noqa: F401
+    import pyarrow.pandas_compat  # noqa: F401
+    import pyarrow.vendored.version  # noqa: F401
+    from pyspark import daemon
+
+    import weakscraper_spark.enginelib.induce  # noqa: F401
+    import weakscraper_spark.operators.extract  # noqa: F401
+    import weakscraper_spark.operators.induction  # noqa: F401
+
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
     gc.freeze()
     daemon.manager()
+
+
+if __name__ == "__main__":
+    main()
