@@ -1899,53 +1899,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return feed_meta(_feed_corpus(spark, sf).unionByName(plain))
     q["feed_headers"] = feed_headers
 
-    # ---- HTML table mining (operators/htmltable.py): synthesized
-    # pages with 1-2 tables each (header row, inner markup, entities,
-    # empty cells, a ragged short row on d%6, a second headerless
-    # table on d%4) → long-format cell rows + per-table shape
-    # summary, both against closed-form oracles --------------------------
-    def _table_corpus(spark, sf):
-        d = F.col("doc_id")
-        ds = d.cast("string")
-
-        def _body_row(r):
-            c0 = F.concat(F.lit(f"<td><b>a</b>"),
-                          (d * 2 + r).cast("string"), F.lit("</td>"))
-            c1 = F.when((d + r) % 7 == 0, F.lit("<td></td>")) \
-                 .otherwise(F.concat(
-                     F.lit('<td class="v"> v'),
-                     (d + r).cast("string"), F.lit(" </td>")))
-            return F.concat(F.lit("<tr>"), c0, c1, F.lit("</tr>"))
-
-        t0 = F.concat(
-            F.lit('<table border="1">'
-                  "<thead><tr><th>k</th><th>v &amp; u</th></tr></thead>"
-                  "<tbody>"),
-            _body_row(1), _body_row(2),
-            F.when(d % 6 == 0, F.concat(
-                F.lit("<tr><td>s"), ds, F.lit("</td></tr>")))
-             .otherwise(F.lit("")),
-            F.lit("</tbody></table>"))
-        t1 = F.when(d % 4 == 0, F.concat(
-            F.lit("<table><tr><td>x"), ds,
-            F.lit("</td></tr></table>"))).otherwise(F.lit(""))
-        return _t(spark, sf, "documents").select(
-            F.concat(F.lit("https://t.example.org/page/"), ds)
-             .alias("url"),
-            F.concat(F.lit("<html><body><p>prose</p>"), t0, t1,
-                     F.lit("</body></html>")).alias("html"))
-
-    def html_tables(spark, sf):
-        from weakscraper_spark.operators.htmltable import extract_tables
-        return extract_tables(_table_corpus(spark, sf))
-    q["html_tables"] = html_tables
-
-    def table_stats(spark, sf):
-        from weakscraper_spark.operators.htmltable import (
-            extract_tables, table_shapes)
-        return table_shapes(extract_tables(_table_corpus(spark, sf)))
-    q["table_stats"] = table_stats
-
     # ---- positional inverted index + exact-phrase retrieval
     # (operators/search.py): postings restricted map-side to a term
     # subset, and a phrase fold incl. the repeated-term overlap case
@@ -2666,7 +2619,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compression_ratios", "induce_hosts",
         "bucketed_join", "feed_discovery", "dup_substrings",
         "trim_substrings", "ivf_ann_topk",
-        "feed_entries", "feed_headers", "html_tables", "table_stats",
+        "feed_entries", "feed_headers",
         "postings_index", "phrase_hits", "drift_hosts",
         "doc_sentences", "discovered_frontier",
         "snap_change_rate",
@@ -3316,55 +3269,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'sort merge', doc_id, len(m)::INT,
                    array_to_string(list_transform(m, x -> x - 1), ',')
             FROM sm WHERE len(m) > 0
-        """,
-        "html_tables": """
-            WITH d AS (
-                SELECT doc_id AS d,
-                       'https://t.example.org/page/' || doc_id AS url
-                FROM documents),
-            hdr AS (
-                SELECT url, 0 AS table_idx, 0 AS row_idx, c AS col_idx,
-                       TRUE AS is_header,
-                       CASE WHEN c = 0 THEN 'k' ELSE 'v & u' END AS cell
-                FROM d CROSS JOIN (VALUES (0), (1)) t(c)),
-            body AS (
-                SELECT url, 0 AS table_idx, r AS row_idx, c AS col_idx,
-                       FALSE AS is_header,
-                       CASE WHEN c = 0 THEN 'a' || (d * 2 + r)
-                            WHEN (d + r) % 7 = 0 THEN ''
-                            ELSE 'v' || (d + r) END AS cell
-                FROM d CROSS JOIN (VALUES (1), (2)) t1(r)
-                       CROSS JOIN (VALUES (0), (1)) t2(c)),
-            short AS (
-                SELECT url, 0 AS table_idx, 3 AS row_idx, 0 AS col_idx,
-                       FALSE AS is_header, 's' || d AS cell
-                FROM d WHERE d % 6 = 0),
-            second AS (
-                SELECT url, 1 AS table_idx, 0 AS row_idx, 0 AS col_idx,
-                       FALSE AS is_header, 'x' || d AS cell
-                FROM d WHERE d % 4 = 0)
-            SELECT url, table_idx::INT AS table_idx,
-                   row_idx::INT AS row_idx, col_idx::INT AS col_idx,
-                   is_header, cell
-            FROM (SELECT * FROM hdr UNION ALL SELECT * FROM body
-                  UNION ALL SELECT * FROM short
-                  UNION ALL SELECT * FROM second)
-        """,
-        "table_stats": """
-            WITH d AS (
-                SELECT doc_id AS d,
-                       'https://t.example.org/page/' || doc_id AS url
-                FROM documents)
-            SELECT url, 0::INT AS table_idx,
-                   (CASE WHEN d % 6 = 0 THEN 4 ELSE 3 END)::INT
-                       AS n_rows,
-                   2::INT AS n_cols,
-                   d % 6 = 0 AS ragged,
-                   TRUE AS has_header
-            FROM d
-            UNION ALL
-            SELECT url, 1::INT, 1::INT, 1::INT, FALSE, FALSE
-            FROM d WHERE d % 4 = 0
         """,
         "feed_entries": """
             WITH base AS (

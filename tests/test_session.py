@@ -1,6 +1,7 @@
 """Session builder (plans/session.py): every Python task runs in a
 fresh worker, forked from the preloading daemon
-``weakscraper_spark._worker_daemon``; the driver JVM starts from a
+``weakscraper_spark._worker_daemon``, which a local session starts
+before the caller's first action; the driver JVM starts from a
 class-data-sharing archive that only a verified temp file becomes."""
 
 import json
@@ -44,7 +45,9 @@ def _one_task(spark, fn, schema):
 
 def test_task_starts_with_no_zip_importer(spark):
     """The daemon drops its ``zipimporter`` entries before forking, so
-    a task's ``importlib.invalidate_caches()`` re-reads no archive."""
+    a task's ``importlib.invalidate_caches()`` re-reads no archive, and
+    Spark's ``jars/*.jar`` entries (no Python module inside) are off
+    the path, so a late import scans no jar's whole directory."""
     def zip_importers(batches):
         import sys
         import zipimport
@@ -53,11 +56,13 @@ def test_task_starts_with_no_zip_importer(spark):
 
         n = sum(isinstance(f, zipimport.zipimporter)
                 for f in sys.path_importer_cache.values())
+        jars = ",".join(p for p in sys.path if p.endswith(".jar"))
         for _ in batches:
             pass
-        yield pd.DataFrame({"n": [n]})
+        yield pd.DataFrame({"n": [n], "jars": [jars]})
 
-    assert _one_task(spark, zip_importers, "n long")["n"] == 0
+    row = _one_task(spark, zip_importers, "n long, jars string")
+    assert (row["n"], row["jars"]) == (0, "")
 
 
 def test_task_imports_pyspark_submodule_not_preloaded(spark):
@@ -138,7 +143,8 @@ def test_daemon_drops_spark_zips_only_when_pyspark_is_given(
         (tmp_path / name).mkdir()
         (tmp_path / name / "__init__.py").write_text("")
     zips = ["/spark/python/lib/pyspark.zip",
-            "/spark/python/lib/py4j-0.10.9.9-src.zip"]
+            "/spark/python/lib/py4j-0.10.9.9-src.zip",
+            "/spark/jars/spark-core_2.13-4.1.2.jar"]
     path = ["/cwd", *zips, str(tmp_path), "/stdlib"]
     monkeypatch.setenv("PYTHONPATH", os.pathsep.join(zips + [str(tmp_path)]))
     monkeypatch.setattr(sys, "path", list(path))
@@ -275,6 +281,23 @@ def test_cds_plan_yields_to_caller_java_options(cds_env):
     assert not os.path.exists(cache)
 
 
+def _fresh_session(cwd, code, extra_conf=None):
+    """Run ``code`` in a new interpreter right after its
+    ``s = get_spark(...)`` launched a local driver JVM; returns the
+    finished process, which must have exited 0."""
+    code = ("from weakscraper_spark.plans.session import get_spark\n"
+            f"s = get_spark('fresh', master='local[1]',"
+            f" extra_conf={extra_conf!r})\n" + code)
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, env=env, cwd=str(cwd), timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return proc
+
+
 def _leave_primed(cache, stem, data, cp, pid):
     """What a priming start leaves: the temp archive and its sidecar."""
     with open(os.path.join(cache, stem + ".tmp"), "wb") as fh:
@@ -323,21 +346,11 @@ def test_session_starts_past_a_truncated_archive(tmp_path, cds_env,
         fh.write(good[:len(good) // 2])
     with open(os.path.join(cache, key + ".size"), "w") as fh:
         fh.write(str(len(good)))
-    code = (
-        "from weakscraper_spark.plans.session import get_spark\n"
-        "s = get_spark('cds', master='local[1]')\n"
+    proc = _fresh_session(tmp_path, (
         "args = s._jvm.java.lang.management.ManagementFactory"
         ".getRuntimeMXBean().getInputArguments()\n"
         "print(sum('SharedArchive' in a for a in args),"
-        " s.range(10).count())\n")
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
-               PYTHONPATH=os.pathsep.join(
-                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
-    env.pop("PYSPARK_GATEWAY_PORT", None)
-    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                          text=True, env=env, cwd=str(tmp_path),
-                          timeout=300)
-    assert proc.returncode == 0, proc.stderr[-2000:]
+        " s.range(10).count())\n"))
     assert proc.stdout.splitlines()[-1] == "0 10"
     assert not os.path.exists(jsa)
 
@@ -352,3 +365,54 @@ def test_driver_jvm_starts_from_the_archive(spark):
                               "-XX:ArchiveClassesAtExit="))]
     assert len(named) == 1, args
     assert os.path.dirname(named[0]) == session._cds_dir()
+
+
+def test_caller_java_options_get_no_archive(tmp_path, cds_env):
+    """Java options the caller passes are the driver's whole
+    ``spark.driver.defaultJavaOptions``: no archive joins them."""
+    cache, _, _ = cds_env
+    mine = "-Dweakscraper.caller=1"
+    proc = _fresh_session(tmp_path, (
+        "import json\n"
+        "print(json.dumps(list(s._jvm.java.lang.management"
+        ".ManagementFactory.getRuntimeMXBean().getInputArguments())))\n"
+        ), {"spark.driver.defaultJavaOptions": mine})
+    args = json.loads(proc.stdout.splitlines()[-1])
+    assert mine in args
+    assert not [a for a in args if a.startswith(
+        ("-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit="))], args
+    assert not os.path.exists(cache)
+
+
+def test_worker_daemon_starts_before_the_first_action(tmp_path):
+    """Right after ``get_spark`` returns, with no action from the
+    caller, the JVM forks the preloading daemon."""
+    proc = _fresh_session(tmp_path, (
+        "import os, time\n"
+        "jvm = s._jvm.java.lang.ProcessHandle.current().pid()\n"
+        "def daemons():\n"
+        "    found = []\n"
+        "    for pid in filter(str.isdigit, os.listdir('/proc')):\n"
+        "        try:\n"
+        "            with open(f'/proc/{pid}/stat') as fh:\n"
+        "                stat = fh.read()\n"
+        "            with open(f'/proc/{pid}/cmdline', 'rb') as fh:\n"
+        "                cmd = fh.read()\n"
+        "        except OSError:\n"
+        "            continue\n"
+        "        ppid = int(stat[stat.rindex(')') + 2:].split()[1])\n"
+        f"        if ppid == jvm and {DAEMON.encode()!r} in cmd:\n"
+        "            found.append(pid)\n"
+        "    return found\n"
+        "deadline = time.monotonic() + 60\n"
+        "while not daemons() and time.monotonic() < deadline:\n"
+        "    time.sleep(0.05)\n"
+        "print(len(daemons()))\n"))
+    assert proc.stdout.splitlines()[-1] == "1"
+
+
+def test_stop_right_after_start_is_quiet(tmp_path):
+    """A ``stop()`` that cancels the session's daemon-start job neither
+    fails the caller nor writes to its stdout."""
+    proc = _fresh_session(tmp_path, "s.stop()\nprint('caller done')\n")
+    assert proc.stdout.splitlines()[-1] == "caller done"

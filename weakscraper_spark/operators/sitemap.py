@@ -35,7 +35,7 @@ def decode_predefined_entities(col: Column) -> Column:
     """The five predefined XML entities; ``&amp;`` decodes LAST so a
     double-escape resolves one level, as an XML parser would. The ONE
     shared implementation for every markup-tier scanner (sitemap,
-    feeds, htmltable — r05 review deduplicated three copies)."""
+    feeds)."""
     for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
                     ("&apos;", "'"), ("&amp;", "&")):
         col = F.replace(col, F.lit(ent), F.lit(ch))

@@ -74,6 +74,17 @@ local[N]):
   more than ``*.template`` files, a caller's own
   ``spark.driver.defaultJavaOptions``, a JVM already running, a
   published file whose size changed — means a plain start.
+- Once a local session whose driver JVM ``get_spark`` launched
+  exists, a daemon thread runs a one-task no-op ``mapInArrow`` job.
+  The JVM then forks the preloading worker daemon (interpreter start
+  plus about 0.35 s of imports), and loads and compiles the Arrow
+  path that the engine stages take, while the caller still builds its
+  registry and plans its first job, not after. RDD and SQL tasks
+  share one daemon (above), so the caller's first Python task finds
+  it running or waits for the same start. A ``stop()`` that cancels
+  the job ends the thread quietly, with nothing on stdout. A start
+  that reuses a running JVM (a second ``get_spark``, ``spark-submit``)
+  does not run it, nor do other masters.
 """
 
 from __future__ import annotations
@@ -84,6 +95,7 @@ import json
 import os
 import shutil
 import subprocess
+import threading
 from typing import NamedTuple
 
 import pyspark
@@ -284,6 +296,24 @@ def _cds_plan(extra_conf: dict[str, str]) -> _Archive | None:
                     empty, stem + ".cp")
 
 
+def _start_worker_daemon(spark: SparkSession) -> None:
+    """Run a one-task no-op ``mapInArrow`` job on a daemon thread, so
+    the JVM forks the preloading worker daemon, and loads and compiles
+    the Arrow path every engine stage takes, while the caller still
+    plans its first job. A ``stop()`` that cancels the job ends the
+    thread quietly; the first real task then starts the daemon
+    itself."""
+    def run():
+        try:
+            spark.range(1, numPartitions=1).mapInArrow(
+                lambda batches: batches, "id long").collect()
+        except Exception:
+            pass
+
+    threading.Thread(target=run, name="worker-daemon-start",
+                     daemon=True).start()
+
+
 def get_spark(app_name: str = "weakscraper_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -350,8 +380,10 @@ def get_spark(app_name: str = "weakscraper_spark",
     extra_conf = extra_conf or {}
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    cds = (_cds_plan(extra_conf) if SparkContext._gateway is None
-           and "PYSPARK_GATEWAY_PORT" not in os.environ else None)
+    launch = (SparkContext._gateway is None
+              and "PYSPARK_GATEWAY_PORT" not in os.environ)
+    local_launch = launch and master.startswith("local")
+    cds = _cds_plan(extra_conf) if launch else None
     if cds is None:
         spark = builder.getOrCreate()
     else:
@@ -376,4 +408,6 @@ def get_spark(app_name: str = "weakscraper_spark",
             except OSError:
                 pass  # the temp file is then an orphan, deleted later
     spark.sparkContext.setLogLevel("WARN")
+    if local_launch:
+        _start_worker_daemon(spark)
     return spark
