@@ -1591,29 +1591,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("lang"))
     q["mix_corpus"] = mix_corpus
 
-    def dup_substrings(spark, sf):
-        # exact-substring dedup at k-token granularity (Lee et al.
-        # 2022 approximation): per-doc stats over merged duplicated
-        # k-gram spans. k=8 so the synthetic corpus's repeated
-        # phrases actually mark spans at sf0.01.
-        from weakscraper_spark.operators.substr import (
-            dup_substring_stats)
-        out = dup_substring_stats(_t(spark, sf, "documents"), k=8)
-        return out.select("doc_id", "n_tokens", "n_dup_spans",
-                          "dup_tokens", _dec(F.col("dup_frac"), 4)
-                          .alias("dup_frac"))
-    q["dup_substrings"] = dup_substrings
-
-    def trim_substrings(spark, sf):
-        # the actionable Lee et al. trim policy: cut every merged
-        # duplicated k-gram span and re-join the surviving tokens —
-        # the rewritten text itself is value-checked, not just the
-        # span accounting.
-        from weakscraper_spark.operators.substr import (
-            trim_dup_substrings)
-        return trim_dup_substrings(_t(spark, sf, "documents"), k=8)
-    q["trim_substrings"] = trim_substrings
-
     def chunk_docs(spark, sf):
         # fixed-window token chunking (doc -> training examples):
         # sliding windows of 48 tokens advancing by 32, truncated
@@ -2607,8 +2584,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (2) queries whose oracle or semantics changed this round
     # (r06 staged-truth promotions pdf_pages/compression_ratios/
     # induce_hosts; bucketed_join pre-collect aggregate;
-    # feed_discovery base-href fix; dup/trim_substrings
-    # localCheckpoint; ivf_ann_topk init change),
+    # feed_discovery base-href fix; ivf_ann_topk init change),
     # (3) rotation of the rest.
     _sample_first = [
         "warc_cdx", "redirect_map", "warc_write", "minhash_incr",
@@ -2617,8 +2593,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_noindex", "canonical_groups", "recrawl_plan",
         "surt_keys", "cdx_records", "cdx_dedup", "pdf_pages",
         "compression_ratios", "induce_hosts",
-        "bucketed_join", "feed_discovery", "dup_substrings",
-        "trim_substrings", "ivf_ann_topk",
+        "bucketed_join", "feed_discovery", "ivf_ann_topk",
         "feed_entries", "feed_headers",
         "postings_index", "phrase_hits", "drift_hosts",
         "doc_sentences", "discovered_frontier",
@@ -2641,53 +2616,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 # oracle SQL (DuckDB dialect; tables pre-registered as views)
 # ---------------------------------------------------------------------------
-
-
-# shared by the dup_substrings / trim_substrings oracles (r05 review:
-# the twins previously stated this ~40-line gaps-and-islands chain
-# twice and could drift apart): tokenize -> k=8 gram hashes -> dup
-# hashes -> marks -> merged [s, e) spans per doc, mirroring
-# operators/substr.py::_merged_spans
-_DUP_SPANS_CTE = """tk AS (
-                SELECT doc_id,
-                       string_split_regex(trim(lower(text)), '\\s+')
-                           AS t
-                FROM documents),
-            g AS (
-                SELECT doc_id,
-                       unnest(range(0, len(t) - 7)) AS start, t
-                FROM tk WHERE len(t) >= 8),
-            h AS (
-                SELECT doc_id, start,
-                       md5(array_to_string(
-                           t[(start + 1):(start + 8)], ' ')) AS h
-                FROM g),
-            dup AS (SELECT h FROM h GROUP BY h HAVING count(*) >= 2),
-            m AS (SELECT doc_id, start FROM h JOIN dup USING (h)),
-            pe AS (
-                SELECT doc_id, start,
-                       max(start + 8) OVER (
-                           PARTITION BY doc_id ORDER BY start
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING) AS prev_end
-                FROM m),
-            i AS (
-                SELECT doc_id, start,
-                       CASE WHEN prev_end IS NULL
-                                 OR start > prev_end
-                            THEN 1 ELSE 0 END AS nw
-                FROM pe),
-            il AS (
-                SELECT doc_id, start,
-                       sum(nw) OVER (
-                           PARTITION BY doc_id ORDER BY start
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS isl
-                FROM i),
-            sp AS (
-                SELECT doc_id, isl, min(start) AS s,
-                       max(start) + 8 AS e
-                FROM il GROUP BY 1, 2)"""
 
 
 # fixed TRAINABLE merge list for the bpe_encode oracle pair: every
@@ -2958,42 +2886,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY src_host, dst_host)"""
 
     return {
-        "dup_substrings": "WITH " + _DUP_SPANS_CTE + """,
-            pd AS (
-                SELECT doc_id, count(*) AS n_dup_spans,
-                       sum(e - s) AS dup_tokens
-                FROM sp GROUP BY 1)
-            SELECT tk.doc_id,
-                   len(tk.t)::BIGINT AS n_tokens,
-                   coalesce(pd.n_dup_spans, 0)::BIGINT AS n_dup_spans,
-                   coalesce(pd.dup_tokens, 0)::BIGINT AS dup_tokens,
-                   CAST(CAST(round(coalesce(pd.dup_tokens, 0)
-                                   / greatest(len(tk.t), 1)::DOUBLE, 4)
-                             AS DECIMAL(18,4)) AS VARCHAR) AS dup_frac
-            FROM tk LEFT JOIN pd USING (doc_id)
-        """,
-        "trim_substrings": "WITH " + _DUP_SPANS_CTE + """,
-            tok AS (
-                SELECT doc_id, unnest(range(0, len(t))) AS i, t
-                FROM tk),
-            kept AS (
-                SELECT tok.doc_id, tok.i, tok.t[tok.i + 1] AS w
-                FROM tok LEFT JOIN sp
-                  ON sp.doc_id = tok.doc_id
-                 AND tok.i >= sp.s AND tok.i < sp.e
-                WHERE sp.s IS NULL),
-            agg AS (
-                SELECT doc_id,
-                       string_agg(w, ' ' ORDER BY i) AS text_clean,
-                       count(*) AS n_kept
-                FROM kept GROUP BY 1)
-            SELECT tk.doc_id,
-                   coalesce(agg.text_clean, '') AS text_clean,
-                   len(tk.t)::BIGINT AS n_tokens,
-                   (len(tk.t) - coalesce(agg.n_kept, 0))::BIGINT
-                       AS dup_tokens
-            FROM tk LEFT JOIN agg USING (doc_id)
-        """,
         "chunk_docs": """
             WITH tk AS (
                 SELECT doc_id,

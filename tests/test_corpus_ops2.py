@@ -1,63 +1,9 @@
-"""Functional tests for the round-5 corpus operators: exact-substring
-duplication spans (Lee et al. k-gram approximation), the Naive-Bayes
+"""Functional tests for the round-5 corpus operators: the Naive-Bayes
 model-based quality filter, the URL-string quality gate, and the
 deterministic epoch shuffle with distributed global positions."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def sub_docs(spark):
-    # 12-token shared run planted in docs 1 and 2 (positions differ);
-    # doc 3 repeats its own 8-token phrase twice; doc 4 is clean.
-    shared = "alpha beta gamma delta epsilon zeta eta theta " \
-             "iota kappa lambda mu"
-    rep = "one two three four five six seven eight"
-    rows = [
-        (1, f"start marker {shared} tail words here"),
-        (2, f"{shared} completely different ending tokens now"),
-        (3, f"{rep} filler middle words {rep}"),
-        (4, "totally unique sentence with no repeated material "
-            "anywhere in this corpus at all"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_dup_substring_spans_positions(sub_docs):
-    from weakscraper_spark.operators.substr import dup_substring_spans
-    spans = {(r.doc_id, r.span_start, r.span_end)
-             for r in dup_substring_spans(sub_docs, k=8).collect()}
-    # doc 1: shared run is tokens 2..13 → k=8 grams at starts 2..6,
-    # merged span [2, 14)
-    assert (1, 2, 14) in spans
-    # doc 2: same run at tokens 0..11 → merged span [0, 12)
-    assert (2, 0, 12) in spans
-    # doc 3: self-repeat, both occurrences marked
-    assert any(d == 3 for d, _, _ in spans)
-    assert not any(d == 4 for d, _, _ in spans)
-
-
-def test_dup_substring_stats_rollup(sub_docs):
-    from weakscraper_spark.operators.substr import dup_substring_stats
-    out = {r.doc_id: r for r in
-           dup_substring_stats(sub_docs, k=8).collect()}
-    assert len(out) == 4                      # every input doc present
-    assert out[1].dup_tokens == 12
-    assert out[2].dup_tokens == 12
-    assert out[4].n_dup_spans == 0 and out[4].dup_frac == 0.0
-    # doc 3: both 8-token occurrences duplicated = 16 tokens of 19
-    assert out[3].dup_tokens == 16
-    assert float(out[3].dup_frac) == round(16 / 19, 4)
-
-
-def test_dup_substring_short_docs(spark):
-    """Docs shorter than k emit no grams but still get a stats row."""
-    from weakscraper_spark.operators.substr import dup_substring_stats
-    df = spark.createDataFrame(
-        [(1, "tiny doc"), (2, "tiny doc")], "doc_id long, text string")
-    out = {r.doc_id: r for r in dup_substring_stats(df, k=8).collect()}
-    assert out[1].n_dup_spans == 0 and out[1].n_tokens == 2
 
 
 def test_nb_classifier_separates(spark):
@@ -146,22 +92,6 @@ def test_epoch_shuffle_seeds_differ(spark):
     a = {r.doc_id: r.pos for r in epoch_shuffle(df, seed=1).collect()}
     b = {r.doc_id: r.pos for r in epoch_shuffle(df, seed=2).collect()}
     assert a != b
-
-
-def test_trim_dup_substrings(sub_docs):
-    from weakscraper_spark.operators.substr import trim_dup_substrings
-    out = {r.doc_id: r for r in
-           trim_dup_substrings(sub_docs, k=8).collect()}
-    assert out[1].text_clean == "start marker tail words here"
-    assert out[1].dup_tokens == 12 and out[1].n_tokens == 17
-    assert out[2].text_clean == \
-        "completely different ending tokens now"
-    assert out[3].text_clean == "filler middle words"  # both copies cut
-    # clean doc passes through (lower-folded token join)
-    assert out[4].dup_tokens == 0
-    assert out[4].text_clean == \
-        "totally unique sentence with no repeated material " \
-        "anywhere in this corpus at all"
 
 
 def test_chunk_tokens_disjoint(spark):

@@ -621,3 +621,81 @@ def test_arrow_stages_match_in_process_kernels(spark, differential_inputs,
                 "mismatch:MarkupError"} <= statuses
     finally:
         spark.conf.set(tz_key, tz)
+
+
+def test_hooks_through_the_spark_stage(spark):
+    """``wp-function`` hooks reach the matcher through
+    ``extract_pages(..., functions=)``: every parity-ring fixture that
+    declares ``functions`` (one of them a lambda, so the callables
+    travel in the stage's closure) gives the status, text and
+    ``fields_json`` that ``TemplateScraper(template, functions)``
+    gives in-process."""
+    import json
+    import sys
+    from pathlib import Path
+
+    from weakscraper_spark.enginelib import TemplateScraper
+    from weakscraper_spark.operators.extract import extract_pages
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "fixtures"))
+    from corpus import FIXTURES
+
+    hooked = [fx for fx in FIXTURES if fx.get("functions")]
+    assert len(hooked) >= 2
+    for fx in hooked:
+        scraper = TemplateScraper(fx["template"], fx["functions"])
+        df = spark.createDataFrame(
+            [("fx/" + fx["fixture_id"], None, "t", fx["page"])],
+            "url string, warc_ts timestamp, template_id string, "
+            "html string")
+        got = extract_pages(df, {"t": scraper.spec_json()},
+                            functions=fx["functions"]).first()
+        want = scraper.extract(fx["page"])
+        assert want["status"] == "ok" and want["fields"] == fx["expected"]
+        assert (got.status, got.text, got.fields_json) == (
+            want["status"], want["text"],
+            json.dumps(want["fields"], sort_keys=True,
+                       ensure_ascii=False, default=str)), fx["fixture_id"]
+
+
+def test_null_status_counts_as_failure_everywhere(spark):
+    """A NULL status (a serving table fed from outside) is a failure in
+    the per-host daily error rate over the refresh loop's narrow
+    relation, in the refresh summary's before-rate and in the
+    worst-host report, as it already is in ``run_pipeline``'s report.
+    Host h: day 1 two ok rows; day 2 one ok, one mismatch and one
+    NULL, so day 2's error rate is 2/3 and the jump crosses
+    ``min_jump`` only when the NULL row counts."""
+    import datetime as dt
+
+    from weakscraper_spark.operators.drift import host_error_daily
+    from weakscraper_spark.plans.refresh import (
+        _narrow_status, refresh_from_output)
+
+    d1, d2 = dt.datetime(2026, 1, 1, 12), dt.datetime(2026, 1, 2, 12)
+    out = spark.createDataFrame(
+        [("https://h.example/1", d1, "ok"),
+         ("https://h.example/2", d1, "ok"),
+         ("https://h.example/3", d2, "ok"),
+         ("https://h.example/4", d2, "mismatch:TagError"),
+         ("https://h.example/5", d2, None)],
+        "url string, warc_ts timestamp, status string")
+
+    daily = {r.day: (r.n_pages, r.n_err) for r in host_error_daily(
+        _narrow_status(out).select(
+            "host", F.col("warc_ts").alias("ts"), "ok")).collect()}
+    assert daily == {d1.date(): (2, 0), d2.date(): (3, 2)}
+
+    pages = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, html string, lang string")
+    templates = spark.createDataFrame(
+        [], "host_pattern string, template_id string, "
+            "template_json string")
+    res = refresh_from_output(out, pages, templates, {}, min_jump=0.6)
+    summary = [r.asDict() for r in res["summary"].collect()]
+    assert [(s["host"], s["n_post"]) for s in summary] == [
+        ("h.example", 3)]
+    assert summary[0]["rate_before_refresh"] == pytest.approx(2 / 3)
+
+    (rep,) = host_report(out).collect()
+    assert (rep.n_pages, rep.n_fail) == (5, 2)

@@ -422,40 +422,6 @@ def test_anchor_topk_window_is_above_vocab_sized_agg(spark):
     assert "BatchEvalPython" not in names
 
 
-def test_dup_substring_windows_are_per_doc_only(spark):
-    """The gaps-and-islands merge must window PARTITION BY doc
-    (bounded by one document's grams), and the duplicate-hash
-    selection must be a two-phase agg on the gram hash, not a window
-    over the hash key (the hottest boilerplate gram would buffer in
-    one task)."""
-    import io as _io, contextlib as _ctx
-    from weakscraper_spark.operators.substr import (
-        _merged_spans_lazy, _tokenized)
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h i"), (2, "a b c d e f g h j")],
-        "doc_id long, text string")
-    # inspect the LAZY span expression: the eager wrapper
-    # localCheckpoints (to drop the gram cache, r05 advice), which
-    # truncates the lineage explain() can see
-    plan_df, grams = _merged_spans_lazy(_tokenized(df, "doc_id",
-                                                   "text"), 8)
-    try:
-        nodes = _plan_nodes(plan_df)
-        names = [n for _, n in nodes]
-        assert "HashAggregate" in names
-        buf = _io.StringIO()
-        with _ctx.redirect_stdout(buf):
-            plan_df.explain(True)
-        txt = buf.getvalue()
-        win_lines = [line for line in txt.splitlines()
-                     if "windowspecdefinition" in line.lower()]
-        assert win_lines, "expected the gaps-and-islands window"
-        for line in win_lines:
-            assert "doc" in line.lower()
-    finally:
-        grams.unpersist()
-
-
 def test_epoch_shuffle_no_global_window(spark):
     """Global positions must come from range partitioning + per-
     partition windows + offsets — never row_number over a global

@@ -21,7 +21,6 @@ Layout:
   CC-style pages table.
 - ``plans``     — session builder + the end-to-end pipeline (C1–C13
   of SURVEY.md §3C).
-- ``functions`` — registry for user transform hooks (wp-function).
 - ``streaming`` — optional Structured Streaming wrapper.
 """
 

@@ -31,19 +31,18 @@ from typing import Iterator
 
 from .dom import Node, is_tag, is_text, parse_html
 from .errors import TemplateError
-from .spec import Spec, _captures
+from .spec import Spec, _captures, nugget_spec, tag_spec
 from .textnorm import normalize_text
 
 
-def _mk_tag_spec(tag: str, attrs: dict[str, str]) -> Spec:
-    return {
-        "kind": "tag", "tag": tag, "attrs": attrs,
-        "capture": None, "capture_attrs": None,
-        "recursive": False, "list": False, "optional": False,
-        "function": None, "function_attrs": None,
-        "ignore_attrs": False, "ignore_content": False,
-        "nested": False, "children": [],
-    }
+def _text_spec(column: list[Node], slots: Iterator[int],
+               prefix: str) -> Spec:
+    """One aligned text position: literal text where every sample
+    agrees, else a nugget capture slot."""
+    texts = {normalize_text(c["content"]) for c in column}
+    if len(texts) == 1:
+        return {"kind": "text", "content": texts.pop()}
+    return nugget_spec(f"{prefix}_{next(slots)}")
 
 
 def _one_sig(c: Node) -> tuple:
@@ -98,7 +97,7 @@ def _induce_tag(nodes: list[Node], slots: Iterator[int], prefix: str) -> Spec:
     names = {n["name"] for n in nodes}
     if len(names) != 1:
         raise TemplateError(f"cannot align diverging tags {sorted(names)}")
-    spec = _mk_tag_spec(names.pop(), _common_attrs(nodes))
+    spec = tag_spec(names.pop(), _common_attrs(nodes))
 
     # Atomic-capture case first (A7 shape): every sample has exactly one
     # text child. Diverging text ⇒ capture slot; equal ⇒ literal.
@@ -117,16 +116,7 @@ def _induce_tag(nodes: list[Node], slots: Iterator[int], prefix: str) -> Spec:
         for i, kind in enumerate(sig):
             column = [n["children"][i] for n in nodes]
             if kind == ("text",):
-                texts = {normalize_text(c["content"]) for c in column}
-                if len(texts) == 1:
-                    spec["children"].append(
-                        {"kind": "text", "content": texts.pop()})
-                else:
-                    spec["children"].append({
-                        "kind": "nugget",
-                        "capture": f"{prefix}_{next(slots)}",
-                        "function": None, "optional": False,
-                    })
+                spec["children"].append(_text_spec(column, slots, prefix))
             else:
                 spec["children"].append(_induce_tag(column, slots, prefix))
         spec["nested"] = any(_captures(c) for c in spec["children"])
@@ -172,16 +162,7 @@ def _induce_tag(nodes: list[Node], slots: Iterator[int], prefix: str) -> Spec:
                     spec["ignore_content"] = True
                     spec["children"] = []
                     return spec
-                texts = {normalize_text(c["content"]) for c in column}
-                if len(texts) == 1:
-                    spec["children"].append(
-                        {"kind": "text", "content": texts.pop()})
-                else:
-                    spec["children"].append({
-                        "kind": "nugget",
-                        "capture": f"{prefix}_{next(slots)}",
-                        "function": None, "optional": False,
-                    })
+                spec["children"].append(_text_spec(column, slots, prefix))
             else:
                 child = _induce_tag(column, slots, prefix)
                 if not full:

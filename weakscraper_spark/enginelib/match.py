@@ -17,9 +17,12 @@ Semantics pinned here (each has a fixture in tests/fixtures):
 - End conditions: leftover required template children →
   ``MissingNodeError``; leftover page children → ``ExcessNodeError``.
 
-Functions (`wp-function`) are resolved by name against a registry
-dict passed to :func:`match_document` — never pickled (SURVEY §8 risk
-register "spec serialization").
+Functions (`wp-function`) are resolved by name against the
+``functions`` dict passed to :func:`match_document` / :func:`extract`.
+The spec holds only the names, so it stays JSON; in the Spark stage
+the callables travel in the stage's closure
+(``operators.extract.extract_pages(..., functions=)``), not in the
+broadcast spec.
 """
 
 from __future__ import annotations

@@ -7,7 +7,9 @@ The compiled spec is a tree of plain dicts — deliberately JSON-able
 ``sc.broadcast`` it, and Python workers can deserialize it with only
 ``weakscraper_spark.enginelib`` on their path (spark-submit
 --py-files; SURVEY §4.1). User ``wp-function`` hooks are stored by
-NAME and resolved against a function registry at match time.
+NAME and resolved at match time against the ``functions`` dict the
+caller passes (``TemplateScraper(template, functions)``,
+``extract_pages(..., functions=)``).
 
 Marker surface (template attributes / pseudo-tags):
 
@@ -20,7 +22,7 @@ Marker surface (template attributes / pseudo-tags):
 ``wp-list``          greedy zero-or-more repetition of this child;
                      results[k] = list of items (A6)
 ``wp-optional``      child may be absent; skipped on head-mismatch (A6)
-``wp-function="f"``  apply registered function f to captured value (A11)
+``wp-function="f"``  apply the caller's function f to captured value (A11)
 ``wp-function-attrs``same, for the attrs capture (A11)
 ``wp-ignore-attrs``  skip the attribute check on this node (A12)
 ``wp-ignore-content``skip/ignore this node's children entirely (A12)
@@ -32,7 +34,8 @@ Marker surface (template attributes / pseudo-tags):
                      mixed content, capture it (A10)
 ==================  =====================================================
 
-Spec node kinds (all JSON-able):
+Spec node kinds (all JSON-able; ``tag_spec`` and ``nugget_spec`` build
+the first and last):
   {"kind":"tag","tag":str,"attrs":{..literal..},"capture":k|None,
    "capture_attrs":k|None,"recursive":bool,"list":bool,"optional":bool,
    "function":f|None,"function_attrs":f|None,"ignore_attrs":bool,
@@ -74,6 +77,30 @@ def _flag(attrs: dict[str, str], key: str) -> bool:
     return key in attrs
 
 
+def tag_spec(tag: str, attrs: dict[str, str], **fields: Any) -> Spec:
+    """A tag node matching ``<tag>`` with literal ``attrs``: no
+    capture, no function, every flag off and no children, except what
+    ``fields`` sets. The one place the tag node's field set is
+    written (compile and induction both build through it)."""
+    spec: Spec = {
+        "kind": "tag", "tag": tag, "attrs": attrs,
+        "capture": None, "capture_attrs": None,
+        "recursive": False, "list": False, "optional": False,
+        "function": None, "function_attrs": None,
+        "ignore_attrs": False, "ignore_content": False,
+        "nested": False, "children": [],
+    }
+    spec.update(fields)
+    return spec
+
+
+def nugget_spec(capture: str, function: str | None = None,
+                optional: bool = False) -> Spec:
+    """A nugget node: one text node in mixed content, captured."""
+    return {"kind": "nugget", "capture": capture, "function": function,
+            "optional": optional}
+
+
 def _compile_node(node: Node) -> Spec:
     if is_text(node):
         return {"kind": "text", "content": normalize_text(node["content"])}
@@ -88,31 +115,25 @@ def _compile_node(node: Node) -> Spec:
         capture = attrs.get("wp-name")
         if not capture:
             raise TemplateError("<wp-nugget> requires wp-name")
-        return {
-            "kind": "nugget",
-            "capture": capture,
-            "function": attrs.get("wp-function"),
-            "optional": _flag(attrs, "wp-optional"),
-        }
+        return nugget_spec(capture, attrs.get("wp-function"),
+                           _flag(attrs, "wp-optional"))
 
     literal_attrs = {k: v for k, v in attrs.items() if k not in _DIRECTIVE_ATTRS}
-    spec: Spec = {
-        "kind": "tag",
-        "tag": name,
-        "attrs": literal_attrs,
-        "capture": attrs.get("wp-name"),
-        "capture_attrs": attrs.get("wp-name-attrs"),
-        "recursive": _flag(attrs, "wp-recursive"),
-        "list": _flag(attrs, "wp-list"),
-        "optional": _flag(attrs, "wp-optional"),
-        "function": attrs.get("wp-function"),
-        "function_attrs": attrs.get("wp-function-attrs"),
-        "ignore_attrs": _flag(attrs, "wp-ignore-attrs"),
-        "ignore_content": _flag(attrs, "wp-ignore-content"),
-        "children": [_compile_node(c) for c in node["children"]],
-    }
-
-    spec["nested"] = any(_captures(c) for c in spec["children"])
+    children = [_compile_node(c) for c in node["children"]]
+    spec = tag_spec(
+        name, literal_attrs,
+        capture=attrs.get("wp-name"),
+        capture_attrs=attrs.get("wp-name-attrs"),
+        recursive=_flag(attrs, "wp-recursive"),
+        list=_flag(attrs, "wp-list"),
+        optional=_flag(attrs, "wp-optional"),
+        function=attrs.get("wp-function"),
+        function_attrs=attrs.get("wp-function-attrs"),
+        ignore_attrs=_flag(attrs, "wp-ignore-attrs"),
+        ignore_content=_flag(attrs, "wp-ignore-content"),
+        nested=any(_captures(c) for c in children),
+        children=children,
+    )
 
     # --- compile-time validation (driver-side; raising is fine here) --
     if spec["recursive"] and not spec["capture"]:

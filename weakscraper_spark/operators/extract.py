@@ -56,10 +56,12 @@ OK_STATUSES = ("ok", "ok_heuristic")
 
 
 def status_ok() -> Column:
-    """Boolean column: the row's ``status`` is in the ok class. Every
-    success/failure count uses this expression, so a heuristic rescue
-    counts as a success wherever a template match does."""
-    return F.col("status").isin(*OK_STATUSES)
+    """Non-NULL boolean column: the row's ``status`` is in the ok
+    class. Every success/failure count uses this expression, so a
+    heuristic rescue counts as a success wherever a template match
+    does, and a NULL status (a serving table or monitor source fed
+    from outside) counts as a failure wherever any status does."""
+    return F.coalesce(F.col("status").isin(*OK_STATUSES), F.lit(False))
 
 
 EXTRACT_SCHEMA = (

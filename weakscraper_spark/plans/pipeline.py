@@ -40,7 +40,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages, status_ok
@@ -51,15 +51,21 @@ from ..sources.synth import compiled_specs, synth_pages, synth_templates
 # C2 — filter + project (+host derivation, JVM-side)
 # --------------------------------------------------------------------------
 
+def url_host() -> Column:
+    """The host key of the ``url`` column — the key templates attach
+    on and every per-host rate groups by. ``try_``: a malformed url
+    in real CC data must NULL its host, not crash the job (Spark 4
+    ANSI ``parse_url`` raises)."""
+    return F.try_parse_url("url", F.lit("HOST"))
+
+
 def prepare_pages(pages: DataFrame, langs: list[str] | None = None) -> DataFrame:
     """Filter to extractable rows and derive the host key. All
     JVM-side built-ins (pushed to the scan where possible)."""
     out = pages.filter(F.length("html") > 0)
     if langs:
         out = out.filter(F.col("lang").isin(langs))
-    # try_: a malformed url in real CC data must NULL its host, not
-    # crash the job (Spark 4 ANSI parse_url raises)
-    return out.withColumn("host", F.try_parse_url("url", F.lit("HOST")))
+    return out.withColumn("host", url_host())
 
 
 # --------------------------------------------------------------------------
@@ -159,7 +165,7 @@ def host_stats_salted(pages: DataFrame, n_salts: int = 16) -> DataFrame:
 
 def host_report(out: DataFrame, k: int = 10) -> DataFrame:
     per_host = (
-        out.withColumn("host", F.try_parse_url("url", F.lit("HOST")))
+        out.withColumn("host", url_host())
         .groupBy("host")
         .agg(F.count("*").alias("n_pages"),
              F.sum(F.when(status_ok(), 0).otherwise(1))
@@ -280,7 +286,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
                               done_urls=done, n_salts=n_salts,
                               num_partitions=num_partitions,
                               fallback=fallback)
-    ok = F.coalesce(status_ok(), F.lit(False))
+    ok = status_ok()
     obs = Observation()
     plan = plan.observe(
         obs,

@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..operators.drift import drift_points
 from ..operators.extract import extract_pages, status_ok
 from ..operators.induction import induce_templates
-from .pipeline import build_extract_plan, dedup_latest, prepare_pages
+from .pipeline import (attach_template, build_extract_plan, dedup_latest,
+                       prepare_pages, url_host)
 
 _REGISTRY_SCHEMA = ("host_pattern string, template_id string, "
                     "template_json string")
@@ -56,8 +57,15 @@ def _narrow_status(out: DataFrame) -> DataFrame:
     the relation every downstream lifecycle stage consumes."""
     return out.select(
         "url", "warc_ts", "status",
-        F.try_parse_url("url", F.lit("HOST")).alias("host"),
-        status_ok().alias("ok"))
+        url_host().alias("host"), status_ok().alias("ok"))
+
+
+def _post_drift(df: DataFrame, rotted: DataFrame) -> DataFrame:
+    """The rows of ``df`` (host, warc_ts, ...) on a rotted host from
+    its drift day on, with that ``drift_day`` attached — the window
+    re-induced, re-extracted and compared before and after."""
+    return (df.join(F.broadcast(rotted), "host")
+            .filter(F.col("warc_ts").cast("date") >= F.col("drift_day")))
 
 
 def refresh_templates(pages: DataFrame, templates: DataFrame,
@@ -126,11 +134,7 @@ def _refresh_loop(first_narrow: DataFrame, pages: DataFrame,
         min_jump=min_jump)
     rotted = drift.select("host", "drift_day")
 
-    staged = prepare_pages(pages, langs)
-    post_pages = (staged
-                  .join(F.broadcast(rotted), "host")
-                  .filter(F.col("warc_ts").cast("date") >=
-                          F.col("drift_day")))
+    post_pages = _post_drift(prepare_pages(pages, langs), rotted)
     induced = induce_templates(post_pages, k=k)
     reg_rows = (induced.filter(F.col("status") == "ok")
                 .select("host_pattern", "template_id",
@@ -142,28 +146,21 @@ def _refresh_loop(first_narrow: DataFrame, pages: DataFrame,
          for r in reg_rows], _REGISTRY_SCHEMA)
 
     # re-extract the post-drift pages under the induced registry
-    # (left join: a host whose induction failed keeps template_id
-    # NULL and surfaces as error:NoTemplate — visible, not vanished)
-    re_staged = post_pages.join(
-        F.broadcast(induced_reg.select(
-            F.col("host_pattern").alias("host"), "template_id")),
-        "host", "left")
-    second = _narrow_status(
-        dedup_latest(extract_pages(re_staged, new_specs,
-                                   fallback=fallback)))
+    # (attach_template's left join: a host whose induction failed
+    # keeps template_id NULL and surfaces as error:NoTemplate —
+    # visible, not vanished)
+    second = _narrow_status(dedup_latest(extract_pages(
+        attach_template(post_pages, induced_reg), new_specs,
+        fallback=fallback)))
 
-    before = (first_narrow
-              .join(F.broadcast(rotted), "host")
-              .filter(F.col("warc_ts").cast("date") >=
-                      F.col("drift_day"))
+    err_rate = F.avg((~F.col("ok")).cast("double"))
+    before = (_post_drift(first_narrow, rotted)
               .groupBy("host", "drift_day")
               .agg(F.count("*").alias("n_post"),
-                   F.avg((~F.col("ok")).cast("double"))
-                    .alias("rate_before_refresh")))
+                   err_rate.alias("rate_before_refresh")))
     after = (second.groupBy("host")
              .agg(F.count("*").alias("n_post_after"),
-                  F.avg((~F.col("ok")).cast("double"))
-                   .alias("rate_after_refresh")))
+                  err_rate.alias("rate_after_refresh")))
     summary = before.join(after, "host", "left")
 
     kept = templates.join(

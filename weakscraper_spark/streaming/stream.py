@@ -31,7 +31,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages, status_ok
-from ..plans.pipeline import attach_template, prepare_pages
+from ..plans.pipeline import attach_template, prepare_pages, url_host
+
+
+def _batch_sink(templates: DataFrame, specs: dict[str, str],
+                out_dir: str, fallback: str | None):
+    """The ``foreachBatch`` body both extract streams run: the batch
+    extract stage over one micro-batch, written over its own
+    ``batch_id=<id>`` partition (``stream_extract``'s docstring has
+    why that makes the sink idempotent)."""
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        staged = attach_template(prepare_pages(batch_df), templates)
+        out = extract_pages(staged, specs, fallback=fallback)
+        out.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}"))
+    return process_batch
 
 
 def stream_extract(spark: SparkSession, source_dir: str,
@@ -56,13 +70,8 @@ def stream_extract(spark: SparkSession, source_dir: str,
     if watermark:
         stream = stream.withWatermark("warc_ts", watermark)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        staged = attach_template(prepare_pages(batch_df), templates)
-        out = extract_pages(staged, specs, fallback=fallback)
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}"))
-
-    writer = (stream.writeStream.foreachBatch(process_batch)
+    writer = (stream.writeStream.foreachBatch(
+                  _batch_sink(templates, specs, out_dir, fallback))
               .option("checkpointLocation", checkpoint_dir))
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
@@ -142,13 +151,8 @@ def stream_extract_latest(spark: SparkSession, source_dir: str,
                   timeoutConf=("EventTimeTimeout" if ttl_ms is not None
                                else "NoTimeout")))
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        staged = attach_template(prepare_pages(batch_df), templates)
-        out = extract_pages(staged, specs, fallback=fallback)
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}"))
-
-    writer = (latest.writeStream.foreachBatch(process_batch)
+    writer = (latest.writeStream.foreachBatch(
+                  _batch_sink(templates, specs, out_dir, fallback))
               .outputMode("update")
               .option("checkpointLocation", checkpoint_dir))
     if trigger_available_now:
@@ -195,11 +199,9 @@ def stream_host_error_rates(spark: SparkSession, source_dir: str,
     stream = (spark.readStream.schema(source_schema)
               .parquet(source_dir))
     if host_col not in stream.columns and "url" in stream.columns:
-        stream = stream.withColumn(
-            host_col, F.try_parse_url("url", F.lit("HOST")))
+        stream = stream.withColumn(host_col, url_host())
     if ok_col not in stream.columns and "status" in stream.columns:
-        stream = stream.withColumn(
-            ok_col, status_ok())
+        stream = stream.withColumn(ok_col, status_ok())
     stream = stream.withWatermark(ts_col, watermark)
     err = (~F.col(ok_col).cast("boolean")).cast("int")
     agg = (stream
