@@ -1022,33 +1022,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                           _dec(F.col("score"), 4).alias("score"))
     q["bm25_search"] = bm25_search
 
-    def vocab_top(spark, sf):
-        # tokenizer prep: corpus word frequencies, deterministic
-        # top-k
-        from weakscraper_spark.operators.vocab import vocab_counts
-        return vocab_counts(_t(spark, sf, "documents"), top_k=25)
-    q["vocab_top"] = vocab_top
-
-    def bpe_pairs(spark, sf):
-        # first BPE round: frequency-weighted adjacent symbol-pair
-        # counts over the distinct-word table (the oracle-checkable
-        # primitive of train_bpe)
-        from weakscraper_spark.operators.vocab import (
-            _pair_counts, _syms_df, vocab_counts)
-        return _pair_counts(_syms_df(
-            vocab_counts(_t(spark, sf, "documents"))))
-    q["bpe_pairs"] = bpe_pairs
-
-    def bpe_merges(spark, sf):
-        # the learned merge list itself (iterative, driver-
-        # coordinated — rows-only; fully deterministic)
-        from weakscraper_spark.operators.vocab import train_bpe
-        merges = train_bpe(_t(spark, sf, "documents"), n_merges=12)
-        return spark.createDataFrame(
-            [(i, l, r) for i, (l, r) in enumerate(merges)],
-            "merge_rank int, left string, right string")
-    q["bpe_merges"] = bpe_merges
-
     def hybrid_search(spark, sf):
         # hybrid retrieval: BM25 top-50 + cosine top-50 (query =
         # embedding of vec_id 0; doc ids and vec ids share the 0..N
@@ -2080,16 +2053,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return discover_feeds(pages)
     q["feed_discovery"] = feed_discovery
 
-    # ---- BPE ENCODE (operators/vocab.py::encode_bpe) — the serving
-    # half of the tokenizer, oracle-checked: with a FIXED trainable
-    # merge list the ordered-replay segmentation is expressible as a
-    # separator-replace chain, which DuckDB mirrors exactly ---------------
-    def bpe_encode(spark, sf):
-        from weakscraper_spark.operators.vocab import encode_bpe
-        return (encode_bpe(_t(spark, sf, "documents"), _BPE_MERGES)
-                .select("doc_id", "n_words", "n_pieces"))
-    q["bpe_encode"] = bpe_encode
-
     # ---- quantile quality pruning (operators/corpus.py): keep each
     # source's top 60% by length score; exact interpolated percentile
     # matches DuckDB quantile_cont bit-for-bit ----------------------------
@@ -2598,7 +2561,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "postings_index", "phrase_hits", "drift_hosts",
         "doc_sentences", "discovered_frontier",
         "snap_change_rate",
-        "bpe_encode", "prune_quantile", "fields_long",
+        "prune_quantile", "fields_long",
         "extract_spans", "induce_roundtrip",
         "chunk_docs", "sitemap_entries",
         "robots_sitemaps", "tfidf_keywords", "host_split",
@@ -2607,7 +2570,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "srp_overcap", "lsh_near_dup", "lsh_ann_topk",
         "extract_pages", "boiler_extract", "raw_extract",
         "web_corpus", "frontier", "corpus_clean",
-        "extract_rescued", "source_acd", "bpe_merges",
+        "extract_rescued", "source_acd",
     ]
     return {**{k: q[k] for k in _sample_first},
             **{k: v for k, v in q.items() if k not in _sample_first}}
@@ -2616,44 +2579,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 # oracle SQL (DuckDB dialect; tables pre-registered as views)
 # ---------------------------------------------------------------------------
-
-
-# fixed TRAINABLE merge list for the bpe_encode oracle pair: every
-# merge's operands are chars, </w>, or an earlier merge's output, so
-# ordered-replay == rank-based encode == the oracle's replace chain
-_BPE_MERGES = [("t", "h"), ("th", "e"), ("the", "</w>"),
-               ("d", "a"), ("da", "t"), ("dat", "a"),
-               ("data", "</w>"), ("j", "o"), ("jo", "i"),
-               ("joi", "n")]
-
-
-def _bpe_encode_sql() -> str:
-    """DuckDB twin of encode_bpe with _BPE_MERGES: each word becomes
-    its chars joined by chr(31) + '</w>', each merge (l, r) is one
-    global replace of 'l␟r' → 'lr' in list order (left-to-right
-    non-overlapping — exactly segment_word's scan), and the piece
-    count is the surviving separator count + 1."""
-    expr = "regexp_replace(w, '(.)', '\\1' || chr(31), 'g') || '</w>'"
-    for left, right in _BPE_MERGES:
-        expr = (f"replace({expr}, '{left}' || chr(31) || '{right}', "
-                f"'{left}{right}')")
-    return f"""
-            WITH tok AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(trim(lower(text)),
-                                                 '\\s+')) AS w
-                FROM documents WHERE trim(text) <> ''),
-            enc AS (SELECT doc_id, {expr} AS s FROM tok),
-            agg AS (
-                SELECT doc_id, count(*) AS n_words,
-                       sum(len(s) - len(replace(s, chr(31), '')) + 1)
-                           AS n_pieces
-                FROM enc GROUP BY doc_id)
-            SELECT d.doc_id,
-                   coalesce(a.n_words, 0)::INT AS n_words,
-                   coalesce(a.n_pieces, 0)::INT AS n_pieces
-            FROM documents d LEFT JOIN agg a USING (doc_id)
-        """
 
 
 _SHINGLES_CTE ="""
@@ -2967,7 +2892,6 @@ def oracle_sql() -> dict[str, str]:
             FROM sc JOIN thr USING (source)
             WHERE sc.s IS NOT NULL AND sc.s >= thr.t
         """,
-        "bpe_encode": _bpe_encode_sql(),
         "feed_discovery": """
             WITH d AS (
                 SELECT doc_id AS d, (doc_id % 20) AS f,
@@ -3681,37 +3605,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CAST(round(sum(c), 6) AS DECIMAL(18,6))
                         AS VARCHAR) AS rrf
             FROM fused GROUP BY 1
-        """,
-        "vocab_top": """
-            SELECT word, count(*) AS n FROM (
-                SELECT unnest(string_split_regex(trim(lower(text)),
-                                                 '\\s+')) AS word
-                FROM documents)
-            WHERE word <> ''
-            GROUP BY word
-            ORDER BY n DESC, word
-            LIMIT 25
-        """,
-        "bpe_pairs": """
-            WITH w AS (
-                SELECT word, count(*) AS n FROM (
-                    SELECT unnest(string_split_regex(trim(lower(text)),
-                                                     '\\s+')) AS word
-                    FROM documents)
-                WHERE word <> '' GROUP BY word),
-            s AS (
-                SELECT n,
-                       list_append(string_split(word, ''), '</w>')
-                           AS syms
-                FROM w),
-            p AS (
-                SELECT n,
-                       unnest(list_transform(range(1, len(syms)),
-                              i -> syms[i] || ' ' || syms[i+1]))
-                           AS pair
-                FROM s WHERE len(syms) >= 2)
-            SELECT pair, CAST(sum(n) AS BIGINT) AS cnt
-            FROM p GROUP BY 1
         """,
         "doc_len_quantiles": """
             SELECT lang, count(*) AS n,

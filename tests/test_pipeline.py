@@ -460,8 +460,7 @@ def _want_extract(raw, tid, specs, fallback, spans):
         row.update(status="error:NoTemplate",
                    error=f"no compiled template for {tid!r}")
     else:
-        r = extract(spec_from_json(spec_json), html, None, "text",
-                    spans=spans)
+        r = extract(spec_from_json(spec_json), html, spans=spans)
         row.update(status=r["status"], error=r["error"], text=r["text"],
                    n_nodes=r["n_nodes"])
         if r["fields"] is not None:
@@ -665,7 +664,8 @@ def test_null_status_counts_as_failure_everywhere(spark):
     worst-host report, as it already is in ``run_pipeline``'s report.
     Host h: day 1 two ok rows; day 2 one ok, one mismatch and one
     NULL, so day 2's error rate is 2/3 and the jump crosses
-    ``min_jump`` only when the NULL row counts."""
+    ``min_jump`` only when the NULL row counts. A caller's own NULL
+    ``ok`` flag counts as an error in ``host_error_daily`` too."""
     import datetime as dt
 
     from weakscraper_spark.operators.drift import host_error_daily
@@ -685,6 +685,11 @@ def test_null_status_counts_as_failure_everywhere(spark):
         _narrow_status(out).select(
             "host", F.col("warc_ts").alias("ts"), "ok")).collect()}
     assert daily == {d1.date(): (2, 0), d2.date(): (3, 2)}
+    flags = spark.createDataFrame(
+        [("h", d2, True), ("h", d2, False), ("h", d2, None)],
+        "host string, ts timestamp, ok boolean")
+    assert [(r.n_pages, r.n_err)
+            for r in host_error_daily(flags).collect()] == [(3, 2)]
 
     pages = spark.createDataFrame(
         [], "url string, warc_ts timestamp, html string, lang string")

@@ -356,14 +356,11 @@ def test_gram_explodes_reference_materialized_token_arrays(spark):
     from weakscraper_spark.operators.dedup import _shingles
     from weakscraper_spark.operators.textstats import (
         winnow_fingerprints)
-    from weakscraper_spark.operators.vocab import (
-        _pair_counts, _syms_df, vocab_counts)
     df = spark.createDataFrame([(1, "a b c d e f")],
                                "doc_id long, text string")
     plans = [
         _shingles(df, "doc_id", "text"),
         winnow_fingerprints(df),
-        _pair_counts(_syms_df(vocab_counts(df))),
     ]
     for p in plans:
         txt = p._jdf.queryExecution().executedPlan().toString()

@@ -210,7 +210,8 @@ def test_stream_host_error_rates(spark, tmp_path):
     """The live drift monitor: windows close as the watermark
     advances across micro-batches (maxFilesPerTrigger=1 forces
     several), closed windows match the batch twin exactly, and the
-    parquet sink feeds drift_points as a plain batch query."""
+    parquet sink feeds drift_points as a plain batch query. A NULL
+    ``ok`` flag counts as an error."""
     import datetime as dt
     from weakscraper_spark.streaming.stream import (
         stream_host_error_rates)
@@ -226,7 +227,7 @@ def test_stream_host_error_rates(spark, tmp_path):
     early = [("a.org", day(1), True), ("a.org", day(1, 6), False),
              ("b.org", day(1), True)]
     mid = [("a.org", day(2), False), ("a.org", day(2, 3), False),
-           ("b.org", day(2), True)]
+           ("b.org", day(2), True), ("b.org", day(2, 4), None)]
     # the sentinel batch advances the watermark far past days 1-2 so
     # their windows CLOSE; its own window stays open and unemitted
     late = [("z.org", day(20), True)]
@@ -252,6 +253,7 @@ def test_stream_host_error_rates(spark, tmp_path):
     assert got[("a.org", "2025-03-01 00:00:00")] == (2, 1)
     assert got[("a.org", "2025-03-02 00:00:00")] == (2, 2)
     assert got[("b.org", "2025-03-01 00:00:00")] == (1, 0)
+    assert got[("b.org", "2025-03-02 00:00:00")] == (2, 1)
     # the sentinel's own window never closed -> not emitted
     assert ("z.org", "2025-03-20 00:00:00") not in got
 

@@ -1066,157 +1066,6 @@ def test_incremental_dedup_verdicts(spark):
     assert len(out) == 3   # every new doc gets a verdict row
 
 
-def test_vocab_counts_topk_deterministic(spark):
-    from weakscraper_spark.operators.vocab import vocab_counts
-    df = spark.createDataFrame(
-        [(1, "b a a c b a"), (2, "c b")], "doc_id long, text string")
-    out = [(r.word, r.n) for r in
-           vocab_counts(df, top_k=2).orderBy(F.desc("n"), "word").collect()]
-    assert out == [("a", 3), ("b", 3)]  # tie a/b -> word asc
-
-
-def test_train_bpe_learns_expected_merges(spark):
-    """Worked example in the BPE paper's style: 'low'x5 'lowest'x2 —
-    the most frequent pair is (l,o) then (lo,w); 'low</w>' becomes a
-    single token after 3 merges."""
-    from weakscraper_spark.operators.vocab import (
-        EOW, segment_word, train_bpe)
-    text = " ".join(["low"] * 5 + ["lowest"] * 2)
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    merges = train_bpe(df, n_merges=3)
-    assert merges[0] == ("l", "o")
-    assert merges[1] == ("lo", "w")
-    seg = segment_word("low", merges)
-    assert seg == ["low" + EOW]
-    # unseen word degrades gracefully to partial merges
-    assert segment_word("lower", merges)[0] == "low"
-
-
-def test_train_bpe_stops_when_dry(spark):
-    from weakscraper_spark.operators.vocab import train_bpe
-    df = spark.createDataFrame([(1, "ab cd ef")],
-                               "doc_id long, text string")
-    # every pair occurs once -> nothing to merge
-    assert train_bpe(df, n_merges=5) == []
-
-
-def test_train_bpe_batched_equals_sequential(spark, tmp_path):
-    """Batched merges (VERDICT r03 #5) replay the sequential
-    algorithm verbatim: same merge list with batch_m=1 (pure
-    sequential) and batch_m=64, on a corpus engineered with
-    conflicting/overlapping pair frequencies; and the batched run
-    uses far fewer driver rounds than merges. checkpoint_dir variant
-    returns the same list."""
-    from weakscraper_spark.operators import vocab as V
-    text = " ".join(
-        ["low"] * 8 + ["lowest"] * 5 + ["newer"] * 6 + ["wider"] * 4 +
-        ["new"] * 7 + ["widest"] * 3 + ["lower"] * 2)
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    seq = V.train_bpe(df, n_merges=12, batch_m=1)
-    assert len(seq) == 12
-
-    calls = {"n": 0}
-    orig = V._pair_counts
-
-    def counting(sym_df):
-        calls["n"] += 1
-        return orig(sym_df)
-
-    V._pair_counts = counting
-    try:
-        bat = V.train_bpe(df, n_merges=12)
-    finally:
-        V._pair_counts = orig
-    assert bat == seq
-    # exact mode can't beat the sequential data dependency on a
-    # conflict-heavy corpus, but never exceeds one round per merge
-    assert calls["n"] <= 12
-    ck = V.train_bpe(df, n_merges=12,
-                     checkpoint_dir=str(tmp_path / "bpe_ck"))
-    assert ck == seq
-
-    # scale mode: greedy disjoint batching crushes the round count
-    calls["n"] = 0
-    V._pair_counts = counting
-    try:
-        fast = V.train_bpe(df, n_merges=12, exact=False)
-    finally:
-        V._pair_counts = orig
-    assert calls["n"] <= 4          # << 12 driver rounds
-    assert len(fast) == 12
-    assert set(fast) and fast[0] == seq[0]  # argmax always agrees
-    # every fast merge is a pair that sequential also learns on this
-    # corpus prefix-or-later (valid BPE variant, not arbitrary)
-    assert len(set(fast)) == 12
-
-
-def test_train_bpe_greedy_segment_equivalence_and_stats(spark):
-    """32k-scale mode pins (VERDICT r04 #6). Run BOTH modes to
-    SATURATION (n_merges far above what the corpus supports, so each
-    ends via the no-pair-twice early exit): (a) at saturation the
-    greedy-batch merge list SEGMENTS the vocabulary identically to
-    the exact sequential list — mid-training the two cut the merge
-    frontier at different points so prefixes differ, but the
-    saturation fixed point is the artifact a full tokenizer build
-    ships, pinned here on a deterministic corpus; (b) the ``stats``
-    hook records the driver-round economics the bench artifact
-    (BENCH/bpe32k.json) reports, and greedy needs ~an order of
-    magnitude fewer rounds than exact for near-identical merge
-    counts."""
-    from weakscraper_spark.operators.vocab import (
-        EOW, segment_word, train_bpe)
-    from weakscraper_spark.sources.synth import synth_rich_text
-
-    df = synth_rich_text(spark, 24, vocab_size=30, words_per_doc=24)
-    exact_stats, fast_stats = {}, {}
-    exact = train_bpe(df, n_merges=100_000, batch_m=64,
-                      stats=exact_stats)
-    fast = train_bpe(df, n_merges=100_000, batch_m=64, exact=False,
-                     stats=fast_stats)
-    assert exact_stats["merges_learned"] == len(exact)
-    assert fast_stats["merges_learned"] == len(fast)
-    assert sum(fast_stats["batch_sizes"]) == len(fast)
-    # the scale mode's whole point: far fewer driver rounds
-    # (measured here: ~22 greedy vs ~154 exact rounds)
-    assert fast_stats["rounds"] * 3 < exact_stats["rounds"]
-    assert fast_stats["rounds"] <= len(fast) // 3
-    sample = sorted({w for r in df.limit(8).collect()
-                     for w in r.text.split()})[:20]
-    assert len(sample) >= 10
-    for w in sample:
-        seg_e = segment_word(w, exact)
-        seg_f = segment_word(w, fast)
-        assert "".join(seg_f) == w + EOW        # lossless always
-        assert seg_f == seg_e, (w, seg_e, seg_f)
-
-
-def test_bpe_exact_batch_selection_rules():
-    """Unit-pin the dominance rules on hand-built count rows: strict
-    dominance over the first conflict, argmax fallback, truncated-
-    window bound, cnt<2 stop."""
-    from weakscraper_spark.operators.vocab import _select_exact_batch
-
-    def rows(*pairs):
-        return [{"pair": p, "cnt": c} for p, c in pairs]
-
-    # disjoint pairs above the first conflict are all taken
-    got = _select_exact_batch(
-        rows(("a b", 10), ("c d", 8), ("a x", 7), ("e f", 6)), 64)
-    assert got == [("a", "b"), ("c", "d")]
-    # conflict ties the top count -> argmax alone (sequential step)
-    got = _select_exact_batch(rows(("a b", 9), ("b c", 9)), 64)
-    assert got == [("a", "b")]
-    # full window with no conflict -> bound by the last visible row
-    got = _select_exact_batch(rows(("a b", 9), ("c d", 5)), 2)
-    assert got == [("a", "b")]
-    # cnt<2 stops without bounding
-    got = _select_exact_batch(rows(("a b", 4), ("c d", 1)), 64)
-    assert got == [("a", "b")]
-    # minted-symbol conflict: 'ab' colliding with an accepted merge
-    got = _select_exact_batch(rows(("a b", 9), ("ab c", 7)), 64)
-    assert got == [("a", "b")]
-
-
 def test_scrub_pii_redacts_and_counts(spark):
     from weakscraper_spark.operators.textstats import scrub_pii
     rows = [
@@ -1409,40 +1258,6 @@ def test_tfidf_smoothing_keeps_universal_terms_positive(spark):
     out = {(r.doc_id, r.rn): r.term
            for r in tfidf_topk(df, k=2).collect()}
     assert out[(1, 1)] == "aa" and out[(3, 1)] == "bb"
-
-
-def test_encode_bpe_matches_segment_word(spark):
-    """The rank-dict encoder must agree with the published
-    ordered-replay rule on a TRAINED merge list (the equivalence
-    holds because each trained merge's operands exist before it)."""
-    from weakscraper_spark.operators.vocab import (
-        encode_bpe, segment_word, train_bpe)
-    docs = spark.createDataFrame(
-        [(i, "low lower lowest newer new wider wide " * 3)
-         for i in range(6)], "doc_id long, text string")
-    merges = train_bpe(docs, 12)
-    assert merges
-    out = {r.doc_id: r for r in encode_bpe(docs, merges).collect()}
-    words = "low lower lowest newer new wider wide".split() * 3
-    want = sum(len(segment_word(w, merges)) for w in words)
-    assert out[0].n_words == 21
-    assert out[0].n_pieces == want
-    # keep_pieces returns the concatenated segmentation
-    rows = encode_bpe(docs, merges, keep_pieces=True).collect()
-    first = {r.doc_id: r.pieces for r in rows}[0]
-    assert first[:len(segment_word("low", merges))] == \
-        segment_word("low", merges)
-
-
-def test_encode_bpe_empty_and_no_merges(spark):
-    from weakscraper_spark.operators.vocab import encode_bpe
-    docs = spark.createDataFrame(
-        [(1, "ab"), (2, ""), (3, None)], "doc_id long, text string")
-    got = {r.doc_id: (r.n_words, r.n_pieces)
-           for r in encode_bpe(docs, []).collect()}
-    # no merges: every char + EOW is a piece
-    assert got[1] == (1, 3)
-    assert got[2] == (0, 0) and got[3] == (0, 0)
 
 
 def test_dsir_weights_prefer_target_like_docs(spark):

@@ -298,12 +298,12 @@ def match_document(spec: Spec, html: str,
 
 
 def extract(spec: Spec, html: str, functions: Functions | None = None,
-            text_key: str = "text", spans: bool = False) -> dict[str, Any]:
+            spans: bool = False) -> dict[str, Any]:
     """Status-row extraction used by the Spark batch operator: never
     raises on mismatch; returns
     ``{status, error, fields (dict|None), text (str|None), n_nodes}``.
 
-    ``text`` is the value captured under ``text_key`` if present, else
+    ``text`` is the value of a ``text`` capture if present, else
     the '\\n'-join of all scalar string captures in capture (document)
     order — the byte-identical-text contract column.
 
@@ -340,8 +340,8 @@ def extract(spec: Spec, html: str, functions: Functions | None = None,
     finally:
         if token is not None:
             _SPANS.reset(token)
-    if text_key in fields and isinstance(fields[text_key], str):
-        text = fields[text_key]
+    if isinstance(fields.get("text"), str):
+        text = fields["text"]
     else:
         text = "\n".join(v for v in fields.values() if isinstance(v, str))
     out = {"status": "ok", "error": "", "fields": fields, "text": text,

@@ -25,7 +25,16 @@ day ASC)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+
+def n_err(ok_col: str = "ok") -> Column:
+    """The ``n_err`` aggregate: rows whose ``ok_col`` (boolean or 0/1)
+    is false or NULL. A NULL flag is an error, as a NULL status is in
+    ``status_ok()``; ``sum`` over ``~ok`` would skip it and the row
+    would read as a success."""
+    return F.sum(F.when(F.col(ok_col).cast("boolean"), 0)
+                 .otherwise(1)).alias("n_err")
 
 
 def host_error_daily(df: DataFrame, host_col: str = "host",
@@ -33,13 +42,11 @@ def host_error_daily(df: DataFrame, host_col: str = "host",
                      ok_col: str = "ok") -> DataFrame:
     """(host, day, n_pages, n_err, err_rate) — ``day`` is the date of
     ``ts_col`` (date column or castable); ``ok_col`` is boolean or
-    0/1. err_rate is DOUBLE in [0, 1]."""
+    0/1, NULL counting as an error. err_rate is DOUBLE in [0, 1]."""
     day = F.col(ts_col).cast("date")
-    err = (~F.col(ok_col).cast("boolean")).cast("int")
     return (df.groupBy(F.col(host_col).alias("host"),
                        day.alias("day"))
-            .agg(F.count("*").alias("n_pages"),
-                 F.sum(err).alias("n_err"))
+            .agg(F.count("*").alias("n_pages"), n_err(ok_col))
             .withColumn("err_rate",
                         F.col("n_err") / F.col("n_pages")))
 

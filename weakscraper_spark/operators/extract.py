@@ -128,7 +128,6 @@ def _spec_for(spec_json: str) -> Spec:
 def extract_pages(df: DataFrame,
                   spec_json_by_tid: dict[str, str],
                   functions: dict[str, Callable] | None = None,
-                  text_key: str = "text",
                   fallback: str | None = None,
                   spans: bool = False) -> DataFrame:
     """Apply broadcast compiled templates to ``(url, warc_ts,
@@ -200,7 +199,7 @@ def extract_pages(df: DataFrame,
                 else:
                     t0 = perf_counter()
                     row = _extract_doc(_spec_for(spec_json), html,
-                                       functions, text_key, spans=spans)
+                                       functions, spans=spans)
                     out["parse_ms"][j] = (perf_counter() - t0) * 1e3
                     if spans and row.get("spans") is not None:
                         out["spans_json"][j] = json.dumps(

@@ -1,5 +1,5 @@
 """Shared lineage-truncation helper for the iterative operators
-(connected components, BPE training): one definition of the
+(connected components, pagerank): one definition of the
 localCheckpoint-vs-reliable-checkpoint choice so the trade-off text
 and behavior can't drift between copies (r04 review)."""
 
@@ -33,10 +33,10 @@ def ckpt(df: DataFrame, checkpoint_dir: str | None,
 @contextmanager
 def static_loop(spark: SparkSession, partitions: int | None = None):
     """Scoped STATIC planning for the body of a bounded iterative
-    loop (pagerank power iterations, CC label propagation, BPE merge
-    rounds): disables AQE — and, when ``partitions`` is given, pins
-    ``spark.sql.shuffle.partitions`` to that count — for the
-    duration, restoring the previous session values on exit.
+    loop (pagerank power iterations, CC label propagation): disables
+    AQE — and, when ``partitions`` is given, pins
+    ``spark.sql.shuffle.partitions`` to that count — for the duration,
+    restoring the previous session values on exit.
 
     Why (r08, event-log measured on the pagerank loop): with AQE on,
     EVERY exchange inside a round materializes as its own scheduler

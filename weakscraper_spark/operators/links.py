@@ -21,7 +21,7 @@ Scale shapes (the 100-TB rules this repo holds every operator to):
   scalar and the (1-d)/N teleport ride a broadcast one-row
   DataFrame (no per-round driver collect); lineage is truncated
   through the shared ``iterstate.ckpt`` discipline like
-  connected_components and train_bpe. Rank sums are doubles —
+  connected_components. Rank sums are doubles —
   callers snap to fixed scale for value comparison (the repo's
   ``_dec`` rule).
 

@@ -123,9 +123,8 @@ def page_metadata(df: DataFrame, url_col: str = "url",
     # NOT fanned out (r08, measured): this Python stage's total
     # sandbox compute is under a second, so 32 fresh-worker forks
     # (session worker.reuse=False) cost more wall than the
-    # parallelism returns — the train_bpe lesson; at production
-    # scale the input carries ≥ core-count files and fan-out would
-    # be a no-op anyway.
+    # parallelism returns; at production scale the input carries
+    # ≥ core-count files and fan-out would be a no-op anyway.
     return df.select(url_col, html_col).mapInPandas(run, META_SCHEMA)
 
 

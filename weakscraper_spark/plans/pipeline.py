@@ -369,18 +369,14 @@ def _dir_has_parquet(path: str) -> bool:
 # --------------------------------------------------------------------------
 
 def synth_and_extract(spark: SparkSession, n_pages: int,
-                      n_salts: int = 0,
-                      num_partitions: int | None = None,
                       fallback: str | None = None) -> DataFrame:
-    """``n_salts=0`` (map-only heavy path) is the default here exactly
-    as in ``build_extract_plan`` — this is the plan ``entry()`` runs,
-    and it must BE the plan the module docstring promises (no
-    corpus-width exchange before the Python stage;
-    asserted on entry()'s DataFrame in tests/test_plan_quality.py).
-    Salting stays opt-in for host-clustered input layouts."""
+    """``build_extract_plan`` over synthesized pages, unsalted (the
+    map-only heavy path) — this is the plan ``entry()`` runs, and it
+    must BE the plan the module docstring promises (no corpus-width
+    exchange before the Python stage; asserted on entry()'s DataFrame
+    in tests/test_plan_quality.py). Salting stays opt-in on
+    ``build_extract_plan`` for host-clustered input layouts."""
     pages = synth_pages(spark, n_pages)
     templates = synth_templates(spark)
     return build_extract_plan(pages, templates, compiled_specs(),
-                              n_salts=n_salts,
-                              num_partitions=num_partitions,
                               fallback=fallback)

@@ -327,52 +327,6 @@ def synth_fields_truth(spark: SparkSession, n_pages: int,
                               "field string, value string"))
 
 
-def synth_rich_text(spark: SparkSession, n_docs: int,
-                    vocab_size: int = 30_000, words_per_doc: int = 250,
-                    seed: int = 7,
-                    partitions: int | None = None) -> DataFrame:
-    """(doc_id, text) corpus over a hash-derived ``vocab_size``-type
-    vocabulary — the BPE scale-mode workload. The CC-style tables'
-    generator vocabulary is 31 words, which saturates BPE after a
-    couple hundred merges; a 32k-merge run needs a real vocabulary.
-    Same determinism contract as ``synth_pages`` (pure function of
-    index, no RNG state, partition-count-independent). Every word
-    type occurs at least twice by construction: even token slots walk
-    a round-robin coverage stripe over the vocabulary (each full
-    stripe pass = one occurrence of every type; size the corpus so
-    n_docs·words_per_doc/2 ≥ 2·vocab_size), odd slots draw
-    hash-uniformly — so the FULL merge space is learnable, not just
-    the head."""
-    partitions = partitions or max(
-        8, spark.sparkContext.defaultParallelism)
-    alpha = "abcdefghijklmnopqrstuvwxyz"
-
-    def word(k: int) -> str:
-        d = blake2b(f"w:{k}".encode(), digest_size=16).digest()
-        length = 4 + d[0] % 6
-        return "".join(alpha[b % 26] for b in d[1:1 + length])
-
-    def gen(batches):
-        for pdf in batches:
-            ids, texts = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                toks = []
-                for j in range(words_per_doc):
-                    if j % 2 == 0:
-                        k = (i * (words_per_doc // 2)
-                             + j // 2) % vocab_size
-                    else:
-                        k = _h(f"{seed}:{i}:{j}", vocab_size)
-                    toks.append(word(k))
-                ids.append(i)
-                texts.append(" ".join(toks))
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return (spark.range(0, n_docs, numPartitions=partitions)
-            .mapInPandas(gen, "doc_id long, text string"))
-
-
 def synth_linked_pages(spark: SparkSession, n_pages: int,
                        n_hosts: int = 50, head_share: float = 0.30,
                        seed: int = 11,

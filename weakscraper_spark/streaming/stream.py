@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.drift import n_err
 from ..operators.extract import extract_pages, status_ok
 from ..plans.pipeline import attach_template, prepare_pages, url_host
 
@@ -203,12 +204,10 @@ def stream_host_error_rates(spark: SparkSession, source_dir: str,
     if ok_col not in stream.columns and "status" in stream.columns:
         stream = stream.withColumn(ok_col, status_ok())
     stream = stream.withWatermark(ts_col, watermark)
-    err = (~F.col(ok_col).cast("boolean")).cast("int")
     agg = (stream
            .groupBy(F.col(host_col).alias("host"),
                     F.window(ts_col, window).alias("w"))
-           .agg(F.count("*").alias("n_pages"),
-                F.sum(err).alias("n_err"))
+           .agg(F.count("*").alias("n_pages"), n_err(ok_col))
            .select("host", F.col("w.start").alias("win_start"),
                    "n_pages", "n_err",
                    (F.col("n_err") / F.col("n_pages"))
