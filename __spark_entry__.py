@@ -9,8 +9,8 @@ pipeline ops + training-data ops) over the driver-provided tables;
 ``oracle_sql()`` mirrors every SQL-expressible one in DuckDB dialect
 with IDENTICAL tokenization/rounding so value-hashes match. Ops that
 are not SQL-expressible (Arrow-batch extraction — template AND
-boilerplate-strip heuristic, PDF plumbing, multimodal plumbing,
-IVF ANN's iterative quantizer, the end-to-end corpus build) have no
+boilerplate-strip heuristic, PDF plumbing, IVF ANN's iterative
+quantizer, the end-to-end corpus build) have no
 oracle entry → driver records rows-only checks; each of those is
 VALUE-PINNED anyway (rows filtered on equality with synthesized
 ground truth, or fully deterministic counts), so drift still moves
@@ -1072,30 +1072,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .select("doc_id", "lang", "predicted_lang"))
     q["lang_id"] = lang_id
 
-    # ---- multimodal plumbing (rows-only; decode kernel stubbed) -----------
-    def multimodal_meta(spark, sf):
-        from weakscraper_spark.operators.multimodal import extract_blob_meta
-        blobs = (_t(spark, sf, "documents")
-                 .select(F.col("doc_id").alias("blob_id"),
-                         F.encode("text", "UTF-8").alias("blob")))
-        # feat is array<float>: stringify for the harness — the
-        # driver's canonicalizer sorts object columns and a Python
-        # list isn't hashable/sortable (r01 red row).
-        return (extract_blob_meta(blobs)
-                .withColumn("feat_json", F.to_json("feat"))
-                .drop("feat"))
-    q["multimodal_meta"] = multimodal_meta
-
-    def frame_samples(spark, sf):  # rows-only (flat-map plumbing)
-        from weakscraper_spark.operators.multimodal import sample_frames
-        blobs = (_t(spark, sf, "documents")
-                 .select(F.col("doc_id").alias("blob_id"),
-                         F.encode("text", "UTF-8").alias("blob")))
-        return (sample_frames(blobs, n_frames=3)
-                .withColumn("feat_json", F.to_json("feat"))
-                .drop("feat"))
-    q["frame_samples"] = frame_samples
-
     # ---- PDF/layout parse plumbing — ORACLE-VALUE-CHECKED via staged
     # truth (r06 promotion, the r05 recipe): the expected per-page
     # rows are derived purely from the CHUNKING expressions (never
@@ -1693,21 +1669,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("doc_id", "source", "split")
     q["host_split"] = host_split
 
-    def nb_quality(spark, sf):
-        # model-based quality filter (fastText-style): Naive-Bayes
-        # log-odds self-trained with label = (lang = 'en'), mean
-        # log-odds per doc + keep verdict. Deterministic, so the
-        # whole train+score path is value-checked.
-        from weakscraper_spark.operators.classify import (
-            nb_quality_filter)
-        docs = _t(spark, sf, "documents").withColumn(
-            "y", (F.col("lang") == "en").cast("int"))
-        out = nb_quality_filter(docs, "y")
-        return out.select("doc_id", "n_scored",
-                          _dec(F.col("nb_score"), 4).alias("nb_score"),
-                          "keep")
-    q["nb_quality"] = nb_quality
-
     def url_filter(spark, sf):
         # URL-string corpus gate (RefinedWeb-style): score before
         # fetch. Urls synthesized deterministically with planted
@@ -2131,25 +2092,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return canonical_dedup(pages)
     q["canonical_groups"] = canonical_groups
 
-    # ---- DSIR importance resampling (operators/dsir.py, r06 —
-    # Xie et al. 2023): hashed unigram+bigram models on a target
-    # slice vs the full corpus, per-doc log importance weights,
-    # quantile-threshold selection. Fully mirrored in SQL (mirrored
-    # tokenization, md5 buckets, ln-ratio sums rounded 6dp,
-    # quantile_cont threshold). --------------------------------------------
-    def dsir_select(spark, sf):
-        from weakscraper_spark.operators.dsir import (
-            dsir_select as dsel)
-        docs = _t(spark, sf, "documents")
-        target = docs.filter((F.col("lang") == "en") &
-                             (F.col("doc_id") % 10 == 0))
-        out = dsel(docs, target, keep_frac=0.5, n_buckets=256)
-        return out.select(
-            "doc_id", "n_grams",
-            _dec(F.col("logw"), 4).alias("logw"),
-            _dec(F.col("threshold"), 4).alias("threshold"), "keep")
-    q["dsir_select"] = dsir_select
-
     # ---- CDX index family (operators/cdx.py, r06): SURT canonical
     # keys + CDXJ line parsing + per-urlkey digest dedup. Planted
     # line corpus from doc_id arithmetic (frame-broken and
@@ -2552,7 +2494,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _sample_first = [
         "warc_cdx", "redirect_map", "warc_write", "minhash_incr",
         "temp_mix", "warc_fetch", "canonical_redirects",
-        "template_refresh", "semantic_dedup", "dsir_select",
+        "template_refresh", "semantic_dedup",
         "robots_noindex", "canonical_groups", "recrawl_plan",
         "surt_keys", "cdx_records", "cdx_dedup", "pdf_pages",
         "compression_ratios", "induce_hosts",
@@ -2565,7 +2507,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_spans", "induce_roundtrip",
         "chunk_docs", "sitemap_entries",
         "robots_sitemaps", "tfidf_keywords", "host_split",
-        "nb_quality", "url_filter", "epoch_shuffle",
+        "url_filter", "epoch_shuffle",
         "link_graph", "host_rank", "anchor_topk", "mix_corpus",
         "srp_overcap", "lsh_near_dup", "lsh_ann_topk",
         "extract_pages", "boiler_extract", "raw_extract",
@@ -3189,42 +3131,6 @@ def oracle_sql() -> dict[str, str]:
                         AS VARCHAR) AS score,
                    rn::BIGINT AS rn
             FROM r WHERE rn <= 3
-        """,
-        "nb_quality": """
-            WITH d AS (
-                SELECT doc_id, text,
-                       CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                FROM documents),
-            tok AS (
-                SELECT y, unnest(string_split_regex(
-                    trim(lower(text)), '\\s+')) AS w
-                FROM d),
-            c AS (
-                SELECT w, sum(y) AS c_pos, sum(1 - y) AS c_neg
-                FROM tok GROUP BY 1),
-            tot AS (
-                SELECT sum(c_pos) AS n_pos, sum(c_neg) AS n_neg,
-                       count(*) AS v
-                FROM c),
-            lo AS (
-                SELECT w,
-                       ln((c_pos + 0.5) / (n_pos + 0.5 * v))
-                     - ln((c_neg + 0.5) / (n_neg + 0.5 * v)) AS logodds
-                FROM c CROSS JOIN tot),
-            dt AS (
-                SELECT doc_id, unnest(string_split_regex(
-                    trim(lower(text)), '\\s+')) AS w
-                FROM d),
-            s AS (
-                SELECT doc_id, count(*) AS n_scored,
-                       avg(logodds) AS nb_score
-                FROM dt JOIN lo USING (w) GROUP BY 1)
-            SELECT d.doc_id,
-                   coalesce(s.n_scored, 0)::BIGINT AS n_scored,
-                   CAST(CAST(round(s.nb_score, 4) AS DECIMAL(18,4))
-                        AS VARCHAR) AS nb_score,
-                   s.nb_score > 0.0 AS keep
-            FROM d LEFT JOIN s USING (doc_id)
         """,
         "url_filter": """
             WITH u AS (
@@ -4301,61 +4207,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(CASE WHEN canonical_url = url THEN 1
                             ELSE 0 END)::BIGINT AS n_self
             FROM c GROUP BY canonical_url
-        """,
-        # DSIR twin: mirrored tokenization → unigram+bigram instances
-        # → md5 buckets → add-1-smoothed ln ratios → per-doc sums
-        # (6dp) → quantile_cont threshold
-        "dsir_select": """
-            WITH tk AS (
-                SELECT doc_id,
-                       string_split_regex(trim(lower(text)), '\\s+')
-                           AS t
-                FROM documents),
-            grams AS (
-                SELECT doc_id, unnest(t) AS g FROM tk
-                UNION ALL
-                SELECT doc_id,
-                       unnest(list_transform(range(1, len(t)),
-                              i -> t[i] || ' ' || t[i + 1])) AS g
-                FROM tk WHERE len(t) >= 2),
-            inst AS (
-                SELECT doc_id,
-                       (('0x' || substr(md5('42:g:' || g), 1, 15))
-                        ::UBIGINT % 256)::BIGINT AS b
-                FROM grams),
-            tgt AS (SELECT doc_id FROM documents
-                    WHERE lang = 'en' AND doc_id % 10 = 0),
-            cr AS (SELECT b, count(*) AS c FROM inst GROUP BY b),
-            ct AS (SELECT i.b, count(*) AS c
-                   FROM inst i JOIN tgt USING (doc_id) GROUP BY i.b),
-            tot AS (SELECT (SELECT sum(c) FROM cr) AS big_r,
-                           (SELECT coalesce(sum(c), 0) FROM ct)
-                               AS big_t),
-            ratios AS (
-                SELECT coalesce(cr.b, ct.b) AS b,
-                       ln(coalesce(ct.c, 0) + 1.0)
-                       - ln(big_t + 256.0)
-                       - ln(coalesce(cr.c, 0) + 1.0)
-                       + ln(big_r + 256.0) AS ratio
-                FROM cr FULL JOIN ct ON cr.b = ct.b CROSS JOIN tot),
-            per_doc AS (
-                SELECT i.doc_id, count(*) AS n_grams,
-                       round(sum(r.ratio), 6) AS logw
-                FROM inst i JOIN ratios r ON i.b = r.b
-                GROUP BY i.doc_id),
-            w AS (
-                SELECT d.doc_id,
-                       coalesce(p.n_grams, 0)::BIGINT AS n_grams,
-                       coalesce(p.logw, 0.0) AS logw
-                FROM documents d LEFT JOIN per_doc p USING (doc_id)),
-            thr AS (SELECT quantile_cont(logw, 0.5) AS t FROM w)
-            SELECT doc_id, n_grams,
-                   CAST(CAST(round(logw, 4) AS DECIMAL(18,4))
-                        AS VARCHAR) AS logw,
-                   CAST(CAST(round(t, 4) AS DECIMAL(18,4))
-                        AS VARCHAR) AS threshold,
-                   (logw >= t) AS keep
-            FROM w CROSS JOIN thr
         """,
         # CDX family closed forms: the SURT transform's expected output
         # and the CDXJ parse/dedup results are all stated directly

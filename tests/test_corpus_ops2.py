@@ -1,42 +1,9 @@
-"""Functional tests for the round-5 corpus operators: the Naive-Bayes
-model-based quality filter, the URL-string quality gate, and the
-deterministic epoch shuffle with distributed global positions."""
+"""Functional tests for the round-5 corpus operators: the URL-string
+quality gate and the deterministic epoch shuffle with distributed
+global positions."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_nb_classifier_separates(spark):
-    from weakscraper_spark.operators.classify import nb_quality_filter
-    good = "informative article discussing careful analysis of results"
-    bad = "click here buy now free prize winner casino jackpot"
-    rows = ([(i, good + f" extra{i}", 1) for i in range(5)] +
-            [(100 + i, bad + f" spam{i}", 0) for i in range(5)] +
-            [(200, "careful analysis of informative results", 1),
-             (201, "free casino prize click now", 0)])
-    df = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    out = {r.doc_id: r for r in
-           nb_quality_filter(df, "y").collect()}
-    assert out[200].keep and out[200].nb_score > 0
-    assert not out[201].keep and out[201].nb_score < 0
-    assert all(out[i].keep for i in range(5))
-    assert not any(out[100 + i].keep for i in range(5))
-
-
-def test_nb_score_empty_vocab_doc(spark):
-    """A doc whose tokens are all out-of-vocabulary scores NULL with
-    n_scored = 0 — visible, not defaulted."""
-    from weakscraper_spark.operators.classify import (
-        nb_score, nb_token_logodds)
-    train = spark.createDataFrame(
-        [(1, "aaa bbb", 1), (2, "ccc ddd", 0)],
-        "doc_id long, text string, y int")
-    model = nb_token_logodds(train, "y")
-    out = nb_score(
-        spark.createDataFrame([(9, "zzz qqq")],
-                              "doc_id long, text string"),
-        model).collect()
-    assert out[0].n_scored == 0 and out[0].nb_score is None
 
 
 def test_url_quality_filter(spark):

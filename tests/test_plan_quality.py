@@ -444,22 +444,6 @@ def test_epoch_shuffle_no_global_window(spark):
     assert "rangepartitioning" in txt
 
 
-def test_nb_scoring_join_is_on_token_key(spark):
-    """Training is two map-side-combinable aggs; scoring joins on
-    the token key with the single-row totals broadcast — no window
-    anywhere, no python stage."""
-    from weakscraper_spark.operators.classify import nb_quality_filter
-    df = spark.createDataFrame(
-        [(1, "a b", 1), (2, "b c", 0)],
-        "doc_id long, text string, y int")
-    nodes = _plan_nodes(nb_quality_filter(df, "y"))
-    names = [n for _, n in nodes]
-    assert "Window" not in names
-    assert "BroadcastNestedLoopJoin" in names or \
-        "BroadcastHashJoin" in names    # totals cross-join broadcast
-    assert not any("Python" in n or "Arrow" in n for n in names)
-
-
 def test_url_filter_is_narrow_jvm_map(spark):
     """The URL gate runs BEFORE fetch on the 10^12-row frontier —
     it must stay a narrow JVM map: no exchange, no python, no join
@@ -485,27 +469,6 @@ def test_tfidf_topk_windows_over_aggregate(spark):
     exch = [i for i, n in nodes if n == "Exchange"]
     assert wgl and exch and min(wgl) < max(exch), nodes
     assert not [n for _, n in nodes if "Python" in n], nodes
-
-
-def test_dsir_plan_broadcast_ratios_no_python(spark):
-    """DSIR's per-bucket log-ratio table (O(n_buckets)) must come back
-    to the corpus-width instance stream as a BROADCAST join; the
-    threshold is a broadcast scalar; no Python stage, no window, no
-    cartesian product beyond the 1-row stats sides."""
-    from weakscraper_spark.operators.dsir import dsir_select
-
-    docs = _docs_df(spark, 8)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        nodes = _plan_nodes(dsir_select(docs, docs.limit(2),
-                                        n_buckets=64))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    names = [n for _, n in nodes]
-    assert "BroadcastHashJoin" in names, nodes
-    assert "Window" not in names, nodes
-    assert "BatchEvalPython" not in names, nodes
-    assert "ArrowEvalPython" not in names, nodes
 
 
 def test_resolve_redirects_plan_is_checkpoint_truncated(spark):

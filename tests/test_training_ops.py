@@ -1,7 +1,7 @@
 """Functional tests for the training-data operators: injected
 near-duplicates must be found (MinHash/SimHash/Jaccard), clustered
-embeddings must be retrieved (exact + LSH ANN), multimodal plumbing
-must sniff/feature blobs, lang-id must classify marker text."""
+embeddings must be retrieved (exact + LSH ANN), lang-id must classify
+marker text."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -530,52 +530,6 @@ def test_bpe_ish_subtokens(spark):
     # don ' t count 2 me - out !  → 9 subtokens
     assert out[1] == (3, 9)
     assert out[2][1] == 0 and out[3][1] == 0
-
-
-def test_frame_sampling_plumbing(spark):
-    from weakscraper_spark.operators.multimodal import (
-        frame_offsets, resize_image, sample_frames)
-    blob = bytes(range(256)) * 100          # 25600 bytes
-    df = spark.createDataFrame([(1, blob), (2, b""), (3, None)],
-                               "blob_id long, blob binary")
-    out = sample_frames(df, n_frames=4).collect()
-    rows = [r for r in out if r.blob_id == 1]
-    assert len(rows) == 4
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]
-    assert all(r.byte_offset % 4096 == 0 for r in rows)
-    assert all(len(r.feat) == 8 for r in rows)
-    assert not [r for r in out if r.blob_id in (2, 3)]  # empty → no frames
-    # determinism and stub honesty
-    assert frame_offsets(25600, 4) == frame_offsets(25600, 4)
-    with pytest.raises(NotImplementedError):
-        resize_image(b"\x89PNG", 64, 64)
-
-
-def test_multimodal_sniff_and_features(spark):
-    from weakscraper_spark.operators.multimodal import extract_blob_meta
-    rows = [
-        (1, b"\x89PNG\r\n\x1a\nrestofpng"),
-        (2, b"\xff\xd8\xff\xe0jfifdata"),
-        (3, b"RIFF....WAVE"),
-        (4, b"plain text bytes"),
-    ]
-    df = spark.createDataFrame(rows, "blob_id long, blob binary")
-    out = {r.blob_id: r for r in extract_blob_meta(df).collect()}
-    assert out[1].media_type == "image/png"
-    assert out[2].media_type == "image/jpeg"
-    assert out[3].media_type == "audio/wav"
-    assert out[4].media_type == "application/octet-stream"
-    assert out[1].n_bytes == len(rows[0][1])
-    assert len(out[1].feat) == 8
-    # determinism across runs
-    out2 = {r.blob_id: r for r in extract_blob_meta(df).collect()}
-    assert out2[1].feat == out[1].feat
-
-
-def test_decode_stub_raises():
-    from weakscraper_spark.operators.multimodal import decode_image
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
 
 
 def test_lang_id_markers(spark):
@@ -1258,106 +1212,6 @@ def test_tfidf_smoothing_keeps_universal_terms_positive(spark):
     out = {(r.doc_id, r.rn): r.term
            for r in tfidf_topk(df, k=2).collect()}
     assert out[(1, 1)] == "aa" and out[(3, 1)] == "bb"
-
-
-def test_dsir_weights_prefer_target_like_docs(spark):
-    """The importance weights must rank target-distribution docs above
-    off-distribution ones (the paper's whole point): with a target of
-    cooking text, cooking-ish raw docs outscore code-ish ones; empty
-    docs stay visible at logw 0."""
-    from weakscraper_spark.operators.dsir import dsir_select, dsir_weights
-    cook = "stir the sauce add salt and pepper then simmer the sauce"
-    code = "def main args return int x plus y lambda map filter"
-    # doc 2 reuses the target's BIGRAM support (a reshuffled-words
-    # variant scores negative under a 2-doc target — its novel
-    # bigrams are all unseen, which is faithful DSIR behavior, not a
-    # fixture-worthy near-target doc)
-    raw = spark.createDataFrame(
-        [(1, cook), (2, "add salt and pepper then simmer the sauce"),
-         (3, code), (4, "lambda filter map args return def"),
-         (5, "")],
-        "doc_id long, text string")
-    target = spark.createDataFrame(
-        [(100, cook), (101, "simmer the sauce with salt")],
-        "doc_id long, text string")
-    # alpha sized for the tiny fixture (operator docstring): the
-    # smoothing mass α·B must stay small against the gram totals or
-    # every ratio is pulled toward the corpus-size constant
-    kw = dict(n_buckets=64, alpha=0.01)
-    w = {r.doc_id: r for r in
-         dsir_weights(raw, target, **kw).collect()}
-    assert len(w) == 5
-    assert w[5].n_grams == 1  # '' tokenizes to [''] — one bucket
-    assert w[1].logw > w[3].logw
-    assert w[2].logw > w[4].logw
-    assert min(w[1].logw, w[2].logw) > max(w[3].logw, w[4].logw)
-
-    sel = {r.doc_id: r for r in
-           dsir_select(raw, target, keep_frac=0.4, **kw).collect()}
-    kept = {i for i, r in sel.items() if r.keep}
-    assert kept == {1, 2}
-    thr = {r.threshold for r in sel.values()}
-    assert len(thr) == 1  # one global threshold, broadcast back
-
-
-def test_dsir_deterministic_across_runs(spark):
-    from weakscraper_spark.operators.dsir import dsir_weights
-    docs = spark.createDataFrame(
-        [(i, f"w{i} common words here tail {i % 3}")
-         for i in range(6)], "doc_id long, text string")
-    tgt = docs.filter("doc_id < 2")
-    a = sorted((r.doc_id, r.n_grams, r.logw)
-               for r in dsir_weights(docs, tgt).collect())
-    b = sorted((r.doc_id, r.n_grams, r.logw)
-               for r in dsir_weights(docs, tgt).collect())
-    assert a == b
-
-
-def test_dsir_probe_ring_r07(spark):
-    """r07 adversarial probes, pinned (no bug found — documented
-    behaviors made contractual): single-token corpora rank by
-    content; under alpha*B dominance (alpha=1, B=1024, ~10-gram
-    corpora) ratios compress toward the smoothing constant but
-    ORDER is preserved on equal-length docs; a zero-gram (NULL-text)
-    doc scores a NEUTRAL logw of 0.0 and is kept when the threshold
-    is negative — visible via n_grams=0, callers filter; ''/'   '
-    tokenize to one empty-string unigram (the repo-wide convention);
-    keep_frac=1.0 keeps everything even with tied weights."""
-    from weakscraper_spark.operators.dsir import (dsir_select,
-                                                  dsir_weights)
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    raw = mk([(i, "x") for i in range(5)] +
-             [(i, "y") for i in range(5, 10)])
-    tgt = mk([(100, "x x x x")])
-    for alpha in (0.01, 1.0):
-        got = {r.doc_id: r.keep
-               for r in dsir_select(raw, tgt, keep_frac=0.5,
-                                    alpha=alpha).collect()}
-        assert got == {i: i < 5 for i in range(10)}, alpha
-
-    # alpha*B dominance sinks LONG off-target docs harder than short
-    # ones in both regimes (length-proportional evidence, the
-    # paper's form — documented in dsir_weights)
-    raw3 = mk([(1, "x"), (2, " ".join(["z"] * 50))])
-    for alpha in (0.01, 1.0):
-        w = {r.doc_id: r.logw
-             for r in dsir_weights(raw3, tgt, alpha=alpha).collect()}
-        assert w[1] > 0 > w[2], alpha
-
-    raw4 = mk([(1, None), (2, ""), (3, "   "), (4, "x")])
-    rows = {r.doc_id: r for r in
-            dsir_select(raw4, tgt, keep_frac=0.5,
-                        alpha=0.01).collect()}
-    assert rows[1].n_grams == 0 and rows[1].logw == 0.0
-    assert rows[2].n_grams == 1 and rows[3].n_grams == 1
-    assert rows[2].logw == rows[3].logw
-    assert rows[4].keep
-
-    kept = dsir_select(raw, tgt, keep_frac=1.0, alpha=0.01).collect()
-    assert all(r.keep for r in kept)
 
 
 def test_semantic_dedup_trained_on_degenerate_sample(spark):

@@ -16,7 +16,7 @@ Layout:
   parse, template parse/compile, greedy tree alignment, capture,
   induction. Zippable for ``spark-submit --py-files``.
 - ``operators`` — Spark DataFrame operators (extract, dedup,
-  similarity, text stats, multimodal plumbing).
+  similarity, text stats).
 - ``sources``   — table readers + deterministic synthesis of the
   CC-style pages table.
 - ``plans``     — session builder + the end-to-end pipeline (C1–C13

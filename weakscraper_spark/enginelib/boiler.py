@@ -189,14 +189,14 @@ def classify_blocks(blocks: list[Block]) -> list[bool]:
 
 
 def main_text(html: str, mode: str = "largest",
-              joiner: str = "\n", spans: bool = False) -> dict:
+              spans: bool = False) -> dict:
     """Extract main content from one page. Returns
     ``{text, n_blocks, n_content_blocks, n_words}``; ``text`` is ""
     when no block classifies as content (status 'empty' upstream).
 
     ``mode='largest'`` keeps the single content block with the most
     words (deterministic tie-break: first in document order);
-    ``mode='all'`` joins every content block with ``joiner``.
+    ``mode='all'`` joins every content block with a newline.
 
     ``spans=True`` adds ``"spans"``: the [start, end) source-offset
     covering span of each SELECTED content block (one for 'largest',
@@ -219,7 +219,7 @@ def main_text(html: str, mode: str = "largest",
         n_words = best.n_words
         chosen = [best]
     elif mode == "all":
-        text = joiner.join(b.text for b in content)
+        text = "\n".join(b.text for b in content)
         n_words = sum(b.n_words for b in content)
         chosen = content
     else:

@@ -1,2 +1,2 @@
 """Spark DataFrame operators: extraction (C6/C13), dedup family,
-similarity search, text analysis, multimodal plumbing."""
+similarity search, text analysis."""

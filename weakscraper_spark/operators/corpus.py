@@ -120,8 +120,8 @@ def temperature_mix(df: DataFrame, domain_col: str,
     ``rate`` is rounded to 9dp before the draw compares against it —
     the share normalizer is a float sum over domains, and an
     engine's summation order must not be able to flip an acceptance
-    at the 16th digit (the DSIR round-before-threshold discipline;
-    τ = 0.5 keeps the power itself IEEE-exact via sqrt).
+    at the 16th digit (τ = 0.5 keeps the power itself IEEE-exact via
+    sqrt).
 
     Returns kept rows + (n_tokens, rate)."""
     toks = F.size(F.split(F.trim(F.lower(F.col(col))), r"\s+")) \

@@ -28,33 +28,30 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def n_err(ok_col: str = "ok") -> Column:
-    """The ``n_err`` aggregate: rows whose ``ok_col`` (boolean or 0/1)
+def n_err() -> Column:
+    """The ``n_err`` aggregate: rows whose ``ok`` flag (boolean or 0/1)
     is false or NULL. A NULL flag is an error, as a NULL status is in
     ``status_ok()``; ``sum`` over ``~ok`` would skip it and the row
     would read as a success."""
-    return F.sum(F.when(F.col(ok_col).cast("boolean"), 0)
+    return F.sum(F.when(F.col("ok").cast("boolean"), 0)
                  .otherwise(1)).alias("n_err")
 
 
-def host_error_daily(df: DataFrame, host_col: str = "host",
-                     ts_col: str = "ts",
-                     ok_col: str = "ok") -> DataFrame:
-    """(host, day, n_pages, n_err, err_rate) — ``day`` is the date of
-    ``ts_col`` (date column or castable); ``ok_col`` is boolean or
-    0/1, NULL counting as an error. err_rate is DOUBLE in [0, 1]."""
-    day = F.col(ts_col).cast("date")
-    return (df.groupBy(F.col(host_col).alias("host"),
-                       day.alias("day"))
-            .agg(F.count("*").alias("n_pages"), n_err(ok_col))
+def host_error_daily(df: DataFrame) -> DataFrame:
+    """(host, day, n_pages, n_err, err_rate) over ``(host, ts, ok)``
+    rows — ``day`` is the date of ``ts`` (date column or castable);
+    ``ok`` is boolean or 0/1, NULL counting as an error. err_rate is
+    DOUBLE in [0, 1]."""
+    return (df.groupBy("host", F.col("ts").cast("date").alias("day"))
+            .agg(F.count("*").alias("n_pages"), n_err())
             .withColumn("err_rate",
                         F.col("n_err") / F.col("n_pages")))
 
 
-def drift_points(df: DataFrame, host_col: str = "host",
-                 ts_col: str = "ts", ok_col: str = "ok",
+def drift_points(df: DataFrame,
                  min_jump: float | None = None) -> DataFrame:
-    """Per host, the largest day-over-day error-rate jump:
+    """Per host of ``(host, ts, ok)`` rows (``host_error_daily``), the
+    largest day-over-day error-rate jump:
 
     (host, drift_day, rate_before, rate_after, jump, n_days)
 
@@ -66,8 +63,7 @@ def drift_points(df: DataFrame, host_col: str = "host",
     ``>= 0.0`` default silently dropped them from the monitoring
     relation); a numeric threshold keeps only hosts whose max jump
     reaches it. Ties on jump pick the earliest day."""
-    return _jump_points(host_error_daily(df, host_col, ts_col, ok_col),
-                        min_jump)
+    return _jump_points(host_error_daily(df), min_jump)
 
 
 def drift_points_daily(daily: DataFrame,

@@ -19,13 +19,13 @@ from .extract import arrow_schema, decode_html
 
 INDUCED_SCHEMA = ("host_pattern string, template_id string, "
                   "template_json string, n_samples int, status string")
+# held-out pages per host that validate each induction candidate
+K_VALIDATE = 8
 
 
-def induce_templates(pages: DataFrame, k: int = 4,
-                     host_col: str = "host",
-                     k_validate: int = 8) -> DataFrame:
-    """Learn one template per host from k deterministic sample pages,
-    VALIDATED against the next ``k_validate`` deterministic pages of
+def induce_templates(pages: DataFrame, k: int = 4) -> DataFrame:
+    """Learn one template per ``host`` from k deterministic sample
+    pages, VALIDATED against the next ``K_VALIDATE`` pages of
     the same host (held-out coverage check — see
     ``induce_template_robust``: slot count alone prefers overfit
     fixed-count skeletons when the induction draw happens to be
@@ -40,20 +40,20 @@ def induce_templates(pages: DataFrame, k: int = 4,
     with a NULL ``html`` or host are dropped before the window, so a
     host with no readable page gets no registry row at all.
 
-    Scale shape unchanged: the per-host window now keeps k+k_validate
+    Scale shape unchanged: the per-host window now keeps k+K_VALIDATE
     rows instead of k (still O(1) per host via WindowGroupLimit
     map-side pruning), and the per-host kernel runs (k+1) inductions
-    plus (k+1)·(k+k_validate) extractions — constant work per host."""
+    plus (k+1)·(k+K_VALIDATE) extractions — constant work per host."""
     from ..enginelib.induce import induce_template_robust
     from ..enginelib.spec import spec_to_json
 
-    w = Window.partitionBy(host_col).orderBy(F.xxhash64("url"), "url")
+    w = Window.partitionBy("host").orderBy(F.xxhash64("url"), "url")
     samples = (pages
                .filter(F.col("html").isNotNull()
-                       & F.col(host_col).isNotNull())
+                       & F.col("host").isNotNull())
                .withColumn("_rk", F.row_number().over(w))
-               .filter(F.col("_rk") <= k + k_validate)
-               .select(F.col(host_col).alias("host_pattern"), "_rk",
+               .filter(F.col("_rk") <= k + K_VALIDATE)
+               .select(F.col("host").alias("host_pattern"), "_rk",
                        "html"))
     schema = arrow_schema(INDUCED_SCHEMA)
 

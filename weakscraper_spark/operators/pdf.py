@@ -324,9 +324,9 @@ def _layout_boxes(page_text: str) -> list[dict]:
 def pdf_extract(df: DataFrame, id_col: str = "doc_id",
                 blob_col: str = "blob") -> DataFrame:
     """(id, pdf-bytes) → one row PER PAGE with text + layout boxes —
-    a flat map (mapInPandas can change cardinality; same plumbing a
-    frame sampler uses). Failed blobs emit exactly one page_no=-1
-    status row, never silently vanish. Narrow map: no shuffle."""
+    a flat map (mapInPandas can change cardinality). Failed blobs
+    emit exactly one page_no=-1 status row, never silently vanish.
+    Narrow map: no shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tc = TaskContext.get()

@@ -373,7 +373,7 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
 
     # the bigram-instance stream feeds TWO consumers (the count model
     # and the scoring join) — persist so the corpus-width tokenize +
-    # explode runs once (the dsir/jaccard discipline; DISK_ONLY)
+    # explode runs once (as in the jaccard operator; DISK_ONLY)
     doc_bi = base.select("doc", F.explode(bigrams).alias("bi")) \
         .persist(StorageLevel.DISK_ONLY)
     c_bi = doc_bi.groupBy("bi").agg(F.count("*").alias("c2"))

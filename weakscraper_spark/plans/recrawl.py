@@ -21,7 +21,7 @@ Everything is host-keyed (O(#hosts) relations): one full-outer join
 pairs the two signals — a crawled-but-unlinked host and a
 linked-but-uncrawled host BOTH stay visible — and the two quantile
 thresholds broadcast back. Deterministic: the score is rounded to
-8dp before thresholding (the DSIR discipline), so the verdicts are
+8dp before thresholding, so the verdicts are
 value-checked end-to-end against a DuckDB twin composed from the
 pagerank and churn mirrors.
 """

@@ -53,7 +53,6 @@ def stream_extract(spark: SparkSession, source_dir: str,
                    source_schema: str,
                    templates: DataFrame, specs: dict[str, str],
                    out_dir: str, checkpoint_dir: str,
-                   watermark: str | None = None,
                    trigger_available_now: bool = True,
                    fallback: str | None = None):
     """Start (and return) a streaming query writing extraction rows to
@@ -68,9 +67,6 @@ def stream_extract(spark: SparkSession, source_dir: str,
     parquet stand-in for Iceberg's transactional append in prod.)"""
     stream = (spark.readStream.schema(source_schema)
               .parquet(source_dir))
-    if watermark:
-        stream = stream.withWatermark("warc_ts", watermark)
-
     writer = (stream.writeStream.foreachBatch(
                   _batch_sink(templates, specs, out_dir, fallback))
               .option("checkpointLocation", checkpoint_dir))
@@ -166,8 +162,7 @@ def stream_host_error_rates(spark: SparkSession, source_dir: str,
                             checkpoint_dir: str,
                             window: str = "1 day",
                             watermark: str = "1 day",
-                            ts_col: str = "ts", ok_col: str = "ok",
-                            host_col: str = "host",
+                            ts_col: str = "ts",
                             trigger_available_now: bool = True):
     """Streaming twin of ``operators/drift.py::host_error_daily`` —
     the live template-rot monitor: per (host, event-time tumbling
@@ -191,23 +186,23 @@ def stream_host_error_rates(spark: SparkSession, source_dir: str,
     hosts × open windows|, never per-row; the parquet append sink is
     the dashboard relation.
 
-    Composition (r06): the source may be the STREAMING-EXTRACT sink
-    itself — when ``host_col``/``ok_col`` are absent from the source
+    The source rows carry ``host``, ``ok`` and the ``ts_col`` event
+    time. Composition (r06): the source may be the STREAMING-EXTRACT
+    sink itself — when ``host``/``ok`` are absent from the source
     schema but extraction's ``url``/``status`` columns are present,
     they are derived here (host from the url, ok from the status
     taxonomy), so extract → monitor → ``drift_points`` chains with no
     intermediate job."""
     stream = (spark.readStream.schema(source_schema)
               .parquet(source_dir))
-    if host_col not in stream.columns and "url" in stream.columns:
-        stream = stream.withColumn(host_col, url_host())
-    if ok_col not in stream.columns and "status" in stream.columns:
-        stream = stream.withColumn(ok_col, status_ok())
+    if "host" not in stream.columns and "url" in stream.columns:
+        stream = stream.withColumn("host", url_host())
+    if "ok" not in stream.columns and "status" in stream.columns:
+        stream = stream.withColumn("ok", status_ok())
     stream = stream.withWatermark(ts_col, watermark)
     agg = (stream
-           .groupBy(F.col(host_col).alias("host"),
-                    F.window(ts_col, window).alias("w"))
-           .agg(F.count("*").alias("n_pages"), n_err(ok_col))
+           .groupBy("host", F.window(ts_col, window).alias("w"))
+           .agg(F.count("*").alias("n_pages"), n_err())
            .select("host", F.col("w.start").alias("win_start"),
                    "n_pages", "n_err",
                    (F.col("n_err") / F.col("n_pages"))
